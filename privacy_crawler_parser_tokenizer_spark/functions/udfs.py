@@ -166,41 +166,10 @@ def make_verify_udf(bc_gt_counts, bc_dictionary):
     return verify_udf
 
 
-PROCESS_PAGE_SCHEMA = StructType(
-    [
-        StructField("contents", StringType()),
-        StructField("hrefs", ArrayType(StringType())),
-        StructField("sim_raw", DoubleType()),
-    ]
-)
-
-
-def make_process_page_udf(bc_gt_counts, bc_dictionary):
-    """Fused frontier data plane: strip + conditional link extraction +
-    conditional verify in ONE Arrow round trip (three separate UDFs
-    triple the JVM<->Python Arrow traffic and batch dispatches for the
-    same rows).  Inputs: html, is_landing, expand_ok (depth budget
-    holds).  Semantics identical to the separate kernels — shared
-    ``core`` functions, same short-circuits as the oracle."""
-
-    @F.pandas_udf(PROCESS_PAGE_SCHEMA)
-    def process_page(
-        html: pd.Series, is_landing: pd.Series, expand_ok: pd.Series
-    ) -> pd.DataFrame:
-        _bump_recursion_limit()
-        return _process_rows(
-            html, is_landing, expand_ok, bc_gt_counts.value, bc_dictionary.value
-        )
-
-    return process_page
-
-
 def _process_rows(html, is_landing, expand_ok, gt, words) -> pd.DataFrame:
-    """The ONE page kernel both process paths share (fused
-    PythonFetcher.fetch_process and the unfused ArrowEvalPython UDF):
-    strip + conditional link extraction + conditional verify.  Fused
-    and unfused crawls must stay row-identical — one loop body, zero
-    drift risk."""
+    """The frontier's page kernel: strip + conditional link extraction
+    + conditional verify, with the same short-circuits as the oracle
+    (shared ``core`` functions)."""
     out_contents, out_hrefs, out_sim = [], [], []
     for h, landing, dok in zip(html, is_landing, expand_ok):
         h = h or ""
@@ -225,23 +194,20 @@ def _process_rows(html, is_landing, expand_ok, gt, words) -> pd.DataFrame:
 
 
 def make_process_batch_fn(bc_gt_counts, bc_dictionary, max_depth: int):
-    """Plain pandas-batch twin of ``make_process_page_udf`` for the
-    fully-fused fetch stage (PythonFetcher.fetch_process): the fetch
-    mapInPandas calls this on the batch it just fetched, so the hottest
-    stage pays ONE JVM<->Python round trip instead of two chained
-    Python runners (mapInPandas + ArrowEvalPython).  Reads is_landing /
-    expand_ok from the batch's ``phase`` / ``depth_count`` columns;
-    kernels and short-circuits identical to the UDF (shared ``core``)."""
+    """Pandas-batch page kernel for the fused fetch stage
+    (PythonFetcher.fetch_process): the fetch mapInPandas calls this on
+    the batch it just fetched, so the hottest stage pays ONE
+    JVM<->Python round trip.  Reads is_landing / expand_ok from the
+    batch's ``phase`` / ``depth_count`` columns."""
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
         _bump_recursion_limit()
         res = _process_rows(
             pdf["html"],
             [p == "landing" for p in pdf["phase"]],
-            # null-safe like the unfused twin's F.col('depth_count') <
-            # max_depth expression (NULL comparison -> false), so the
-            # fused/unfused paths can't fork on a null depth (arrives as
-            # None or NaN depending on the Arrow column's nullability)
+            # null-safe like SQL's depth_count < max_depth (NULL
+            # comparison -> false); a null depth arrives as None or NaN
+            # depending on the Arrow column's nullability
             [bool(pd.notna(d)) and int(d) < max_depth for d in pdf["depth_count"]],
             bc_gt_counts.value,
             bc_dictionary.value,

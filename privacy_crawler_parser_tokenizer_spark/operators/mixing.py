@@ -16,9 +16,11 @@ tokens keep everything (they cost nothing).
 The per-doc hash is an engine-portable 31-bit multiplicative mix
 (Knuth constants) over the non-negative integral doc_id — the same
 arithmetic runs as native int64 expressions in Spark and in the DuckDB
-oracle, with no overflow below doc_id ~ 3.4e9 (a production pipeline
-would use xxhash64 Spark-side; the portable mix exists so the sampled
-SET itself is oracle-checkable).
+oracle.  The id is reduced mod 2^31 before the first multiply, which
+leaves every bucket unchanged (the mix is mod 2^31 anyway) and keeps
+the product below (2^31 - 1) * H1 < 2^63, so no non-negative int64 id
+overflows (a production pipeline would use xxhash64 Spark-side; the
+portable mix exists so the sampled SET itself is oracle-checkable).
 
 100-TB shape: one partial-aggregable groupBy produces the k-row rate
 table, which broadcasts into a map-only filter over the corpus — no
@@ -43,7 +45,7 @@ def doc_hash_ppm(doc_id: Column) -> Column:
     Pure int64 arithmetic (two multiplicative mixing rounds mod 2^31)
     so Spark and ANSI-SQL oracles compute bit-identical buckets.
     """
-    h1 = (doc_id * F.lit(_H1)) % F.lit(_M31)
+    h1 = ((doc_id % F.lit(_M31)) * F.lit(_H1)) % F.lit(_M31)
     h2 = (h1 * F.lit(_H2) + F.lit(_C2)) % F.lit(_M31)
     return (h2 % F.lit(PPM)).cast("long")
 
@@ -51,7 +53,7 @@ def doc_hash_ppm(doc_id: Column) -> Column:
 def doc_hash_ppm_sql(doc_id_expr: str) -> str:
     """The identical mix as an ANSI/DuckDB SQL expression string."""
     return (
-        f"((({doc_id_expr} * {_H1}) % {_M31}) * {_H2} + {_C2})"
+        f"(((({doc_id_expr} % {_M31}) * {_H1}) % {_M31}) * {_H2} + {_C2})"
         f" % {_M31} % {PPM}"
     )
 

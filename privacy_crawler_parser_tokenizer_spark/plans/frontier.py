@@ -18,14 +18,22 @@ crawler, src/crawler.py:143-241) as iterative batch DataFrame rounds:
     per round:
       due -> resolve request url -> robots gate -> priority-queue
       politeness window (row_number over host by (priority, seed_rank)
-      <= budget) -> salted repartition by host-hash -> fetch ->
-      strip/extract (Arrow UDFs) -> candidate admission (Bloom or
-      cuckoo pre-filter + left-anti vs ``seen`` + in-round
-      first-occurrence window over (seed_rank, page_pos)) -> junk filter
-      -> link completion -> in-page + in-list dedupe -> frontier append
-      -> verify (English gate + TF-IDF vs broadcast ground truth) ->
-      content first-writer dedupe -> log/doc/metric/lineage deltas ->
-      state update -> checkpoint + commit marker.
+      <= budget) -> salted repartition by host-hash -> fused
+      fetch + strip/extract + verify (English gate + TF-IDF vs
+      broadcast ground truth) -> candidate admission (Bloom or cuckoo
+      pre-filter + left-anti vs ``seen`` + in-round first occurrence by
+      (seed_rank, page_pos)) -> junk filter -> link completion ->
+      in-page + in-list dedupe -> frontier append -> content
+      first-writer dedupe -> log/doc/metric/lineage deltas -> state
+      update -> checkpoint + commit marker.
+
+One fetch path: every crawl fetches through ``PythonFetcher.fetch_process``
+— ``fetch_fn(url) -> html`` and the page kernel run in ONE mapInPandas
+call per batch, so tests and benchmarks exercise the same dispatch.
+One round cache: the five round-local frames read by several writes
+(requests, processed, cand3, links_delta, visits) are lazily
+``localCheckpoint``-ed, and the round frees their blocks by RDD id
+before it returns.
 
 The reference's racy cross-domain ``Manager()`` dicts
 (src/crawler.py:350-351) become deterministic window functions: every
@@ -75,7 +83,6 @@ from ..functions.udfs import (
     broadcast_dictionary,
     broadcast_ground_truth,
     make_process_batch_fn,
-    make_process_page_udf,
 )
 from ..operators.bloom import ShardedBloom
 from ..sources.warehouse import Warehouse
@@ -137,70 +144,28 @@ _LINEAGE_ARROW = _arrow_of_ddl(_LINEAGE_SCHEMA)
 # ---------------------------------------------------------------------------
 
 
-class FixtureFetcher:
-    """Deterministic synthetic-web fetch: an equi-join against a
-    ``pages(url, html)`` fixture table (SURVEY.md §2.1 HTTP-source row).
-    Missing urls fetch as '' — the reference's request() returns '' on
-    any error (src/utils/utils.py:111-181)."""
-
-    def __init__(self, pages: DataFrame, fetch_partitions: int | None = None,
-                 host_concurrency: int | None = None):
-        self.pages = pages.select(
-            F.col("url").alias("_fetch_url"), F.col("html").alias("_fetch_html")
-        )
-        self.fetch_partitions = fetch_partitions
-        self.host_concurrency = host_concurrency
-
-    def fetch(self, requests: DataFrame, round_id: int) -> DataFrame:
-        salted = _salt_by_host(requests, round_id, self.fetch_partitions,
-                               self.host_concurrency)
-        out = salted.join(
-            self.pages, salted["url"] == self.pages["_fetch_url"], "left"
-        )
-        return out.withColumn(
-            "html", F.coalesce("_fetch_html", F.lit(""))
-        ).drop("_fetch_url", "_fetch_html")
-
-
 class PythonFetcher:
-    """Production-shaped fetch path: ``mapInPandas`` over salted
+    """The crawler's one fetch path: ``mapInPandas`` over salted
     host-partitions, calling ``fetch_fn(url) -> html`` per row inside an
-    Arrow batch (one Python invocation per batch).  With a real HTTP
-    client this is where per-partition connection reuse + the (3,6)s
-    timeouts of the reference live; tests inject a dict-backed fn."""
+    Arrow batch (one Python invocation per batch).  A falsy result
+    fetches as '' — the reference's request() returns '' on any error
+    (src/utils/utils.py:111-181).  With a real HTTP client this is where
+    per-partition connection reuse + the (3,6)s timeouts of the
+    reference live; tests inject a dict-backed fn (``pages.get``)."""
 
-    def __init__(self, fetch_fn, fetch_partitions: int | None = None,
-                 host_concurrency: int | None = None):
+    def __init__(self, fetch_fn, fetch_partitions: int | None = None):
         self.fetch_fn = fetch_fn
         self.fetch_partitions = fetch_partitions
-        self.host_concurrency = host_concurrency
-
-    def fetch(self, requests: DataFrame, round_id: int) -> DataFrame:
-        fn = self.fetch_fn
-        out_schema = T.StructType(
-            requests.schema.fields + [T.StructField("html", T.StringType())]
-        )
-
-        def run(batches):
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["html"] = [
-                    (fn(u) or "") if u is not None else "" for u in pdf["url"]
-                ]
-                yield pdf
-
-        salted = _salt_by_host(requests, round_id, self.fetch_partitions,
-                               self.host_concurrency)
-        return salted.mapInPandas(run, schema=out_schema)
 
     def fetch_process(self, requests: DataFrame, round_id: int,
-                      process_fn) -> DataFrame:
+                      process_fn,
+                      host_concurrency: int | None = None) -> DataFrame:
         """Fully-fused fetch stage: fetch each batch's html AND run the
         strip/extract/verify page kernel on it inside the SAME
-        mapInPandas call — one Python round trip for the hottest stage
-        (the unfused path chains a mapInPandas fetch with a separate
-        ArrowEvalPython runner over the same rows).  ``process_fn`` is
-        functions.udfs.make_process_batch_fn's batch kernel."""
+        mapInPandas call — one Python round trip for the hottest stage.
+        ``process_fn`` is functions.udfs.make_process_batch_fn's batch
+        kernel; ``host_concurrency`` is the crawl's politeness cap
+        (FrontierConfig.host_concurrency, see ``_salt_by_host``)."""
         fn = self.fetch_fn
         out_schema = T.StructType(
             requests.schema.fields
@@ -221,7 +186,7 @@ class PythonFetcher:
                 yield process_fn(pdf)
 
         salted = _salt_by_host(requests, round_id, self.fetch_partitions,
-                               self.host_concurrency)
+                               host_concurrency)
         return salted.mapInPandas(run, schema=out_schema)
 
 
@@ -339,17 +304,10 @@ def fetch_robots_delta(new_hosts: DataFrame, fetch_fn, rnd: int) -> DataFrame:
     return new_hosts.mapInPandas(run, schema=out_schema)
 
 
-def make_bloom_udf(spark: SparkSession, bloom: ShardedBloom):
-    """One-shot broadcast + membership UDF (tests / standalone use).
-    The crawler's round loop uses ``make_bloom_udf_from_bc`` with a
-    managed broadcast handle so each round's re-broadcast destroys the
-    previous round's copy — a crawl of ``max_rounds=10_000`` with a
-    growing filter must not accumulate stale broadcasts on the driver
-    and executors."""
-    return make_bloom_udf_from_bc(spark.sparkContext.broadcast(bloom))
-
-
 def make_bloom_udf_from_bc(bc):
+    """Membership UDF over a managed broadcast handle: each round's
+    re-broadcast destroys the previous round's copy
+    (``FrontierCrawler._broadcast_filter``)."""
     @F.pandas_udf(T.BooleanType())
     def might_contain(href: pd.Series) -> pd.Series:
         return pd.Series(bc.value.might_contain(href.fillna("")))
@@ -382,13 +340,6 @@ def build_filter_distributed(df: DataFrame, col: str, factory):
     return out
 
 
-def build_bloom_distributed(df: DataFrame, col: str,
-                            capacity: int, fpp: float = 0.01) -> ShardedBloom:
-    return build_filter_distributed(
-        df, col, lambda: ShardedBloom(capacity, fpp)
-    )
-
-
 # ---------------------------------------------------------------------------
 # the engine
 # ---------------------------------------------------------------------------
@@ -411,7 +362,6 @@ class FrontierConfig:
     bloom_fpp: float = 0.01
     use_bloom: bool = True
     seen_filter: str = "bloom"      # "bloom" | "cuckoo" (deletable)
-    fetch_partitions: int | None = None
     max_rounds: int = 10_000
     keep_state_snapshots: int = 2   # expire older state snapshots
     compact_every: int = 64         # merge delta snapshots every N rounds
@@ -429,17 +379,6 @@ class FrontierConfig:
     # (the right plan when a production round's 10^7 updates no longer
     # fit a broadcast).
     broadcast_state_updates_max: int = 2_000_000
-    # small rounds are PLANNING-bound (the 7 write jobs each re-analyze
-    # the deep round plan: ~4-7 s/round of driver time), large rounds
-    # are DATA-bound.  At or below this many due domains the round's
-    # cached frames are lazily localCheckpoint-ed — downstream plans
-    # become shallow scans, cutting the write-wave planning ~70%
-    # (2k-domain crawl: 33.3 -> 28.1 s).  Above it they use plain
-    # persist: Spark's compressed columnar cache, which a same-window
-    # A/B measured 2x faster end-to-end at 50k-URL rounds (raw row
-    # storage + GC beats the planning saving once ~KB payloads
-    # dominate).  Crossover measured between those two points.
-    lineage_truncate_max: int = 10_000
 
 
 @dataclass
@@ -454,7 +393,7 @@ class FrontierCrawler:
     warehouse's last committed round (exact resume)."""
 
     def __init__(self, spark: SparkSession, warehouse_dir: str, *,
-                 pages: DataFrame | None = None, fetcher=None,
+                 fetcher: PythonFetcher,
                  seeds: list[str], ground_truth: str = "",
                  dictionary: frozenset = frozenset(),
                  robots: dict[str, str] | None = None,
@@ -471,11 +410,7 @@ class FrontierCrawler:
         # None = FIFO (reference semantics).  Mirror of the oracle's
         # priority_fn — supply both for parity tests.
         self.priority_expr = priority_expr or (lambda url: F.lit(0))
-        self.fetcher = fetcher or FixtureFetcher(pages, self.cfg.fetch_partitions)
-        # propagate the politeness concurrency cap to an injected
-        # fetcher unless the caller already set one explicitly
-        if getattr(self.fetcher, "host_concurrency", None) is None:
-            self.fetcher.host_concurrency = self.cfg.host_concurrency
+        self.fetcher = fetcher
         # robots gate: injected dict (parity mode, reference-compatible)
         # OR live per-host fetch through the HTTP client seam ([NEW]):
         # each round fetches robots.txt for hosts the warehouse `robots`
@@ -495,7 +430,6 @@ class FrontierCrawler:
         )
         bc_gt = broadcast_ground_truth(spark, ground_truth)
         bc_dict = broadcast_dictionary(spark, dictionary)
-        self.process_page_udf = make_process_page_udf(bc_gt, bc_dict)
         self.process_batch_fn = make_process_batch_fn(
             bc_gt, bc_dict, self.cfg.max_depth
         )
@@ -519,32 +453,6 @@ class FrontierCrawler:
         # with step-4/5 plan construction (the round's driver floor)
         self._driver_pool = ThreadPoolExecutor(max_workers=1)
         self._pending_stats = None
-
-    def _pin(self, df: DataFrame) -> DataFrame:
-        """persist + plan-truncate: returns a DataFrame whose logical
-        plan is the ONE-NODE ``InMemoryRelation`` leaf of the cached
-        query, so every downstream op re-analyzes a leaf instead of the
-        round's full lineage.  This is the columnar-cache twin of
-        ``localCheckpoint`` plan truncation without its eager ``toRdd``
-        compile (~0.5 s/frame at the round floor) or its row-object
-        block storage (2x slower than columnar at 50k-URL rounds —
-        BENCH/BASELINE.md e8a82b9 A/B).  Falls back to a plain persist
-        if the private seam is unavailable.  Unpersist through
-        ``_pin_original`` — the wrapped plan no longer matches the
-        cache entry."""
-        df = df.persist()
-        try:
-            cached = df._jdf.queryExecution().withCachedData()
-            if cached.nodeName() != "InMemoryRelation":
-                return df
-            jnew = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                self.spark._jsparkSession, cached
-            )
-            out = type(df)(jnew, self.spark)
-            out._pin_original = df
-            return out
-        except Exception:
-            return df
 
     def _broadcast_filter(self):
         """Broadcast the current filter, destroying the previous round's
@@ -571,8 +479,8 @@ class FrontierCrawler:
     # -- state io ---------------------------------------------------------
     def _stored_rdd_ids(self) -> set[int]:
         """Ids of RDDs currently holding cached blocks (storage-level
-        view; includes localCheckpoint storage that DataFrame.unpersist
-        cannot reach)."""
+        view; localCheckpoint storage, which DataFrame.unpersist cannot
+        reach)."""
         return {
             info.id()
             for info in self.spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -705,13 +613,12 @@ class FrontierCrawler:
         )
         if n_active == 0:
             return False
-        # adaptive caching for the round-local frames (see
-        # FrontierConfig.lineage_truncate_max): n_active bounds this
-        # round's granted requests, known before any frame is built
-        truncate = n_active <= cfg.lineage_truncate_max
-
-        def _stash(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False) if truncate else self._pin(df)
+        # The round-local frames below (requests, processed, cand3,
+        # links_delta, visits) are each read by several writes, so each
+        # is lazily localCheckpoint-ed: computed once on first use, and
+        # every downstream plan re-analyzes a shallow RDD scan instead
+        # of the round's full lineage.  The blocks are freed by id at
+        # the end of the round.
 
         # 1. resolve each due domain's single request url ------------------
         link_at = links.select(
@@ -735,7 +642,7 @@ class FrontierCrawler:
                 "robots_ok", self.robots_udf(F.col("url"))
             )
         # granted AND blocked branches + state update read this
-        requests = self._pin(requests)
+        requests = requests.localCheckpoint(eager=False)
 
         # 2. politeness window over robots-allowed requests, granted by
         #    (priority, seed_rank) per host — the partitioned priority
@@ -755,33 +662,17 @@ class FrontierCrawler:
             granted = eligible
         blocked = requests.filter(~F.col("robots_ok"))
 
-        # 3. fetch + fused strip/extract/verify.  Python-based fetchers
-        # run fetch AND the page kernel in ONE mapInPandas round trip
-        # (fetch_process); join-based fetchers (FixtureFetcher) chain
-        # the fused process UDF after the fetch join — still a single
-        # Arrow dispatch for the kernel.
+        # 3. fetch + fused strip/extract/verify: fetch AND the page
+        # kernel run in ONE mapInPandas round trip (fetch_process)
         is_landing = F.col("phase") == "landing"
         depth_ok = F.col("depth_count") < cfg.max_depth
-        if hasattr(self.fetcher, "fetch_process"):
-            staged = self.fetcher.fetch_process(
-                granted, rnd, self.process_batch_fn
-            )
-        else:
-            fetched = self.fetcher.fetch(granted, rnd)
-            staged = (
-                fetched.withColumn(
-                    "_pp",
-                    self.process_page_udf(F.col("html"), is_landing, depth_ok),
-                )
-                .withColumn("contents", F.col("_pp.contents"))
-                .withColumn("hrefs", F.col("_pp.hrefs"))
-                .withColumn("sim_raw", F.col("_pp.sim_raw"))
-                .drop("_pp")
-            )
-        processed = _stash(staged.withColumn(
+        staged = self.fetcher.fetch_process(
+            granted, rnd, self.process_batch_fn, cfg.host_concurrency
+        )
+        processed = staged.withColumn(
             "expanding",
             (F.col("contents") != "") & (is_landing | depth_ok),
-        ))
+        ).localCheckpoint(eager=False)
         # materialize (fetch/UDF run exactly once) + round stats + the
         # per-partition fetch lineage in ONE job — submitted on a
         # background thread so the JVM executes the fetch while the
@@ -866,7 +757,7 @@ class FrontierCrawler:
         )
         if self.plan_probe is not None:
             self.plan_probe("cand3", _admission)
-        cand3 = _stash(_admission)
+        cand3 = _admission.localCheckpoint(eager=False)
 
         admitted = cand3.filter(~F.col("hist_seen")).select(
             F.col("_w.seed_rank").alias("seed_rank"),
@@ -899,9 +790,9 @@ class FrontierCrawler:
             .withColumn("pos", (F.col("_base") + F.row_number().over(w_append) - 1).cast("int"))
             .select("seed_rank", "pos", F.col("completed").alias("url"))
         )
-        links_delta = self._pin(links_delta)
         if self.plan_probe is not None:
             self.plan_probe("links_delta", links_delta)
+        links_delta = links_delta.localCheckpoint(eager=False)
 
         # 5. append-only deltas: links + seen probe counts.  Rounds with
         # no candidates (politeness-deferred tails) skip these writes and
@@ -995,7 +886,7 @@ class FrontierCrawler:
         )
         if self.plan_probe is not None:
             self.plan_probe("visits", visits)
-        visits = _stash(visits)
+        visits = visits.localCheckpoint(eager=False)
 
         policy_delta = visits.filter(
             F.col("text_hash").isNotNull()
@@ -1219,18 +1110,12 @@ class FrontierCrawler:
         if cfg.compact_every and (rnd + 1) % cfg.compact_every == 0:
             for t in self._delta_tables:  # bounded multi-path read fan-in
                 wh.compact(spark, t, rnd)
-        for _f in (processed, cand3, links_delta, visits, requests):
-            # _pin-wrapped frames unpersist through the original — the
-            # truncated plan no longer matches the cache entry
-            getattr(_f, "_pin_original", _f).unpersist()
-        if truncate:
-            # DataFrame.unpersist() cannot reach localCheckpoint block
-            # storage: free this round's remaining blocks by id (all
-            # round-local by construction — the crawler holds no
-            # cross-round cached frames)
-            _scala_sc = spark.sparkContext._jsc.sc()
-            for _rid in self._stored_rdd_ids() - _rdds_before:
-                _scala_sc.unpersistRDD(_rid, False)
+        # DataFrame.unpersist() cannot reach localCheckpoint block
+        # storage: free this round's blocks by id (all round-local by
+        # construction — the crawler holds no cross-round cached frames)
+        _scala_sc = spark.sparkContext._jsc.sc()
+        for _rid in self._stored_rdd_ids() - _rdds_before:
+            _scala_sc.unpersistRDD(_rid, False)
         _t_end = _time.monotonic()
         self.round_seconds.append(_t_end - _t0)
         self.round_trace.append({

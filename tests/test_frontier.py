@@ -8,7 +8,6 @@ import pytest
 
 from privacy_crawler_parser_tokenizer_spark.core import CrawlOracle
 from privacy_crawler_parser_tokenizer_spark.plans.frontier import (
-    FixtureFetcher,
     FrontierConfig,
     FrontierCrawler,
     PythonFetcher,
@@ -38,14 +37,10 @@ def run_frontier(spark, tmpdir, pages, seeds, *, fetcher=None, **kw):
         bloom_capacity=1 << 12,
         **kw.pop("config_kw", {}),
     )
-    pages_df = spark.createDataFrame(
-        list(pages.items()) or [("", "")], "url string, html string"
-    )
     fc = FrontierCrawler(
         spark,
         str(tmpdir),
-        pages=pages_df if fetcher is None else None,
-        fetcher=fetcher,
+        fetcher=fetcher or PythonFetcher(pages.get),
         seeds=seeds,
         ground_truth=GT,
         dictionary=DICT,
@@ -172,12 +167,19 @@ def test_frontier_no_bloom_same_result(spark, tmp_path):
 
 
 def test_frontier_python_fetcher(spark, tmp_path):
-    """mapInPandas fetch path (production shape) == fixture join path."""
+    """The salt inputs of the fetch exchange change only how a wave is
+    spread, never what it fetches: an explicit partition count, alone
+    and with the budget-less politeness cap host_concurrency=2, stays
+    oracle-exact."""
     pages, seeds, _ = gen_web(n_domains=5, seed=3)
     res = run_oracle(pages, seeds)
-    fetcher = PythonFetcher(pages.get, fetch_partitions=3)
-    fc = run_frontier(spark, tmp_path / "wh", pages, seeds, fetcher=fetcher)
-    assert_matches_oracle(fc, res)
+    for host_concurrency in (None, 2):
+        fc = run_frontier(
+            spark, tmp_path / f"wh{host_concurrency}", pages, seeds,
+            fetcher=PythonFetcher(pages.get, fetch_partitions=3),
+            config_kw={"host_concurrency": host_concurrency},
+        )
+        assert_matches_oracle(fc, res)
 
 
 def test_frontier_resume_is_exact(spark, tmp_path):
@@ -187,11 +189,10 @@ def test_frontier_resume_is_exact(spark, tmp_path):
     res = run_oracle(pages, seeds, robots=robots, host_budget=2)
 
     wh = tmp_path / "wh"
-    pages_df = spark.createDataFrame(list(pages.items()), "url string, html string")
 
     def crawler(max_rounds):
         return FrontierCrawler(
-            spark, str(wh), pages=pages_df, seeds=seeds,
+            spark, str(wh), fetcher=PythonFetcher(pages.get), seeds=seeds,
             ground_truth=GT, dictionary=DICT, robots=robots,
             config=FrontierConfig(threshold=0.3, host_budget=2,
                                   bloom_capacity=1 << 12, max_rounds=max_rounds),
@@ -241,9 +242,8 @@ def test_frontier_priority_queue(spark, tmp_path):
         host_budget=1, priority_fn=prio,
     ).run()
 
-    pages_df = spark.createDataFrame(list(pages.items()), "url string, html string")
     fc = FrontierCrawler(
-        spark, str(tmp_path / "wh"), pages=pages_df, seeds=seeds,
+        spark, str(tmp_path / "wh"), fetcher=PythonFetcher(pages.get), seeds=seeds,
         ground_truth=GT, dictionary=DICT,
         config=FrontierConfig(threshold=0.3, host_budget=1, bloom_capacity=1 << 12),
         priority_expr=lambda url: F.when(url.contains("vip"), 0).otherwise(1),
@@ -379,7 +379,7 @@ def test_frontier_kitchen_sink(spark, tmp_path):
 
     fc = FrontierCrawler(
         spark, str(tmp_path / "wh"),
-        pages=spark.createDataFrame(list(pages.items()), "url string, html string"),
+        fetcher=PythonFetcher(pages.get),
         seeds=seeds, ground_truth=GT, dictionary=DICT, robots=robots,
         config=FrontierConfig(threshold=0.3, host_budget=2, max_depth=3,
                               bloom_capacity=1 << 12, seen_filter="cuckoo",
@@ -446,10 +446,11 @@ def test_expire_seen_recrawl_path(spark, tmp_path):
 
 
 def test_frontier_round_storage_hygiene(spark, tmp_path):
-    """localCheckpoint block storage must be freed explicitly every
-    round (DataFrame.unpersist cannot reach it): after a crawl, no new
-    cached RDD blocks remain.  Over 10^4 production rounds a leak here
-    is an executor-storage fill."""
+    """Every round lazily localCheckpoints its five round-local frames,
+    and DataFrame.unpersist cannot reach that block storage: the
+    per-round sweep by RDD id is the only cleanup, so after a crawl no
+    new cached RDD blocks may remain.  Over 10^4 production rounds a
+    leak here is an executor-storage fill."""
     def stored():
         return {
             i.id()

@@ -1,7 +1,8 @@
 """Integration tests for the real HTTP fetch client (reference
 request() semantics, src/utils/utils.py:111-181) against a local
 http.server fixture — headers, timeouts, error->'' contract, redirect
-following, gzip decoding, and Spark-side parity with FixtureFetcher."""
+following, gzip decoding, and crawl-level parity with a dict-backed
+PythonFetcher over the same pages."""
 
 import gzip
 import threading
@@ -140,32 +141,69 @@ def test_keepalive_connection_reuse(server):
     c.close()
 
 
-def test_spark_fetch_parity_with_fixture(spark, server):
-    """HttpFetcher over a live local server == FixtureFetcher over the
-    same pages table, row for row (the PythonFetcher seam's contract)."""
-    from pyspark.sql import functions as F
-
+def test_spark_fetch_parity_with_fixture(spark, tmp_path, server, monkeypatch):
+    """Crawling the live server through make_http_fetcher == crawling a
+    dict-backed PythonFetcher over the same pages: same crawl log, seen
+    set and documents (utf-8 and gzip bodies included), and a refused
+    URL fetches as '' on both sides."""
     from privacy_crawler_parser_tokenizer_spark.plans.frontier import (
-        FixtureFetcher,
+        FrontierConfig,
+        FrontierCrawler,
         PythonFetcher,
     )
-    from privacy_crawler_parser_tokenizer_spark.sources.httpfetch import http_get
-
-    urls = [f"{server}{p}" for p in ("/p1.html", "/p2.html", "/gz.html")]
-    urls.append(f"{server.rsplit(':', 1)[0]}:1/refused")  # dead URL -> ''
-    requests_df = spark.createDataFrame([(u,) for u in urls], "url string")
-
-    live = PythonFetcher(http_get, fetch_partitions=2).fetch(requests_df, 0)
-    fixture_pages = spark.createDataFrame(
-        [(f"{server}{p}", html) for p, html in PAGES.items()],
-        "url string, html string",
+    from privacy_crawler_parser_tokenizer_spark.sources.httpfetch import (
+        make_http_fetcher,
     )
-    fix = FixtureFetcher(fixture_pages, fetch_partitions=2).fetch(requests_df, 0)
 
-    live_rows = {r.url: r.html for r in live.select("url", "html").collect()}
-    fix_rows = {r.url: r.html for r in fix.select("url", "html").collect()}
-    assert live_rows == fix_rows
-    assert live_rows[urls[-1]] == ""
+    # crawl hub linking every page kind plus a refused host; absolute
+    # hrefs, since the crawler joins relative ones onto the page url
+    refused = f"{server.rsplit(':', 1)[0]}:1/refused"
+    hub = "".join(
+        f'<a href="{u}">privacy {i}</a> '
+        for i, u in enumerate(
+            [f"{server}/p1.html", f"{server}/p2.html", f"{server}/gz.html",
+             refused]
+        )
+    )
+    monkeypatch.setitem(PAGES, "/hub.html", f"<html><body>{hub}</body></html>")
+    pages = {f"{server}{p}": html for p, html in PAGES.items()}
+
+    def crawl(name, fetcher):
+        fc = FrontierCrawler(
+            spark, str(tmp_path / name), fetcher=fetcher,
+            seeds=[f"{server}/hub.html"],
+            ground_truth="privacy policy one",
+            dictionary=frozenset("privacy policy one data the a is of".split()),
+            robots={},
+            config=FrontierConfig(threshold=0.0, max_depth=2,
+                                  bloom_capacity=1 << 12),
+        )
+        fc.run()
+        log = [
+            (r.seed_rank, r.url, r.discovery_rank, r.round, r.fetched,
+             r.valid, r.duplicate, r.doc_id, r.sim)
+            for r in fc.crawl_log().collect()
+        ]
+        seen = {r.href: r.revisits for r in fc.seen().collect()}
+        docs = sorted(
+            (r.doc_id, r.url, r.html, r.text) for r in fc.documents().collect()
+        )
+        return log, seen, docs
+
+    live = crawl("wh-live", make_http_fetcher(fetch_partitions=2))
+    fix = crawl("wh-dict", PythonFetcher(pages.get, fetch_partitions=2))
+    assert live == fix
+    log, _, docs = live
+    fetched = {r[1]: r[4] for r in log}
+    assert fetched == {
+        f"{server}/p1.html": True,
+        f"{server}/p2.html": True,
+        f"{server}/gz.html": True,
+        refused: False,  # refused -> '' -> not fetched
+    }
+    assert {d[1]: d[2] for d in docs} == {
+        f"{server}{p}": PAGES[p] for p in ("/p1.html", "/p2.html", "/gz.html")
+    }
 
 
 def test_frontier_crawl_over_live_http(spark, tmp_path, server):

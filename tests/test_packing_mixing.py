@@ -262,14 +262,15 @@ def test_mix_oracle_matches_reference_on_edges(spark, mix_corpus):
 
 def test_hash_ppm_engine_parity(spark):
     """Spark column mix == DuckDB SQL mix == Python reference on ids
-    spanning the non-negative range up to the documented 3.4e9 bound."""
+    spanning the non-negative int64 range (2^34 and 2^40 overflowed the
+    unreduced ``doc_id * H1`` under ANSI arithmetic)."""
     from pyspark.sql import functions as F
 
     from privacy_crawler_parser_tokenizer_spark.operators.mixing import (
         doc_hash_ppm_sql,
     )
 
-    ids = [0, 1, 2, 999, 12345, 10**6, 2**31 - 1, 3_400_000_000]
+    ids = [0, 1, 2, 999, 12345, 10**6, 2**31 - 1, 3_400_000_000, 2**34, 2**40]
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     spark_h = {
         r.doc_id: r.h

@@ -139,11 +139,10 @@ def test_fetch_stage_salts_by_host_hash(spark):
     re-hashes P small ints into P buckets — balls-in-bins clumps) and
     the url column present in the key (host-only keys put a hot host
     in one partition: measured straggler ratio 6.1-6.3 vs 1.05)."""
-    from privacy_crawler_parser_tokenizer_spark.plans.frontier import FixtureFetcher
+    from privacy_crawler_parser_tokenizer_spark.plans.frontier import _salt_by_host
 
-    pages = spark.createDataFrame([("http://a.com", "<p>x</p>")], "url string, html string")
     reqs = spark.createDataFrame([("http://a.com",)], "url string")
-    plan = formatted_plan(FixtureFetcher(pages, fetch_partitions=4).fetch(reqs, 7))
+    plan = formatted_plan(_salt_by_host(reqs, 7, 4))
     spec = [ln for ln in plan.splitlines() if "hashpartitioning(hash(" in ln]
     assert spec, plan
     assert "pmod" not in spec[0], spec[0]
@@ -230,6 +229,7 @@ def test_frontier_links_chain_plan_shape(spark, tmp_path):
     from privacy_crawler_parser_tokenizer_spark.plans.frontier import (
         FrontierConfig,
         FrontierCrawler,
+        PythonFetcher,
     )
     from privacy_crawler_parser_tokenizer_spark.plans.introspect import n_windows
     from privacy_crawler_parser_tokenizer_spark.sources.synth import (
@@ -238,14 +238,11 @@ def test_frontier_links_chain_plan_shape(spark, tmp_path):
     )
 
     landing = '<a href="/privacy">privacy</a><p>welcome</p>'
-    pages_df = spark.createDataFrame(
-        [("http://a.com", landing), ("http://a.com/privacy", "<p>policy</p>")],
-        "url string, html string",
-    )
+    pages = {"http://a.com": landing, "http://a.com/privacy": "<p>policy</p>"}
     fc = FrontierCrawler(
         spark,
         str(tmp_path / "wh"),
-        pages=pages_df,
+        fetcher=PythonFetcher(pages.get),
         seeds=["a.com"],
         ground_truth=make_ground_truth(),
         dictionary=make_dictionary(),

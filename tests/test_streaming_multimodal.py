@@ -142,6 +142,7 @@ def test_crawl_log_streaming_monitor(spark, tmp_path):
     from privacy_crawler_parser_tokenizer_spark.plans.frontier import (
         FrontierConfig,
         FrontierCrawler,
+        PythonFetcher,
     )
     from privacy_crawler_parser_tokenizer_spark.sources.synth import (
         gen_web,
@@ -152,7 +153,7 @@ def test_crawl_log_streaming_monitor(spark, tmp_path):
     pages, seeds, robots = gen_web(n_domains=5, seed=3)
     fc = FrontierCrawler(
         spark, str(tmp_path / "wh"),
-        pages=spark.createDataFrame(list(pages.items()), "url string, html string"),
+        fetcher=PythonFetcher(pages.get),
         seeds=seeds, ground_truth=make_ground_truth(),
         dictionary=make_dictionary(), robots=robots,
         config=FrontierConfig(threshold=0.3, bloom_capacity=1 << 12),
