@@ -24,6 +24,7 @@ from .spans import (
     extract_spans,
     remove_bad_tags,
     render_spans_html,
+    span_context,
     strip_text,
     tag_indices,
 )
@@ -33,7 +34,7 @@ from .urls import canonicalize_url, clean_link, complete_link, ensure_scheme, ho
 __all__ = [
     "CrawlOracle", "OracleResult", "Span",
     "parse_html", "extract_spans", "strip_text", "remove_bad_tags",
-    "compare_parsed_text", "render_spans_html", "tag_indices",
+    "compare_parsed_text", "render_spans_html", "tag_indices", "span_context",
     "sent_tokenize", "apply_sentence_rules", "is_short", "is_header_fragment",
     "DEFAULT_RULES", "RULE_NAMES", "META_LIST_PREFIX",
     "is_english", "get_english_count", "remove_nonletters", "load_dictionary_text",

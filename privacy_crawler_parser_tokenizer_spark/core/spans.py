@@ -180,6 +180,23 @@ def tag_indices(spans: list[Span]) -> list[int]:
     return out
 
 
+def span_context(spans: list[Span]) -> list[tuple[int, str, str, str]]:
+    """Per-span ``(tag_index, tag, prec_by, proc_by)``, O(n) per document.
+
+    tag label = kind || tag_index (reference 'p3' style,
+    src/parser-tokenizer.py:87,225).  prec_by keeps the reference's
+    Python ``-1`` wraparound: the first span's predecessor is the LAST
+    span (:87,211-213); proc_by is 'None' past the end (IndexError
+    branch)."""
+    idx = tag_indices(spans)
+    tags = [f"{s.kind}{i}" for s, i in zip(spans, idx)]
+    n = len(tags)
+    return [
+        (idx[k], tags[k], tags[k - 1], tags[k + 1] if k + 1 < n else "None")
+        for k in range(n)
+    ]
+
+
 def compare_parsed_text(spans: list[Span], auto_stripped_text: str) -> list[str]:
     """Parse self-check: remove each span line (first occurrence, span
     order) from the independently stripped text, sentence-tokenize the

@@ -164,48 +164,6 @@ def canonicalize_url_col(url: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# span-array context (shared by batch pipeline and streaming)
-# ---------------------------------------------------------------------------
-
-# Per-kind tag_index and prec_by/proc_by computed INSIDE each document's
-# span array with higher-order functions: zero shuffles (a window
-# formulation costs 2-3 doc_id exchanges — the dominant parse-stage cost
-# at 100 TB) and streaming-safe.  Quirks preserved: tag label is
-# kind||tag_index, the first span's predecessor wraps to the LAST span
-# (Python -1, reference src/parser-tokenizer.py:87,211-213), proc_by is
-# 'None' past the end.
-_SPANS_TAGGED = """
-    transform({spans}, (s, i) -> named_struct(
-      'kind', s.kind, 'text', s.text, 'media_ref', s.media_ref,
-      'offset', s.offset,
-      'tag_index', size(filter(slice({spans}, 1, i + 1),
-                               p -> p.kind = s.kind)) - 1,
-      'tag', concat(s.kind, cast(
-         size(filter(slice({spans}, 1, i + 1), p -> p.kind = s.kind)) - 1
-         AS string))))
-"""
-
-_SPANS_CTX = """
-    transform(_tagged, (s, i) -> named_struct(
-      'kind', s.kind, 'text', s.text, 'media_ref', s.media_ref,
-      'offset', s.offset, 'tag_index', s.tag_index, 'tag', s.tag,
-      'prec_by', CASE WHEN i = 0 THEN element_at(_tagged, -1).tag
-                      ELSE _tagged[i - 1].tag END,
-      'proc_by', CASE WHEN i = size(_tagged) - 1 THEN 'None'
-                      ELSE _tagged[i + 1].tag END))
-"""
-
-
-def spans_tagged_col(spans_col_name: str = "spans") -> Column:
-    return F.expr(_SPANS_TAGGED.format(spans=spans_col_name))
-
-
-def spans_context_col() -> Column:
-    """Apply to a ``_tagged`` column produced by :func:`spans_tagged_col`."""
-    return F.expr(_SPANS_CTX)
-
-
-# ---------------------------------------------------------------------------
 # text analytics (training-data pipeline operators, native)
 # ---------------------------------------------------------------------------
 

@@ -30,12 +30,13 @@ from pyspark.sql.types import (
 )
 
 from ..core.english import is_english
-from ..core.links import extract_candidate_hrefs, strip_and_candidate_hrefs
+from ..core.links import strip_and_candidate_hrefs
 from ..core.sentencize import sent_tokenize
 from ..core.spans import (
     compare_parsed_text,
     extract_doc,
     extract_spans,
+    span_context,
     strip_text,
 )
 from ..core.tfidf import tfidf_cosine_counts, tokenize_counts
@@ -54,9 +55,20 @@ SPAN_STRUCT = StructType(
 )
 SPAN_SCHEMA = ArrayType(SPAN_STRUCT)
 
+# a span plus its in-document context (core.spans.span_context)
+SPAN_CTX_STRUCT = StructType(
+    SPAN_STRUCT.fields
+    + [
+        StructField("tag_index", IntegerType()),
+        StructField("tag", StringType()),
+        StructField("prec_by", StringType()),
+        StructField("proc_by", StringType()),
+    ]
+)
+
 EXTRACT_SCHEMA = StructType(
     [
-        StructField("spans", SPAN_SCHEMA),
+        StructField("spans", ArrayType(SPAN_CTX_STRUCT)),
         StructField("stripped_text", StringType()),
         StructField("residual_count", IntegerType()),
     ]
@@ -83,9 +95,10 @@ def extract_spans_udf(html: pd.Series) -> pd.Series:
 
 @F.pandas_udf(EXTRACT_SCHEMA)
 def extract_doc_udf(html: pd.Series, auto_text: pd.Series) -> pd.DataFrame:
-    """Full per-doc extraction: spans + stripped text + parse-self-check
-    residual count (reference: src/parser-tokenizer.py:170-188,304-317).
-    ``auto_text`` may be null -> derived via strip_text."""
+    """Full per-doc extraction: spans with their tag/neighbor context +
+    stripped text + parse-self-check residual count (reference:
+    src/parser-tokenizer.py:170-188,210-217,304-317).  ``auto_text`` may
+    be null -> derived via strip_text."""
     _bump_recursion_limit()
     spans_out, text_out, residual_out = [], [], []
     for h, t in zip(html, auto_text):
@@ -96,7 +109,9 @@ def extract_doc_udf(html: pd.Series, auto_text: pd.Series) -> pd.DataFrame:
         else:
             spans, stripped = extract_doc(h)  # single parse
         residual = len(compare_parsed_text(spans, stripped)) if stripped else 0
-        spans_out.append([s.as_tuple() for s in spans])
+        spans_out.append(
+            [s.as_tuple() + c for s, c in zip(spans, span_context(spans))]
+        )
         text_out.append(stripped)
         residual_out.append(residual)
     return pd.DataFrame(
@@ -120,16 +135,12 @@ def sentences_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: sent_tokenize(t) if t else [])
 
 
-# -- family 2: link extraction ---------------------------------------------
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def extract_hrefs_udf(html: pd.Series) -> pd.Series:
-    """Raw candidate hrefs in document order
-    (reference: src/crawler.py:90-138 minus seen/junk/completion,
-    which are relational steps in the frontier plan)."""
-    _bump_recursion_limit()
-    return html.map(lambda h: extract_candidate_hrefs(h) if h else [])
+# Declared nondeterministic only to pin ONE call per row: for a
+# deterministic UDF, Catalyst pushes the filter it infers from a later
+# explode (size(result) > 0), and the parse gate, through the projection,
+# inlining the UDF into the filter and running it twice per row.
+extract_doc_udf = extract_doc_udf.asNondeterministic()
+sentences_udf = sentences_udf.asNondeterministic()
 
 
 # -- family 5: verification (factories over broadcasts) -------------------
@@ -164,6 +175,9 @@ def make_verify_udf(bc_gt_counts, bc_dictionary):
         return text.map(_one)
 
     return verify_udf
+
+
+# -- family 2: link extraction, fused with strip + verify in the fetch stage
 
 
 def _process_rows(html, is_landing, expand_ok, gt, words) -> pd.DataFrame:

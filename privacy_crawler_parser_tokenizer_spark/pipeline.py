@@ -1,41 +1,44 @@
-"""Parse/tokenize batch pipeline (SURVEY.md §2.3, §3.2 rebuild).
+"""Parse/tokenize pipeline (SURVEY.md §2.3, §3.2 rebuild), shared by
+batch and streaming.
 
 One linear DataFrame dataflow replacing the reference's per-file
 process-pool (src/parser-tokenizer.py:339-397):
 
     documents(doc_id, html[, auto_text])
-      -> extract_doc UDF (spans + stripped text + parse self-check)
-      -> posexplode(spans)                      [spans table]
-      -> window (tag_index, lag/lead neighbor context)
-      -> filter kind in (p,h) -> sentence UDF -> posexplode
+      -> extract_doc UDF (spans with tag/prec_by/proc_by context
+         + stripped text + parse self-check)
+      -> explode(spans), parse_ok per span row  [spans table]
+      -> filter parse_ok & kind in (p,h) -> sentence UDF -> posexplode
       -> native rule expressions                [sentences table]
       -> explode(rule_hits) -> groupBy          [rule_counts tables]
 
 Scale notes: the only Python is the two Arrow-batched UDFs (HTML parse,
-sentence split); every window partitions by doc_id (narrow, no skew —
-one doc is one partition key), and the aggregations are partial-agg
-hash groupBys.  The parse-success gate (residual > 5 -> drop,
-reference :306) is a plain filter pushed below the sentence stage.
+sentence split).  Span context comes from the same ``core.spans``
+kernel the oracle uses, computed once per document inside the
+extraction UDF (O(n) per document), so the sentence table is map-only:
+no window, no join, one scan of the documents.  The parse-success gate
+(residual > 5 -> drop, reference :306) is a column filter on the span
+rows; the aggregations are partial-agg hash groupBys.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.text import (
-    rule_hits_col,
-    spans_context_col,
-    spans_tagged_col,
-    word_count_col,
-)
-from .functions.udfs import extract_doc_udf, sentences_udf
+from .functions.text import rule_hits_col, word_count_col
+from .functions.udfs import SPAN_CTX_STRUCT, extract_doc_udf, sentences_udf
 
 RESIDUAL_TOLERANCE = 5  # reference: src/parser-tokenizer.py:306
 
 # fixed histogram bin edges (reference: src/statistics/sentences.py:207,215)
 RULE_HIST_BINS = [0, 10, 20, 30, 40, 50, 60, 70, 80, 90, 100,
                   120, 140, 160, 180, 200, 250, 300, 350, 400]
+
+# extract_documents columns that stay above the span explode
+_EXTRACTION_ONLY = ("html", "auto_text", "spans", "stripped_text", "residual_count")
+# spans_table columns that are not document pass-throughs
+_SPAN_ROW = ("doc_id", "parse_ok", *SPAN_CTX_STRUCT.fieldNames())
 
 
 def extract_documents(docs: DataFrame, auto_text: bool = True) -> DataFrame:
@@ -58,95 +61,28 @@ def extract_documents(docs: DataFrame, auto_text: bool = True) -> DataFrame:
     )
 
 
-def spans_table(extracted: DataFrame,
-                huge_span_threshold: int | None = None) -> DataFrame:
-    """Explode spans with per-kind tag_index + neighbor context.
-
-    tag label = kind || tag_index (reference 'p3' style,
-    parser-tokenizer.py:87,225).  prec_by replicates the Python ``-1``
-    wraparound (first span's predecessor is the LAST span, :87,211-213);
-    proc_by is 'None' past the end (IndexError branch).
-
-    Context is computed array-locally (functions.text.spans_tagged_col)
-    BEFORE the explode — zero shuffles, vs 2-3 doc_id exchanges for the
-    equivalent lag/lead window formulation.  The array-local tag_index
-    is O(n^2) per document (size(filter(slice))) — harmless at real
-    page sizes, pathological for a document with 10^5+ spans — so docs
-    above ``huge_span_threshold`` spans route to the O(n log n)
-    windowed twin and the two results union.  The guard is OPT-IN
-    (``huge_span_threshold=None`` default): the union branch puts the
-    window exchanges into every plan, and the zero-shuffle plan is the
-    regression-tested common path."""
-    base = extracted
-    if huge_span_threshold is not None:
-        base = extracted.filter(F.size("spans") <= F.lit(huge_span_threshold))
-    small = (
-        base
-        .withColumn("_tagged", spans_tagged_col("spans"))
-        .withColumn("_ctx", spans_context_col())
-        .select("doc_id", F.explode("_ctx").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.col("s.offset").alias("offset"),
-            F.col("s.tag_index").alias("tag_index"),
-            F.col("s.tag").alias("tag"),
-            F.col("s.prec_by").alias("prec_by"),
-            F.col("s.proc_by").alias("proc_by"),
-        )
-    )
-    if huge_span_threshold is None:
-        return small
-    huge = spans_table_windowed(
-        extracted.filter(F.size("spans") > F.lit(huge_span_threshold))
-    ).select(*small.columns)
-    return small.unionByName(huge)
+def spans_table(extracted: DataFrame) -> DataFrame:
+    """Explode spans: one row per span with its kernel-computed tag and
+    neighbor context (core.spans.span_context, emitted by the
+    extraction UDF), the document's ``parse_ok``, and every other
+    document column (e.g. a stream's ``ts``).  The wide per-document
+    columns (html, auto_text, stripped_text) are not carried through
+    the explode."""
+    keep = [c for c in extracted.columns if c not in _EXTRACTION_ONLY]
+    return extracted.select(*keep, F.explode("spans").alias("s")).select(*keep, "s.*")
 
 
-def spans_table_windowed(extracted: DataFrame) -> DataFrame:
-    """lag/lead window formulation of spans_table — SURVEY.md §2.3's
-    direct mapping of the reference's prec_by/proc_by.  Semantically
-    identical (asserted in tests); kept for the operator-inventory row
-    and as the shape to use when spans arrive pre-exploded."""
-    w_doc = Window.partitionBy("doc_id").orderBy("offset")
-    w_kind = Window.partitionBy("doc_id", "kind").orderBy("offset")
-    w_full = Window.partitionBy("doc_id").orderBy("offset").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    df = (
-        extracted.select("doc_id", F.explode("spans").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.col("s.offset").alias("offset"),
-        )
-        .withColumn("tag_index", F.row_number().over(w_kind) - 1)
-        .withColumn("tag", F.concat("kind", F.col("tag_index").cast("string")))
-    )
-    return (
-        df.withColumn(
-            "prec_by", F.coalesce(F.lag("tag").over(w_doc), F.last("tag").over(w_full))
-        )
-        .withColumn("proc_by", F.coalesce(F.lead("tag").over(w_doc), F.lit("None")))
-    )
-
-
-def sentences_table(spans: DataFrame, parse_ok_docs: DataFrame | None = None) -> DataFrame:
-    """p/h spans -> sentence rows (FIXTURES.md §7 schema).
-
-    ``parse_ok_docs``: optional (doc_id) frame of docs passing the
-    parse-success gate; when given, failed docs are excluded from
-    tokenization (reference: parser-tokenizer.py:304-317)."""
-    df = spans.filter(F.col("kind").isin("p", "h"))
-    if parse_ok_docs is not None:
-        df = df.join(parse_ok_docs.select("doc_id"), "doc_id", "left_semi")
+def sentences_table(spans: DataFrame) -> DataFrame:
+    """p/h spans of parse_ok documents -> sentence rows (FIXTURES.md §7
+    schema); failed docs are excluded from tokenization (reference:
+    parser-tokenizer.py:304-317).  Extra document columns pass through
+    after doc_id."""
+    extra = [c for c in spans.columns if c not in _SPAN_ROW]
+    df = spans.filter(F.col("parse_ok") & F.col("kind").isin("p", "h"))
     df = df.withColumn("sents", sentences_udf(F.col("text")))
     df = df.select(
         "doc_id",
+        *extra,
         F.col("offset").alias("seq_index"),
         "tag",
         "prec_by",
@@ -155,6 +91,7 @@ def sentences_table(spans: DataFrame, parse_ok_docs: DataFrame | None = None) ->
     )
     return df.select(
         "doc_id",
+        *extra,
         "seq_index",
         "tag",
         "prec_by",
@@ -222,8 +159,7 @@ def parse_tokenize(docs: DataFrame) -> dict[str, DataFrame]:
     """Full §3.2 pipeline; returns the named output tables."""
     extracted = extract_documents(docs)
     spans = spans_table(extracted)
-    ok = extracted.filter("parse_ok").select("doc_id")
-    sentences = sentences_table(spans, ok)
+    sentences = sentences_table(spans)
     rc = rule_counts_table(sentences)
     return {
         "extracted": extracted,

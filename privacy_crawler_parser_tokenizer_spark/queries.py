@@ -2661,7 +2661,7 @@ def q_frontier_crawl(spark, sf_dir):
     """,
 )
 def q_sentence_pipeline(spark, sf_dir):
-    """The whole §3.2 dataflow (extract -> spans -> windows -> tokenize
+    """The whole §3.2 dataflow (extract -> spans -> context -> tokenize
     -> rules) with an exact SQL oracle: single-p docs produce exactly
     one sentence row each; prec_by wraps to itself (Python -1 quirk,
     reference :211-213); empty docs are dropped by the parse gate.

@@ -2,12 +2,11 @@
 "Streaming-only": the reference is pure batch; these are the engine's
 [NEW] incremental surfaces for continuously-arriving crawl output).
 
-The batch pipeline's lag/lead windows are not available on streaming
-DataFrames, so the streaming sentence path computes neighbor context
-*array-locally* inside each document's span array with higher-order
-functions — bit-identical to the batch windows (verified in tests) and
-fully incremental: the whole dataflow is map-only until the optional
-windowed aggregation, so Spark runs it with no state at all.
+The streaming sentence path calls the batch pipeline's own functions:
+span context comes from the core kernel inside the extraction UDF and
+the parse gate is a column, so the dataflow is map-only until the
+optional windowed aggregation and Spark runs it with no state at all
+(equality with batch ``parse_tokenize`` is asserted in tests).
 
 Jobs:
   * ``sentences_stream``     file-source documents -> sentence rows
@@ -26,14 +25,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
-from ..functions.text import rule_hits_col, word_count_col
-from ..functions.udfs import extract_doc_udf, sentences_udf
+from ..pipeline import extract_documents, sentences_table, spans_table
 
 DOCS_STREAM_SCHEMA = "doc_id string, html string, ts timestamp"
 
@@ -47,64 +44,13 @@ def read_documents_stream(spark: SparkSession, src_dir: str,
     return reader.parquet(src_dir)
 
 
-def spans_with_context(docs: DataFrame) -> DataFrame:
-    """Streaming-safe spans table: per-kind tag_index and prec_by/
-    proc_by computed inside each document's span array (no window
-    functions).  Replicates the batch quirks exactly: tag label
-    kind||tag_index, Python ``-1`` wraparound for the first span's
-    predecessor, 'None' past the end (reference:
-    src/parser-tokenizer.py:84-100,210-217)."""
-    from ..functions.text import spans_context_col, spans_tagged_col
-
-    ex = docs.withColumn(
-        "_ex", extract_doc_udf(F.col("html"), F.lit(None).cast("string"))
-    ).select("*", F.col("_ex.spans").alias("spans")).drop("_ex")
-
-    with_ctx = ex.withColumn("_tagged", spans_tagged_col("spans")).withColumn(
-        "_ctx", spans_context_col()
-    )
-    return with_ctx.select(
-        "doc_id",
-        *([c for c in docs.columns if c not in ("doc_id", "html")]),
-        F.explode("_ctx").alias("s"),
-    ).select(
-        "*",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-        F.col("s.tag").alias("tag"),
-        F.col("s.prec_by").alias("prec_by"),
-        F.col("s.proc_by").alias("proc_by"),
-    ).drop("s")
-
-
 def sentences_stream(docs: DataFrame) -> DataFrame:
-    """Incremental sentence rows with quality rules — same schema as the
-    batch sentences table (minus the doc-level parse gate, which needs
-    no state either: it is computed per-doc in the extraction UDF)."""
-    spans = spans_with_context(docs).filter(F.col("kind").isin("p", "h"))
-    sent = spans.withColumn("sents", sentences_udf(F.col("text"))).select(
-        "doc_id",
-        *([c for c in spans.columns if c in ("ts",)]),
-        F.col("offset").alias("seq_index"),
-        "tag",
-        "prec_by",
-        "proc_by",
-        F.posexplode("sents").alias("sent_idx", "sentence"),
-    )
-    return sent.select(
-        "doc_id",
-        *([c for c in sent.columns if c in ("ts",)]),
-        "seq_index",
-        "tag",
-        "prec_by",
-        "proc_by",
-        "sent_idx",
-        F.col("sentence").alias("text"),
-        word_count_col(F.col("sentence")).alias("n_words"),
-        rule_hits_col(F.col("sentence")).alias("rule_hits"),
-    )
+    """Incremental sentence rows with quality rules: the batch
+    ``sentences_table(spans_table(extract_documents(docs)))`` dataflow
+    run on the stream, parse gate included, with ``ts`` passed through
+    after doc_id.  Span context and the gate are per-document columns
+    computed in the extraction UDF, so the stage needs no state."""
+    return sentences_table(spans_table(extract_documents(docs)))
 
 
 def windowed_rule_counts(sentences: DataFrame, window: str = "1 minute",

@@ -64,49 +64,83 @@ def test_shuffle_budgets(spark):
     assert n_exchanges(plan(spark, "token_counts")) == 0
     # one groupBy = one shuffle (plus AQE read)
     assert n_exchanges(plan(spark, "lang_freq")) <= 2
-    # the whole extract->context->tokenize->rules pipeline is shuffle-
-    # free up to the parse-gate semi-join (array-local context)
-    assert n_exchanges(plan(spark, "sentence_pipeline")) <= 1
+    # the whole extract->context->tokenize->rules pipeline is map-only:
+    # context comes from the extraction UDF, the parse gate is a column
+    assert n_exchanges(plan(spark, "sentence_pipeline")) == 0
 
 
-def test_sentence_pipeline_broadcast_gate(spark):
-    # the parse-ok doc-gate must be a broadcast semi-join, not a shuffle
-    assert has_broadcast_join(plan(spark, "sentence_pipeline"))
+def test_sentence_pipeline_one_scan_no_join(spark):
+    """The parse gate is a column filter, not a join against a second
+    extraction: one documents scan, one extraction UDF, one sentence
+    UDF."""
+    import re
+
+    p = plan(spark, "sentence_pipeline")
+    assert "Join" not in p, p
+    scans = re.findall(r"\(\d+\) Scan parquet", p)
+    assert len(scans) == 1 and "documents.parquet" in p, p
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 2, p
 
 
-def test_spans_windowed_twin_is_identical(spark):
-    """The zero-shuffle array-local context == the lag/lead window
-    formulation, row for row."""
+def _mixed_span_html(n: int) -> str:
+    """One document of ``n`` p/h/list spans (some lists take a colon
+    donation from the paragraph before them)."""
+    parts = []
+    for i in range(n):
+        if i % 3 == 0:
+            parts.append(f"<p>Paragraph {i} reads:</p>" if i % 7 == 0
+                         else f"<p>Paragraph {i}.</p>")
+        elif i % 3 == 1:
+            parts.append(f"<h2>Heading {i}</h2>")
+        else:
+            parts.append(f"<ul><li>item {i}</li><li>more {i}</li></ul>")
+    return "<html><body>" + "".join(parts) + "</body></html>"
+
+
+def test_spans_table_matches_kernels(spark):
+    """spans_table == core.spans.extract_doc + span_context + the
+    parse gate, row for row, with zero shuffles."""
+    from collections import Counter
+
+    from privacy_crawler_parser_tokenizer_spark.core.spans import (
+        compare_parsed_text,
+        extract_doc,
+        span_context,
+    )
     from privacy_crawler_parser_tokenizer_spark.pipeline import (
+        RESIDUAL_TOLERANCE,
         extract_documents,
         spans_table,
-        spans_table_windowed,
     )
 
-    docs = spark.createDataFrame(
-        [
-            ("d1", "<html><body><h1>T</h1><p>a.</p><ul><li>x</li></ul>"
-                   "<p>b!</p><img src='m.png'></body></html>"),
-            ("d2", "<html><body><p>only one</p></body></html>"),
-        ],
-        "doc_id string, html string",
-    )
+    html = {
+        "d1": "<html><body><h1>T</h1><p>a.</p><ul><li>x</li></ul>"
+              "<p>b!</p><img src='m.png'></body></html>",
+        "d2": "<html><body><p>only one</p></body></html>",
+        "big": _mixed_span_html(2000),
+    }
+    docs = spark.createDataFrame(sorted(html.items()), "doc_id string, html string")
     ex = extract_documents(docs, auto_text=False)
     cols = ["doc_id", "kind", "text", "media_ref", "offset", "tag_index",
-            "tag", "prec_by", "proc_by"]
-    fast = {tuple(r) for r in spans_table(ex).select(cols).collect()}
-    slow = {tuple(r) for r in spans_table_windowed(ex).select(cols).collect()}
-    assert fast == slow and len(fast) >= 5
-    assert n_exchanges(formatted_plan(spans_table(ex))) == 0
+            "tag", "prec_by", "proc_by", "parse_ok"]
+    got = Counter(tuple(r) for r in spans_table(ex).select(cols).collect())
 
-    # opt-in huge-doc guard: with a threshold that routes d1 (5 spans)
-    # to the windowed path and keeps d2 array-local, the union is
-    # row-identical to both pure formulations
-    guarded = {
-        tuple(r)
-        for r in spans_table(ex, huge_span_threshold=2).select(cols).collect()
-    }
-    assert guarded == fast
+    want = Counter()
+    for doc_id, h in html.items():
+        spans, stripped = extract_doc(h)
+        ok = bool(stripped) and len(compare_parsed_text(spans, stripped)) <= RESIDUAL_TOLERANCE
+        for s, ctx in zip(spans, span_context(spans)):
+            want[(doc_id, *s.as_tuple(), *ctx, ok)] += 1
+    assert got == want
+    assert sum(1 for k in got if k[0] == "big") == 2000
+
+    # the kernel itself: per-kind tags, -1 wraparound, 'None' past the end
+    spans, _ = extract_doc(html["d1"])
+    assert [c[1:] for c in span_context(spans)] == [
+        ("h0", "media0", "p0"), ("p0", "h0", "l0"), ("l0", "p0", "p1"),
+        ("p1", "l0", "media0"), ("media0", "p1", "None"),
+    ]
+    assert n_exchanges(formatted_plan(spans_table(ex))) == 0
 
 
 def test_verify_scores_matches_kernel(spark):

@@ -4,11 +4,7 @@ import pandas as pd
 import pytest
 
 from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
-from privacy_crawler_parser_tokenizer_spark.pipeline import (
-    extract_documents,
-    sentences_table,
-    spans_table,
-)
+from privacy_crawler_parser_tokenizer_spark.pipeline import parse_tokenize
 from privacy_crawler_parser_tokenizer_spark.streaming import jobs
 
 HTML_DOCS = [
@@ -18,6 +14,10 @@ HTML_DOCS = [
     ("d2", "<html><body><p>Short one.</p></body></html>"),
     ("d3", "<html><body><h2>Terms</h2><p>No policy here at all, "
            "just words without end</p></body></html>"),
+    # fails the parse gate: 7 sentences of div text no span covers (> 5)
+    ("d4", "<html><body><div>One here. Two here. Three here. Four here. "
+           "Five here. Six here. Seven here.</div><p>Kept sentence.</p>"
+           "</body></html>"),
 ]
 
 
@@ -36,8 +36,8 @@ def docs_dir(spark, tmp_path_factory):
 
 
 def test_streaming_sentences_equal_batch(spark, docs_dir):
-    """The window-free array-local context path must equal the batch
-    lag/lead windows row for row."""
+    """The stream must equal the batch parse_tokenize sentences row for
+    row, parse gate included (d4 fails it and emits nothing)."""
     stream = jobs.sentences_stream(jobs.read_documents_stream(spark, docs_dir))
     assert stream.isStreaming
     jobs.run_to_memory(stream, "sent_stream")
@@ -48,14 +48,14 @@ def test_streaming_sentences_equal_batch(spark, docs_dir):
     }
 
     batch_docs = spark.read.parquet(docs_dir).select("doc_id", "html")
-    ex = extract_documents(batch_docs, auto_text=False)
-    batch = sentences_table(spans_table(ex))
+    batch = parse_tokenize(batch_docs)["sentences"]
     want = {
         (r.doc_id, r.seq_index, r.tag, r.prec_by, r.proc_by, r.sent_idx, r.text,
          r.n_words, tuple(r.rule_hits))
         for r in batch.collect()
     }
     assert got == want and len(got) > 3
+    assert "d4" not in {g[0] for g in got}
 
 
 def test_streaming_windowed_rule_counts(spark, docs_dir):
@@ -63,7 +63,8 @@ def test_streaming_windowed_rule_counts(spark, docs_dir):
     win = jobs.windowed_rule_counts(stream, window="1 minute", watermark="0 seconds")
     jobs.run_to_memory(win, "win_counts", output_mode="complete")
     rows = spark.table("win_counts").collect()
-    # 3 docs at minutes 0,1,2 -> at least one window per doc's minute
+    # docs at minutes 0,1,2 pass the parse gate (d4 at minute 3 fails
+    # it) -> one window per passing doc's minute
     assert len({r.win_start for r in rows}) == 3
     assert sum(r.cnt for r in rows) > 0
 
@@ -173,10 +174,7 @@ def test_crawl_log_streaming_monitor(spark, tmp_path):
 
 def test_save_reference_outputs_csv(spark, tmp_path):
     """§2.1 CSV sinks: per-doc partitioned CSV datasets round-trip."""
-    from privacy_crawler_parser_tokenizer_spark.pipeline import (
-        parse_tokenize,
-        save_reference_outputs,
-    )
+    from privacy_crawler_parser_tokenizer_spark.pipeline import save_reference_outputs
 
     docs = spark.createDataFrame(
         [(d, h) for d, h in HTML_DOCS], "doc_id string, html string"

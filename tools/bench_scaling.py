@@ -108,7 +108,8 @@ def job_pipeline(spark) -> tuple[float, int]:
     staged = docs.withColumn("contents", strip_text_udf(F.col("html"))).withColumn(
         "sim", verify(F.col("contents"))
     )
-    sentences = parse_tokenize(staged)["sentences"]
+    # only (doc_id, html): parse_tokenize passes other doc columns through
+    sentences = parse_tokenize(staged.select("doc_id", "html"))["sentences"]
     # attach the verify score so BOTH the tokenize and verify paths are
     # materialized in one action (same shape as the crawl data plane)
     out = sentences.join(staged.select("doc_id", "sim"), "doc_id")
