@@ -127,10 +127,14 @@ def ensure_scheme_col(domain: Column) -> Column:
 
 
 def host_of_col(url: Column) -> Column:
-    """Lowercased authority of a URL (native regexp)."""
-    with_scheme = F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
+    """Lowercased authority of a URL (native regexp) — mirrors
+    core.urls.host_of: a URL with a scheme takes its authority, even
+    an empty one (``http:///a`` -> ''); a scheme-less one takes the text
+    up to the first '/' or '?'."""
+    scheme = r"^[A-Za-z][A-Za-z0-9+.\-]*://"
+    with_scheme = F.regexp_extract(url, scheme + "([^/?#]*)", 1)
     bare = F.split(F.split(url, "/", 2).getItem(0), r"\?", 2).getItem(0)
-    return F.lower(F.when(with_scheme != "", with_scheme).otherwise(bare))
+    return F.lower(F.when(url.rlike(scheme), with_scheme).otherwise(bare))
 
 
 def canonicalize_url_col(url: Column) -> Column:

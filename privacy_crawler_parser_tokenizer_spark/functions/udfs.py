@@ -21,7 +21,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
     IntegerType,
     StringType,
@@ -144,18 +143,6 @@ sentences_udf = sentences_udf.asNondeterministic()
 
 
 # -- family 5: verification (factories over broadcasts) -------------------
-
-
-def make_english_udf(bc_dictionary):
-    """English gate against a broadcast uppercase word set
-    (reference: src/verification/verify.py:48-68)."""
-
-    @F.pandas_udf(BooleanType())
-    def english_udf(text: pd.Series) -> pd.Series:
-        words = bc_dictionary.value
-        return text.map(lambda t: is_english(words, t) if t else False)
-
-    return english_udf
 
 
 def make_verify_udf(bc_gt_counts, bc_dictionary):

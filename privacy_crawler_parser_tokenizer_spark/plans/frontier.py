@@ -27,13 +27,27 @@ crawler, src/crawler.py:143-241) as iterative batch DataFrame rounds:
       first-writer dedupe -> log/doc/metric/lineage deltas -> state
       update -> checkpoint + commit marker.
 
-One fetch path: every crawl fetches through ``PythonFetcher.fetch_process``
-— ``fetch_fn(url) -> html`` and the page kernel run in ONE mapInPandas
-call per batch, so tests and benchmarks exercise the same dispatch.
-One round cache: the five round-local frames read by several writes
-(requests, processed, cand3, links_delta, visits) are lazily
-``localCheckpoint``-ed, and the round frees their blocks by RDD id
-before it returns.
+One round plan for every crawl — tests, benchmarks, the
+``frontier_crawl`` query and live crawls run the same stages:
+
+  * one fetch path: ``PythonFetcher.fetch_process`` runs
+    ``fetch_fn(url) -> html`` and the page kernel in ONE mapInPandas
+    call per batch;
+  * one robots gate: a ``(host, content)`` dimension joined on host,
+    evaluated by a content UDF that parses each host's rules once per
+    Arrow batch.  Only the dimension's source depends on the mode — a
+    static local frame from injected ``robots=`` rules, or the
+    warehouse ``robots`` table the live ``robots_fetch_fn`` stage fills;
+  * one seen filter: the Bloom (or cuckoo) pre-filter always runs, and
+    the exact ``seen`` anti-join decides every "might" verdict;
+  * one state update: the per-round update side (at most one row per
+    due domain) is broadcast into the ``domain_state`` rewrite;
+  * one write wave: every delta snapshot write and the filter delta
+    build are submitted at once;
+  * one round cache: the five round-local frames read by several
+    writes (requests, processed, cand3, links_delta, visits) are
+    lazily ``localCheckpoint``-ed, and the round frees their blocks by
+    RDD id before it returns.
 
 The reference's racy cross-domain ``Manager()`` dicts
 (src/crawler.py:350-351) become deterministic window functions: every
@@ -54,6 +68,9 @@ Scale notes (10^10-URL frontier):
     per-host fan-out per round, and the fetch stage repartitions by
     raw hash(host, round, url) — per-URL spread, measured straggler
     ratio 1.05-1.07 under a 30%-one-host wave (tools/bench_hostskew.py);
+  * the state update broadcasts one row per due domain; a round whose
+    update side outgrows a broadcast (~10^7 due domains) would need a
+    shuffle join there again — no workload comes near it;
   * state snapshots per round give exact resume (crash between writes
     replays the uncommitted round idempotently — the commit marker is
     written last);  append tables write per-round deltas, so there is
@@ -68,11 +85,12 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.robots import parse_robots, robots_allows, url_path
+from ..core.robots import parse_robots, url_path
 from ..functions.text import (
     complete_link_col,
     ensure_scheme_col,
@@ -123,8 +141,6 @@ def _arrow_of_ddl(ddl: str):
     the two cannot drift: a column added/renamed/retyped in the DDL flows
     to the driver-local parquet writes automatically, and an unsupported
     type fails loudly here instead of as all-null reads later."""
-    import pyarrow as pa
-
     types = {"int": pa.int32(), "bigint": pa.int64(), "string": pa.string(),
              "double": pa.float64(), "boolean": pa.bool_()}
     fields = []
@@ -231,34 +247,14 @@ def _salt_by_host(requests: DataFrame, round_id: int,
 
 
 # ---------------------------------------------------------------------------
-# robots + bloom UDF factories
+# robots + seen-filter UDF factories
 # ---------------------------------------------------------------------------
 
 
-def make_robots_udf(spark: SparkSession, robots: dict[str, str],
-                    user_agent: str = "*"):
-    """Broadcast the robots map once; gate = vectorized UDF over url
-    batches (north-rule [NEW]; shares core.robots with the oracle).
-    At cluster scale the map becomes a broadcast-joined ``robots``
-    dimension table — same plan shape."""
-    bc = spark.sparkContext.broadcast(robots or {})
-
-    from ..core.urls import host_of
-
-    @F.pandas_udf(T.BooleanType())
-    def robots_ok(url: pd.Series) -> pd.Series:
-        table = bc.value
-        return url.map(
-            lambda u: robots_allows(table.get(host_of(u)), url_path(u), user_agent)
-        )
-
-    return robots_ok
-
-
 def make_robots_content_udf(user_agent: str = "*"):
-    """Gate on per-row robots.txt CONTENT (live-fetch mode): the robots
-    table rides a dimension join on host, and this UDF evaluates the
-    joined content against each url's path.  Policies are parse-cached
+    """The robots gate: the ``(host, content)`` dimension rides a join on
+    host, and this UDF evaluates the joined content against each url's
+    path.  Policies are parse-cached
     per Arrow batch keyed by content string, so a host's rules parse
     once per batch, not once per URL.  NULL/'' content = allow-all
     (RFC 9309 §2.3.1: unavailable robots.txt means full allow — also
@@ -360,25 +356,18 @@ class FrontierConfig:
     user_agent: str = "*"
     bloom_capacity: int = 1 << 20
     bloom_fpp: float = 0.01
-    use_bloom: bool = True
+    # the seen pre-filter always runs; the exact anti-join vs ``seen``
+    # decides every "might" verdict, so the filter only skips join work
     seen_filter: str = "bloom"      # "bloom" | "cuckoo" (deletable)
     max_rounds: int = 10_000
     keep_state_snapshots: int = 2   # expire older state snapshots
     compact_every: int = 64         # merge delta snapshots every N rounds
-    # coalesce per-round delta snapshot writes to N files.  At sandbox
-    # round sizes each delta is tiny and a 32-task write job per table
-    # monopolizes the local scheduler (the concurrent write wave
-    # serializes on task slots); at production round sizes leave None
-    # and let AQE size the files.
+    # coalesce each per-round delta snapshot write to N files (the
+    # wave is submitted at once either way).  At sandbox round sizes
+    # each delta is tiny and a 32-task write job per table monopolizes
+    # the local scheduler; at production round sizes leave None and
+    # let AQE size the files.
     delta_write_partitions: int | None = None
-    # broadcast the per-round state-update side (bounded by the
-    # politeness window: ~n_granted rows) into the domain_state rewrite
-    # when the round is at most this many granted URLs — the full-state
-    # rewrite then needs zero shuffles (scan -> 2 broadcast joins ->
-    # write).  Rounds above the threshold fall back to shuffle joins
-    # (the right plan when a production round's 10^7 updates no longer
-    # fit a broadcast).
-    broadcast_state_updates_max: int = 2_000_000
 
 
 @dataclass
@@ -411,11 +400,14 @@ class FrontierCrawler:
         # priority_fn — supply both for parity tests.
         self.priority_expr = priority_expr or (lambda url: F.lit(0))
         self.fetcher = fetcher
-        # robots gate: injected dict (parity mode, reference-compatible)
-        # OR live per-host fetch through the HTTP client seam ([NEW]):
-        # each round fetches robots.txt for hosts the warehouse `robots`
-        # table hasn't seen, persists them as a delta snapshot (exact
-        # resume), and gates via a dimension join on host.
+        # robots gate: one (host, content) dimension joined on host.  It
+        # comes from injected rules (parity mode, reference-compatible)
+        # as a static driver-local relation (Arrow-built, so Catalyst
+        # sees its true size and broadcasts it) OR from live per-host
+        # fetches through the HTTP client seam ([NEW]): each round
+        # fetches robots.txt for hosts the warehouse `robots` table
+        # hasn't seen and persists them as a delta snapshot (exact
+        # resume).
         if robots_fetch_fn is not None and robots:
             raise ValueError(
                 "pass either robots= (injected rules) or "
@@ -423,7 +415,11 @@ class FrontierCrawler:
             )
         self.robots_fetch_fn = robots_fetch_fn
         self.robots_live = robots_fetch_fn is not None
-        self.robots_udf = make_robots_udf(spark, robots, self.cfg.user_agent)
+        rules = sorted((robots or {}).items())
+        self._robots_static = spark.createDataFrame(pa.table(
+            {"host": [h for h, _ in rules], "content": [c for _, c in rules]},
+            schema=_arrow_of_ddl("host string, content string"),
+        ))
         self.robots_content_udf = make_robots_content_udf(self.cfg.user_agent)
         self._delta_tables = DELTA_TABLES + (
             ("robots",) if self.robots_live else ()
@@ -513,21 +509,16 @@ class FrontierCrawler:
         paths = [self.wh.snapshot_path(table, s) for s in snaps]
         return self.spark.read.schema(schema).parquet(*paths)
 
-    def _apply_live_robots(self, requests: DataFrame, rnd: int) -> DataFrame:
+    def _live_robots(self, requests: DataFrame, rnd: int) -> DataFrame:
         """[NEW] live robots.txt stage (north rule: robots gating over a
-        real web).  Per round: anti-join this round's request hosts
-        against the warehouse ``robots`` table, fetch robots.txt for
-        the never-seen hosts through the same per-worker HTTP client as
-        the page fetch (one GET per host over the crawl's lifetime),
-        append the results as this round's delta snapshot (so resume
-        replays the cache instead of re-fetching), then gate via a
-        dimension join on host + the content UDF.
-
-        Scale shape: the join is hint-free — Catalyst/AQE broadcasts
-        the robots table while it is small and falls back to a shuffle
-        join once millions of hosts outgrow the broadcast threshold
-        (the cluster shape make_robots_udf's docstring promises).  The
-        per-round fetch delta is O(new hosts), not O(hosts)."""
+        real web): the robots dimension as of round ``rnd``.  Anti-join
+        this round's request hosts against the warehouse ``robots``
+        table, fetch robots.txt for the never-seen hosts through the
+        same per-worker HTTP client as the page fetch (one GET per host
+        over the crawl's lifetime), and append the results as this
+        round's delta snapshot (so resume replays the cache instead of
+        re-fetching).  The per-round fetch delta is O(new hosts), not
+        O(hosts)."""
         cached = self._load_union("robots", _ROBOTS_SCHEMA, rnd - 1)
         hosts = (
             requests.filter(F.col("host") != "")
@@ -538,12 +529,19 @@ class FrontierCrawler:
         delta = fetch_robots_delta(new_hosts, self.robots_fetch_fn, rnd)
         # the snapshot write materializes the fetch exactly once
         self.wh.write(delta, "robots", rnd)
-        robots_now = self._load_union("robots", _ROBOTS_SCHEMA, rnd)
+        return self._load_union("robots", _ROBOTS_SCHEMA, rnd)
+
+    def _robots_gate(self, requests: DataFrame, rnd: int) -> DataFrame:
+        """Add ``robots_ok``: a left join of the robots dimension on host
+        plus the content UDF.  The join is hint-free — Catalyst/AQE
+        broadcasts the dimension while it is small and falls back to a
+        shuffle join once millions of hosts outgrow the broadcast
+        threshold."""
+        robots = (self._live_robots(requests, rnd) if self.robots_live
+                  else self._robots_static)
         return (
             requests.join(
-                robots_now.select(
-                    "host", F.col("content").alias("_robots_txt")
-                ),
+                robots.select("host", F.col("content").alias("_robots_txt")),
                 "host",
                 "left",
             )
@@ -561,13 +559,12 @@ class FrontierCrawler:
             self._init_state()
             last = -1
         else:
-            # rebuild the Bloom from the committed seen deltas on resume
-            if self.cfg.use_bloom:
-                seen = self._load_union("seen", _SEEN_SCHEMA, last)
-                self.bloom = build_filter_distributed(
-                    seen.select("href").distinct(), "href", self._filter_factory()
-                )
-                self._bloom_dirty = True
+            # rebuild the filter from the committed seen deltas on resume
+            seen = self._load_union("seen", _SEEN_SCHEMA, last)
+            self.bloom = build_filter_distributed(
+                seen.select("href").distinct(), "href", self._filter_factory()
+            )
+            self._bloom_dirty = True
 
         rnd = last
         try:
@@ -635,12 +632,9 @@ class FrontierCrawler:
             .drop("_link_url")
             .withColumn("host", host_of_col(F.col("url")))
         )
-        if self.robots_live:
-            requests = self._apply_live_robots(requests, rnd)
-        else:
-            requests = requests.withColumn(
-                "robots_ok", self.robots_udf(F.col("url"))
-            )
+        requests = self._robots_gate(requests, rnd)
+        if self.plan_probe is not None:
+            self.plan_probe("requests", requests)
         # granted AND blocked branches + state update read this
         requests = requests.localCheckpoint(eager=False)
 
@@ -698,14 +692,10 @@ class FrontierCrawler:
         _t_fetch = _time.monotonic()
 
         # 4. candidate admission: Bloom pre-filter + exact anti path -------
+        bloom_udf = make_bloom_udf_from_bc(self._broadcast_filter())
         cand = processed.filter("expanding").select(
             "seed_rank", "full_url", F.posexplode("hrefs").alias("page_pos", "href")
-        )
-        if cfg.use_bloom:
-            bloom_udf = make_bloom_udf_from_bc(self._broadcast_filter())
-            cand = cand.withColumn("_might", bloom_udf(F.col("href")))
-        else:
-            cand = cand.withColumn("_might", F.lit(True))
+        ).withColumn("_might", bloom_udf(F.col("href")))
         # distinct is required for correctness, not just hygiene: an href
         # re-probed in 3+ distinct rounds has one seen-delta row PER
         # round, and a multi-match here would duplicate the cand row and
@@ -803,8 +793,7 @@ class FrontierCrawler:
         # commit latency — the dominant per-round fixed cost at small
         # rounds (data volume dominates at production rounds).
         # join the overlapped stats job: counts are first needed for the
-        # n_cand write gate just below and the broadcast decision in
-        # step 7 (same values, same plans as the former eager collect)
+        # n_cand write gate just below
         _stats = _stats_fut.result()
         self._pending_stats = None
         n_granted = sum(int(r["n"]) for r in _stats)
@@ -985,12 +974,12 @@ class FrontierCrawler:
                 blocked_upd.withColumn("_expanded", F.lit(False)).withColumn("_made_doc", F.lit(False))
             )
         )
-        if n_granted <= cfg.broadcast_state_updates_max:
-            updates = F.broadcast(updates)
-            appended_counts = F.broadcast(appended_counts)
+        # both sides hold at most one row per due domain: broadcast them
+        # so the full-state rewrite needs zero shuffles (scan -> 2
+        # broadcast joins -> write)
         st = (
-            state.join(updates, "seed_rank", "left")
-            .join(appended_counts, "seed_rank", "left")
+            state.join(F.broadcast(updates), "seed_rank", "left")
+            .join(F.broadcast(appended_counts), "seed_rank", "left")
             .withColumn("_app", F.coalesce(F.col("_appended"), F.lit(0)))
         )
         new_n_links = (F.col("n_links") + F.col("_app")).cast("int")
@@ -1028,6 +1017,8 @@ class FrontierCrawler:
                 F.col("_landing_ok") & (new_n_links > 0),
             ).otherwise(F.col("had_links")).alias("had_links"),
         )
+        if self.plan_probe is not None:
+            self.plan_probe("domain_state", state_new)
         # next round's due-count rides the state write as an observation
         state_obs = Observation()
         pending.append(
@@ -1040,9 +1031,10 @@ class FrontierCrawler:
 
         # 8. one concurrent write wave: every delta snapshot job runs in
         # parallel (independent tables, shared cached parents — block
-        # locks make concurrent first-materialization safe), together
-        # with the Bloom delta build.  Scheduling + parquet commit
-        # latency overlaps instead of summing across 7 writes.
+        # locks serialize concurrent first-materialization of a cached
+        # frame), together with the filter delta build.  Scheduling +
+        # parquet commit latency overlaps instead of summing across 7
+        # writes.
         _t_plan = _time.monotonic()
         k = cfg.delta_write_partitions
         wave_secs: dict[str, float] = {}  # per-job wall time, observability
@@ -1052,38 +1044,16 @@ class FrontierCrawler:
             wh.write(df_.coalesce(k) if k else df_, table, rnd)
             wave_secs[table] = round(_time.monotonic() - _w0, 3)
 
-        # When writes are coalesced (k set): fill the visits cache at
-        # full parallelism BEFORE its dependent writes run (a coalesced
-        # write reading a cold cache would fill it at the coalesced
-        # parallelism); links/seen writes only need the cand3/links
-        # caches, so they overlap with it.  When k is None (production
-        # rounds — AQE sizes the files) no write narrows the cache-fill
-        # parallelism, so the fill job and the early->late barrier are
-        # pure per-round fixed cost: submit the whole wave at once and
-        # let block locks serialize concurrent first-materialization of
-        # the shared cached parents.
-        visits_tables = {"policy_seen", "crawl_log", "documents", "domain_state"}
-        if k:
-            early = [(t, d) for t, d in pending if t not in visits_tables]
-            late = [(t, d) for t, d in pending if t in visits_tables]
-        else:
-            early, late = list(pending), []
         with ThreadPoolExecutor(max_workers=min(10, len(pending) + 2)) as pool:
-            futs = [pool.submit(_write, df_, table) for table, df_ in early]
+            futs = [pool.submit(_write, df_, table) for table, df_ in pending]
             delta_fut = None
-            if cfg.use_bloom and n_cand > 0:
+            if n_cand > 0:
                 delta_fut = pool.submit(
                     build_filter_distributed,
                     cand3.filter(~F.col("hist_seen")).select("href"),
                     "href",
                     self._filter_factory(),
                 )
-            if late:
-                _f0 = _time.monotonic()
-                fill = pool.submit(visits.count)
-                fill.result()
-                wave_secs["_fill"] = round(_time.monotonic() - _f0, 3)
-                futs += [pool.submit(_write, df_, table) for table, df_ in late]
             for f in futs:
                 f.result()
             if delta_fut is not None:
@@ -1168,15 +1138,14 @@ class FrontierCrawler:
             return 0
         kept = agg.join(F.broadcast(expired_df), "href", "left_anti")
         self.wh.rewrite(self.spark, "seen", last, kept)
-        if self.cfg.use_bloom:
-            if hasattr(self.bloom, "delete"):       # cuckoo: O(1) unlearn
-                self.bloom.delete(pd.Series(matched, dtype="object"))
-            else:                                   # bloom: rebuild from kept
-                remaining = self._load_union("seen", _SEEN_SCHEMA, last)
-                self.bloom = build_filter_distributed(
-                    remaining.select("href"), "href", self._filter_factory()
-                )
-            self._bloom_dirty = True
+        if hasattr(self.bloom, "delete"):       # cuckoo: O(1) unlearn
+            self.bloom.delete(pd.Series(matched, dtype="object"))
+        else:                                   # bloom: rebuild from kept
+            remaining = self._load_union("seen", _SEEN_SCHEMA, last)
+            self.bloom = build_filter_distributed(
+                remaining.select("href"), "href", self._filter_factory()
+            )
+        self._bloom_dirty = True
         return n_expired
 
     # -- result readers ---------------------------------------------------

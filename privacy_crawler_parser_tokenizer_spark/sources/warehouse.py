@@ -51,6 +51,15 @@ class Warehouse:
         with open(p) as fp:
             return json.load(fp)
 
+    def _publish(self, table: str, snapshot: int) -> None:
+        """Point the manifest at ``snapshot`` (atomic replace)."""
+        m = self._manifest(table)
+        if snapshot not in m["snapshots"]:
+            m["snapshots"].append(snapshot)
+        m["current"] = snapshot
+        os.makedirs(os.path.dirname(self._manifest_path(table)), exist_ok=True)
+        _atomic_write_json(self._manifest_path(table), m)
+
     def write(self, df: DataFrame, table: str, snapshot: int) -> None:
         """Materialize ``df`` as snapshot ``snapshot`` of ``table`` and
         point the manifest at it."""
@@ -58,12 +67,7 @@ class Warehouse:
         if os.path.exists(data_dir):
             shutil.rmtree(data_dir)  # re-write of an uncommitted snapshot
         df.write.mode("overwrite").parquet(data_dir)
-        m = self._manifest(table)
-        if snapshot not in m["snapshots"]:
-            m["snapshots"].append(snapshot)
-        m["current"] = snapshot
-        os.makedirs(os.path.dirname(self._manifest_path(table)), exist_ok=True)
-        _atomic_write_json(self._manifest_path(table), m)
+        self._publish(table, snapshot)
 
     def write_rows(self, rows: list[tuple], schema, table: str,
                    snapshot: int) -> None:
@@ -86,12 +90,7 @@ class Warehouse:
         )
         with open(os.path.join(data_dir, "_SUCCESS"), "w"):
             pass
-        m = self._manifest(table)
-        if snapshot not in m["snapshots"]:
-            m["snapshots"].append(snapshot)
-        m["current"] = snapshot
-        os.makedirs(os.path.dirname(self._manifest_path(table)), exist_ok=True)
-        _atomic_write_json(self._manifest_path(table), m)
+        self._publish(table, snapshot)
 
     def read(self, spark: SparkSession, table: str,
              snapshot: int | None = None) -> DataFrame | None:

@@ -34,7 +34,7 @@ def run_frontier(spark, tmpdir, pages, seeds, *, fetcher=None, **kw):
         threshold=kw.pop("threshold", 0.3),
         max_depth=kw.pop("max_depth", 3),
         host_budget=kw.pop("host_budget", None),
-        bloom_capacity=1 << 12,
+        bloom_capacity=kw.pop("bloom_capacity", 1 << 12),
         **kw.pop("config_kw", {}),
     )
     fc = FrontierCrawler(
@@ -102,6 +102,26 @@ POLICY = (
 )
 
 
+def test_host_of_col_matches_kernel(spark):
+    """The engine's host column (politeness window key, robots join
+    key) equals the oracle's ``host_of`` on every URL shape, including
+    an empty authority, which must give '' and not the scheme."""
+    from pyspark.sql import functions as F
+
+    from privacy_crawler_parser_tokenizer_spark.core.urls import host_of
+    from privacy_crawler_parser_tokenizer_spark.functions.text import host_of_col
+
+    urls = [
+        "http:///a", "https:///b", "http://", "a.com/x", "a.com?q=1",
+        "http://a.com?q=1", "http://a.com#frag", "a.com#frag",
+        "HTTP://Example.COM:8080/Path", "//cdn.com/x", "",
+    ]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    got = {r.url: r.host
+           for r in df.select("url", host_of_col(F.col("url")).alias("host")).collect()}
+    assert got == {u: host_of(u) for u in urls}
+
+
 def test_frontier_micro_web(spark, tmp_path):
     landing = '<a href="/privacy">privacy</a><p>welcome to the site</p>'
     pages = {
@@ -156,14 +176,21 @@ def test_frontier_matches_oracle_gen_web(spark, tmp_path):
     assert_matches_oracle(fc, res)
 
 
-def test_frontier_no_bloom_same_result(spark, tmp_path):
+def test_frontier_saturated_bloom_same_result(spark, tmp_path):
+    """A saturated seen pre-filter (a 64-bit Bloom) answers "might" for
+    nearly every href, so the exact anti-join vs ``seen`` decides
+    admission on its own — and stays oracle-exact."""
+    import pandas as pd
+
     pages, seeds, robots = gen_web(n_domains=6, seed=7)
     res = run_oracle(pages, seeds, robots=robots, host_budget=3)
     fc = run_frontier(
         spark, tmp_path / "wh", pages, seeds, robots=robots, host_budget=3,
-        config_kw={"use_bloom": False},
+        bloom_capacity=1,
     )
     assert_matches_oracle(fc, res)
+    never_seen = pd.Series([f"http://never-{i}.example/x" for i in range(200)])
+    assert fc.bloom.might_contain(never_seen).mean() > 0.9
 
 
 def test_frontier_python_fetcher(spark, tmp_path):

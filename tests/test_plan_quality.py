@@ -307,6 +307,55 @@ def test_frontier_links_chain_plan_shape(spark, tmp_path):
     assert n_window_group_limits(plans["granted"]) >= 2, plans["granted"]
 
 
+def test_frontier_round_broadcasts_robots_and_state(spark, tmp_path):
+    """The round's two dimension joins never shuffle: the robots gate
+    over injected rules is a BroadcastHashJoin on host that adds no
+    Exchange, and the domain_state rewrite joins its per-due-domain
+    update side through two BroadcastHashJoins, no SortMergeJoin."""
+    import re
+
+    from privacy_crawler_parser_tokenizer_spark.plans.frontier import (
+        FrontierConfig,
+        FrontierCrawler,
+        PythonFetcher,
+    )
+    from privacy_crawler_parser_tokenizer_spark.sources.synth import (
+        gen_web,
+        make_dictionary,
+        make_ground_truth,
+    )
+
+    pages, seeds, robots = gen_web(n_domains=6, seed=7)
+    assert robots
+    fc = FrontierCrawler(
+        spark,
+        str(tmp_path / "wh"),
+        fetcher=PythonFetcher(pages.get),
+        seeds=seeds,
+        ground_truth=make_ground_truth(),
+        dictionary=make_dictionary(),
+        robots=robots,
+        config=FrontierConfig(threshold=0.3, bloom_capacity=1 << 12,
+                              host_budget=3, max_rounds=3),
+    )
+    plans = {}
+    fc.plan_probe = (
+        lambda name, df: plans.setdefault(name, []).append(formatted_plan(df))
+    )
+    fc.run()
+    assert len(plans["requests"]) == 3 and len(plans["domain_state"]) == 3
+    for rnd, p in enumerate(plans["requests"]):
+        assert re.search(
+            r"\(\d+\) BroadcastHashJoin\s+Left keys \[1\]: \[host#", p
+        ), p
+        assert "hashpartitioning(host" not in p, p
+        if rnd > 0:  # once links exist, the link lookup broadcasts too
+            assert n_exchanges(p) == 0, p
+    for p in plans["domain_state"]:
+        assert len(re.findall(r"\(\d+\) BroadcastHashJoin", p)) == 2, p
+        assert "SortMergeJoin" not in p, p
+
+
 def test_simhash_candidates_is_bucketed_not_all_pairs(spark):
     """The simhash pair generator must be the banded-bucket shape (agg
     + explode), never a cross join."""
