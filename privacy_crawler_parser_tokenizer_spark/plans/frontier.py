@@ -20,8 +20,8 @@ crawler, src/crawler.py:143-241) as iterative batch DataFrame rounds:
       politeness window (row_number over host by (priority, seed_rank)
       <= budget) -> salted repartition by host-hash -> fused
       fetch + strip/extract + verify (English gate + TF-IDF vs
-      broadcast ground truth) -> candidate admission (Bloom or cuckoo
-      pre-filter + left-anti vs ``seen`` + in-round first occurrence by
+      broadcast ground truth) -> candidate admission (Bloom pre-filter
+      + left-anti vs ``seen`` + in-round first occurrence by
       (seed_rank, page_pos)) -> junk filter -> link completion ->
       in-page + in-list dedupe -> frontier append -> content
       first-writer dedupe -> log/doc/metric/lineage deltas -> state
@@ -38,8 +38,12 @@ One round plan for every crawl — tests, benchmarks, the
     Arrow batch.  Only the dimension's source depends on the mode — a
     static local frame from injected ``robots=`` rules, or the
     warehouse ``robots`` table the live ``robots_fetch_fn`` stage fills;
-  * one seen filter: the Bloom (or cuckoo) pre-filter always runs, and
-    the exact ``seen`` anti-join decides every "might" verdict;
+  * one politeness control: ``host_budget=k`` grants at most k
+    fetches per host per round, which also bounds same-host fetch
+    concurrency at k; a budget-less crawl has no per-host bound;
+  * one seen filter: the sharded Bloom pre-filter always runs, and the
+    exact ``seen`` anti-join decides every "might" verdict.  Expiry
+    (``expire_seen``) rebuilds it from the kept set;
   * one state update: the per-round update side (at most one row per
     due domain) is broadcast into the ``domain_state`` rewrite;
   * one write wave: every delta snapshot write and the filter delta
@@ -83,6 +87,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 import pandas as pd
 import pyarrow as pa
@@ -174,14 +179,12 @@ class PythonFetcher:
         self.fetch_partitions = fetch_partitions
 
     def fetch_process(self, requests: DataFrame, round_id: int,
-                      process_fn,
-                      host_concurrency: int | None = None) -> DataFrame:
+                      process_fn) -> DataFrame:
         """Fully-fused fetch stage: fetch each batch's html AND run the
         strip/extract/verify page kernel on it inside the SAME
         mapInPandas call — one Python round trip for the hottest stage.
         ``process_fn`` is functions.udfs.make_process_batch_fn's batch
-        kernel; ``host_concurrency`` is the crawl's politeness cap
-        (FrontierConfig.host_concurrency, see ``_salt_by_host``)."""
+        kernel."""
         fn = self.fetch_fn
         out_schema = T.StructType(
             requests.schema.fields
@@ -201,14 +204,12 @@ class PythonFetcher:
                 ]
                 yield process_fn(pdf)
 
-        salted = _salt_by_host(requests, round_id, self.fetch_partitions,
-                               host_concurrency)
+        salted = _salt_by_host(requests, round_id, self.fetch_partitions)
         return salted.mapInPandas(run, schema=out_schema)
 
 
 def _salt_by_host(requests: DataFrame, round_id: int,
-                  n_partitions: int | None,
-                  host_concurrency: int | None = None) -> DataFrame:
+                  n_partitions: int | None) -> DataFrame:
     """Salted repartition by host-hash (north rule): spreads hot hosts
     across partitions while keeping the shuffle deterministic per
     round.  ``None`` keeps the session's default parallelism.
@@ -227,20 +228,9 @@ def _salt_by_host(requests: DataFrame, round_id: int,
         buckets (balls-in-bins collisions: 2x clumps); the raw hash
         keeps Spark's partitioner uniform — straggler ratio 1.05-1.07.
 
-    Politeness vs spread: with ``host_budget=k`` the per-round grant
-    count already bounds same-host fetch concurrency at k, so per-URL
-    spread cannot exceed it.  A budget-LESS crawl has no such bound —
-    per-URL spread would fetch one origin from every partition at
-    once; ``host_concurrency`` caps the spread there (each host's URLs
-    land in at most that many salt buckets, trading skew defusal for a
-    concurrency ceiling)."""
-    host = host_of_col(F.col("url"))
-    if host_concurrency:
-        bucket = F.pmod(F.hash(F.col("url"), F.lit(round_id)),
-                        F.lit(host_concurrency))
-        key = F.hash(host, F.lit(round_id), bucket)
-    else:
-        key = F.hash(host, F.lit(round_id), F.col("url"))
+    Per-URL spread is bounded by politeness, not by the key: with
+    ``host_budget=k`` at most k of a host's URLs are in the wave."""
+    key = F.hash(host_of_col(F.col("url")), F.lit(round_id), F.col("url"))
     if n_partitions:
         return requests.repartition(n_partitions, key)
     return requests.repartition(key)
@@ -316,9 +306,8 @@ def build_filter_distributed(df: DataFrame, col: str, factory):
     per-partition construction + driver-side merge (no raw-value
     collect, no ``.rdd`` round trip — Arrow-batched ``mapInPandas``
     yields one pickled filter per partition): the per-round delta path
-    of the broadcast lifecycle.  ``factory()`` -> a filter with
-    add/might_contain/merge (operators.bloom.ShardedBloom or
-    operators.cuckoo.CuckooFilter)."""
+    of the broadcast lifecycle, the resume rebuild and the expiry
+    rebuild.  ``factory()`` -> an empty operators.bloom.ShardedBloom."""
     import pickle
 
     def per_partition(batches):
@@ -341,26 +330,27 @@ def build_filter_distributed(df: DataFrame, col: str, factory):
 # ---------------------------------------------------------------------------
 
 
+# The Bloom only skips anti-join work (the join decides every "might"),
+# so its false-positive rate only trades filter bytes for join probes.
+BLOOM_FPP = 0.01
+# domain_state snapshots kept after each commit: resume reads only the
+# committed one; its predecessor stays readable for inspection.
+KEEP_STATE_SNAPSHOTS = 2
+
+
 @dataclass
 class FrontierConfig:
     threshold: float = 0.6          # cosine acceptance (crawler.py:205)
     max_depth: int = 3              # page-expansion budget (crawler.py:196)
-    host_budget: int | None = None  # politeness: fetches/host/round
-    # politeness for budget-less crawls: cap how many partitions one
-    # host's URLs may spread across in the fetch wave (bounds same-host
-    # fetch CONCURRENCY at ~this many workers).  With host_budget=k the
-    # per-round grant count already bounds concurrency at k, so this
-    # matters when host_budget is None (e.g. throughput benches against
-    # synthetic webs — leave None there for full skew defusal).
-    host_concurrency: int | None = None
+    # politeness: fetches/host/round, which also bounds same-host fetch
+    # concurrency at this many workers.  None = no per-host bound
+    host_budget: int | None = None
     user_agent: str = "*"
+    # expected hrefs in the sharded Bloom seen pre-filter; the exact
+    # anti-join vs ``seen`` decides every "might" verdict, so the filter
+    # only skips join work
     bloom_capacity: int = 1 << 20
-    bloom_fpp: float = 0.01
-    # the seen pre-filter always runs; the exact anti-join vs ``seen``
-    # decides every "might" verdict, so the filter only skips join work
-    seen_filter: str = "bloom"      # "bloom" | "cuckoo" (deletable)
     max_rounds: int = 10_000
-    keep_state_snapshots: int = 2   # expire older state snapshots
     compact_every: int = 64         # merge delta snapshots every N rounds
     # coalesce each per-round delta snapshot write to N files (the
     # wave is submitted at once either way).  At sandbox round sizes
@@ -429,7 +419,10 @@ class FrontierCrawler:
         self.process_batch_fn = make_process_batch_fn(
             bc_gt, bc_dict, self.cfg.max_depth
         )
-        self.bloom = self._filter_factory()()
+        # an empty seen filter; a partial, so it pickles into executors
+        self._new_filter = partial(ShardedBloom, self.cfg.bloom_capacity,
+                                   BLOOM_FPP)
+        self.bloom = self._new_filter()
         self._bloom_bc = None       # managed broadcast handle (one live copy)
         self._bloom_dirty = True    # re-broadcast only when the filter changed
         self.bloom_broadcasts_created = 0   # lifecycle observability:
@@ -463,14 +456,6 @@ class FrontierCrawler:
                 old.destroy()
                 self.bloom_broadcasts_destroyed += 1
         return self._bloom_bc
-
-    def _filter_factory(self):
-        cfg = self.cfg
-        if cfg.seen_filter == "cuckoo":
-            from ..operators.cuckoo import CuckooFilter
-
-            return lambda: CuckooFilter(cfg.bloom_capacity)
-        return lambda: ShardedBloom(cfg.bloom_capacity, cfg.bloom_fpp)
 
     # -- state io ---------------------------------------------------------
     def _stored_rdd_ids(self) -> set[int]:
@@ -559,12 +544,16 @@ class FrontierCrawler:
             self._init_state()
             last = -1
         else:
-            # rebuild the filter from the committed seen deltas on resume
+            # resume (a new crawler, or this one after a failed round):
+            # rebuild the filter from the committed seen deltas, and
+            # recount the due domains — a round that failed after its
+            # state write left the post-round count behind
             seen = self._load_union("seen", _SEEN_SCHEMA, last)
             self.bloom = build_filter_distributed(
-                seen.select("href").distinct(), "href", self._filter_factory()
+                seen.select("href").distinct(), "href", self._new_filter
             )
             self._bloom_dirty = True
+            self._next_active = None
 
         rnd = last
         try:
@@ -660,9 +649,7 @@ class FrontierCrawler:
         # kernel run in ONE mapInPandas round trip (fetch_process)
         is_landing = F.col("phase") == "landing"
         depth_ok = F.col("depth_count") < cfg.max_depth
-        staged = self.fetcher.fetch_process(
-            granted, rnd, self.process_batch_fn, cfg.host_concurrency
-        )
+        staged = self.fetcher.fetch_process(granted, rnd, self.process_batch_fn)
         processed = staged.withColumn(
             "expanding",
             (F.col("contents") != "") & (is_landing | depth_ok),
@@ -1052,7 +1039,7 @@ class FrontierCrawler:
                     build_filter_distributed,
                     cand3.filter(~F.col("hist_seen")).select("href"),
                     "href",
-                    self._filter_factory(),
+                    self._new_filter,
                 )
             for f in futs:
                 f.result()
@@ -1076,7 +1063,7 @@ class FrontierCrawler:
         _t_wave = _time.monotonic()
         wh.commit(rnd, list(STATE_TABLES + self._delta_tables))
         for t in STATE_TABLES:
-            wh.expire_snapshots(t, keep=cfg.keep_state_snapshots)
+            wh.expire_snapshots(t, keep=KEEP_STATE_SNAPSHOTS)
         if cfg.compact_every and (rnd + 1) % cfg.compact_every == 0:
             for t in self._delta_tables:  # bounded multi-path read fan-in
                 wh.compact(spark, t, rnd)
@@ -1101,17 +1088,15 @@ class FrontierCrawler:
 
     # -- maintenance ------------------------------------------------------
     def expire_seen(self, hrefs: list[str]) -> int:
-        """TTL/recrawl expiry (north rule: the deletable-filter path):
-        remove URLs from the ``seen`` table so the frontier re-admits
-        them when rediscovered.  An O(seen) maintenance rewrite —
+        """TTL/recrawl expiry: remove URLs from the ``seen`` table so
+        the frontier re-admits them when rediscovered.  An O(seen) maintenance rewrite —
         aggregate the probe-count deltas, drop the expired hrefs, swap
         in one compacted snapshot (Warehouse.rewrite, Iceberg
         transform-and-overwrite shape) — never part of the round loop.
 
-        The cuckoo filter unlearns the fingerprints in O(1) per URL;
-        a Bloom filter cannot unlearn, so that path rebuilds the
-        filter from the kept set.  Returns the number of seen URLs
-        actually expired."""
+        A Bloom filter cannot unlearn, so the filter is rebuilt from the
+        kept set in the same O(seen) pass.  Returns the number of seen
+        URLs actually expired."""
         last = self.wh.last_committed_round()
         if last is None or not hrefs:
             return 0
@@ -1123,28 +1108,15 @@ class FrontierCrawler:
             F.sum("probes").cast("long").alias("probes"),
             F.min("first_round").cast("int").alias("first_round"),
         )
-        # only hrefs that are ACTUALLY in the seen table may touch the
-        # cuckoo: deleting a never-inserted value can evict a colliding
-        # fingerprint that belongs to a still-seen URL (a false
-        # negative, re-admitting a crawled URL)
-        matched = [
-            r.href
-            for r in agg.join(
-                F.broadcast(expired_df), "href", "left_semi"
-            ).collect()
-        ]
-        n_expired = len(matched)
+        n_expired = agg.join(F.broadcast(expired_df), "href", "left_semi").count()
         if n_expired == 0:
             return 0
         kept = agg.join(F.broadcast(expired_df), "href", "left_anti")
         self.wh.rewrite(self.spark, "seen", last, kept)
-        if hasattr(self.bloom, "delete"):       # cuckoo: O(1) unlearn
-            self.bloom.delete(pd.Series(matched, dtype="object"))
-        else:                                   # bloom: rebuild from kept
-            remaining = self._load_union("seen", _SEEN_SCHEMA, last)
-            self.bloom = build_filter_distributed(
-                remaining.select("href"), "href", self._filter_factory()
-            )
+        remaining = self._load_union("seen", _SEEN_SCHEMA, last)
+        self.bloom = build_filter_distributed(
+            remaining.select("href"), "href", self._new_filter
+        )
         self._bloom_dirty = True
         return n_expired
 

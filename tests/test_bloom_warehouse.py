@@ -79,64 +79,6 @@ def test_warehouse_compaction(spark, tmp_path):
     assert sorted(wh.snapshots("t")) == [2, 3]
 
 
-def test_cuckoo_filter():
-    from privacy_crawler_parser_tokenizer_spark.operators.cuckoo import CuckooFilter
-
-    c = CuckooFilter(capacity=2000)
-    added = pd.Series([f"http://u{i}.com/p" for i in range(1500)])
-    assert c.add(added) == 1500
-    assert c.might_contain(added).all()          # no false negatives
-    others = pd.Series([f"nope-{i}" for i in range(10000)])
-    assert c.might_contain(others).mean() < 0.05  # fp rate sane
-
-    # deletion (the capability Bloom lacks)
-    victims = added[:200]
-    assert c.delete(victims) == 200
-    # deleted values may still false-positive but most must be gone
-    assert c.might_contain(victims).mean() < 0.1
-    assert c.might_contain(added[200:]).all()
-
-    # merge via fingerprint re-insert
-    d = CuckooFilter(capacity=2000)
-    extra = pd.Series(["zzz-1", "zzz-2"])
-    d.add(extra)
-    c.merge(d)
-    assert c.might_contain(extra).all()
-
-
-def test_cuckoo_overflow_no_false_negatives():
-    """Past capacity the cuckoo must degrade to all-pass, never drop a
-    fingerprint silently (a false negative would let the frontier
-    re-admit a seen URL around the exact anti-join — ADVICE r01)."""
-    from privacy_crawler_parser_tokenizer_spark.operators.cuckoo import CuckooFilter
-
-    c = CuckooFilter(capacity=64)
-    added = pd.Series([f"http://u{i}.com/p" for i in range(5000)])
-    ok = c.add(added)
-    assert ok < len(added)          # the table genuinely overflowed
-    assert c.overflowed
-    assert c.might_contain(added).all()   # contract holds regardless
-
-    # merge into a healthy filter propagates the overflow degradation
-    healthy = CuckooFilter(capacity=64)
-    healthy.merge(c)
-    assert healthy.overflowed
-    assert healthy.might_contain(added).all()
-
-
-def test_cuckoo_merge_counts_only_successes():
-    from privacy_crawler_parser_tokenizer_spark.operators.cuckoo import CuckooFilter
-
-    a = CuckooFilter(capacity=2000)
-    b = CuckooFilter(capacity=2000)
-    a.add(pd.Series([f"a-{i}" for i in range(100)]))
-    b.add(pd.Series([f"b-{i}" for i in range(100)]))
-    n_before = a.n_items
-    a.merge(b)
-    assert a.n_items == n_before + b.n_items  # roomy merge: all placed
-    assert not a.overflowed
-
-
 def test_warehouse_monitor_blocks_compaction(spark, tmp_path):
     """An attached streaming monitor pins the snap= dirs: compaction is
     a no-op until the marker is released (ADVICE r01 race)."""

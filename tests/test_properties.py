@@ -168,22 +168,6 @@ def test_sentencize_output_trimmed_nonempty(t):
         assert s == s.strip() and s
 
 
-# --- cuckoo filter property: contract survives churn ------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(word_text, min_size=1, max_size=300, unique=True),
-       st.integers(16, 256))
-def test_cuckoo_contract_under_churn(values, capacity):
-    """Whatever the capacity pressure, might_contain never returns False
-    for a present key (overflow degrades to all-pass, never drops)."""
-    from privacy_crawler_parser_tokenizer_spark.operators.cuckoo import CuckooFilter
-
-    c = CuckooFilter(capacity=capacity)
-    s = pd.Series(values, dtype="object")
-    c.add(s)
-    assert c.might_contain(s).all()
-
-
 # --- connected components: distributed == union-find canon -------------------
 
 @settings(max_examples=8, deadline=None)

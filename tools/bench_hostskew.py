@@ -9,9 +9,10 @@ the real parse path (deterministic ~3 KB page -> core.spans extract_doc
 + href scan), identical for every URL so partition time == load.
 
 Variants:
-  salt_host   current _salt_by_host: pmod(hash(host, round_id), P)
-  rebalance   hint("rebalance", host-key): AQE splits oversized parts
-  salt_url    pmod(hash(host, round_id, url), P): per-URL spread
+  salt_host     pmod(hash(host, round_id), P): one partition per host
+  salt_url      pmod(hash(host, round_id, url), P): per-URL spread
+  salt_url_raw  hash(host, round_id, url) with no pmod: the key the
+                frontier's _salt_by_host uses
 
 Reports wall seconds + straggler ratio (max partition sec / mean) per
 variant, interleaved best-of-N, meant to run under `taskset -c 0-7`.
