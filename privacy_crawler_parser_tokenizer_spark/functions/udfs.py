@@ -1,14 +1,23 @@
-"""Vectorized pandas/Arrow UDF families.
+"""Vectorized pandas/Arrow UDF kernels.
 
-Exactly the five UDF families SURVEY.md §2.5 calls for — everything
-else in the engine is native Spark SQL.  Each UDF wraps a ``core``
-kernel so executor behavior is bit-identical to the sequential oracle.
-All are Arrow-batched (one Python invocation per batch, loop inside) —
-no per-row Python at the Spark boundary.
+Each of the engine's two dataflows crosses into Python once per row,
+through one Arrow-batched call that runs its ``core`` kernels back to
+back (the UDF-fusion argument of *Accelerating Python UDFs in
+Vectorized Query Execution*, CIDR 2022):
 
-The TF-IDF and English-gate UDFs are *factories* taking broadcast
-variables (ground-truth token counts / dictionary set are broadcast
-once, fixing the reference's per-task re-pickling:
+  * parse/tokenize: ``extract_doc_udf`` -- HTML -> spans with their
+    in-document context, the parse gate, and each p/h span's sentences;
+  * crawl: ``make_process_batch_fn`` -- the page kernel the fetch
+    ``mapInPandas`` runs on each fetched batch: strip, candidate links,
+    verify, and the seen pre-filter's verdict for every href.
+
+Everything else in the engine is native Spark SQL.  Each kernel is a
+``core`` function, so executor behavior is bit-identical to the
+sequential oracle.
+
+The page kernel is a *factory* over broadcast variables (ground-truth
+token counts, dictionary set and the round's Bloom are broadcast once,
+fixing the reference's per-task re-pickling:
 src/verification/verify.py:254 pickles the ground truth with every
 task; verify.py:27 reloads the dictionary per call).
 """
@@ -21,7 +30,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
+    BooleanType,
     IntegerType,
     StringType,
     StructField,
@@ -36,7 +45,6 @@ from ..core.spans import (
     extract_doc,
     extract_spans,
     span_context,
-    strip_text,
 )
 from ..core.tfidf import tfidf_cosine_counts, tokenize_counts
 
@@ -44,24 +52,21 @@ from ..core.tfidf import tfidf_cosine_counts, tokenize_counts
 # recursive walk (src/crawler.py:332); our walk recurses too.
 _RECURSION_LIMIT = 1_000_000
 
-SPAN_STRUCT = StructType(
+RESIDUAL_TOLERANCE = 5  # reference: src/parser-tokenizer.py:306
+
+# a span (core.spans.Span), its in-document context
+# (core.spans.span_context) and its sentences
+SPAN_CTX_STRUCT = StructType(
     [
         StructField("kind", StringType()),
         StructField("text", StringType()),
         StructField("media_ref", StringType()),
         StructField("offset", IntegerType()),
-    ]
-)
-SPAN_SCHEMA = ArrayType(SPAN_STRUCT)
-
-# a span plus its in-document context (core.spans.span_context)
-SPAN_CTX_STRUCT = StructType(
-    SPAN_STRUCT.fields
-    + [
         StructField("tag_index", IntegerType()),
         StructField("tag", StringType()),
         StructField("prec_by", StringType()),
         StructField("proc_by", StringType()),
+        StructField("sentences", ArrayType(StringType())),
     ]
 )
 
@@ -70,6 +75,7 @@ EXTRACT_SCHEMA = StructType(
         StructField("spans", ArrayType(SPAN_CTX_STRUCT)),
         StructField("stripped_text", StringType()),
         StructField("residual_count", IntegerType()),
+        StructField("parse_ok", BooleanType()),
     ]
 )
 
@@ -79,27 +85,21 @@ def _bump_recursion_limit():
         sys.setrecursionlimit(_RECURSION_LIMIT)
 
 
-# -- family 3: HTML -> spans (UDTF-shaped: array return + posexplode) ----
-
-
-@F.pandas_udf(SPAN_SCHEMA)
-def extract_spans_udf(html: pd.Series) -> pd.Series:
-    """documents.html -> ordered span array (core.spans.extract_spans;
-    reference walk: src/parser-tokenizer.py:108-168)."""
-    _bump_recursion_limit()
-    return html.map(
-        lambda h: [s.as_tuple() for s in extract_spans(h)] if h else []
-    )
+# -- parse/tokenize: HTML -> spans + gate + sentences ----------------------
 
 
 @F.pandas_udf(EXTRACT_SCHEMA)
 def extract_doc_udf(html: pd.Series, auto_text: pd.Series) -> pd.DataFrame:
-    """Full per-doc extraction: spans with their tag/neighbor context +
-    stripped text + parse-self-check residual count (reference:
-    src/parser-tokenizer.py:170-188,210-217,304-317).  ``auto_text`` may
-    be null -> derived via strip_text."""
+    """Full per-doc extraction: spans with their tag/neighbor context,
+    stripped text, the parse self-check's residual count and the parse
+    gate (reference: src/parser-tokenizer.py:170-188,210-219,304-317).
+    A document passes the gate when its html and stripped text are
+    non-empty and at most RESIDUAL_TOLERANCE residual sentences remain;
+    each p/h span of a passing document carries ``sent_tokenize`` of its
+    text, every other span ``[]``.  ``auto_text`` may be null -> derived
+    via the same single parse as the spans."""
     _bump_recursion_limit()
-    spans_out, text_out, residual_out = [], [], []
+    spans_out, text_out, residual_out, ok_out = [], [], [], []
     for h, t in zip(html, auto_text):
         h = h or ""
         if isinstance(t, str) and t != "":
@@ -108,63 +108,30 @@ def extract_doc_udf(html: pd.Series, auto_text: pd.Series) -> pd.DataFrame:
         else:
             spans, stripped = extract_doc(h)  # single parse
         residual = len(compare_parsed_text(spans, stripped)) if stripped else 0
-        spans_out.append(
-            [s.as_tuple() + c for s, c in zip(spans, span_context(spans))]
-        )
+        ok = bool(h) and bool(stripped) and residual <= RESIDUAL_TOLERANCE
+        spans_out.append([
+            s.as_tuple() + c + (
+                sent_tokenize(s.text)
+                if ok and s.kind in ("p", "h") and s.text else [],
+            )
+            for s, c in zip(spans, span_context(spans))
+        ])
         text_out.append(stripped)
         residual_out.append(residual)
-    return pd.DataFrame(
-        {"spans": spans_out, "stripped_text": text_out, "residual_count": residual_out}
-    )
-
-
-@F.pandas_udf(StringType())
-def strip_text_udf(html: pd.Series) -> pd.Series:
-    """Visible text (reference: src/verification/verify.py:84-104)."""
-    _bump_recursion_limit()
-    return html.map(lambda h: strip_text(h) if h else "")
-
-
-# -- family 4: sentence tokenization --------------------------------------
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def sentences_udf(text: pd.Series) -> pd.Series:
-    """Canonical sentence split (reference: parser-tokenizer.py:219)."""
-    return text.map(lambda t: sent_tokenize(t) if t else [])
+        ok_out.append(ok)
+    return pd.DataFrame({"spans": spans_out, "stripped_text": text_out,
+                         "residual_count": residual_out, "parse_ok": ok_out})
 
 
 # Declared nondeterministic only to pin ONE call per row: for a
-# deterministic UDF, Catalyst pushes the filter it infers from a later
-# explode (size(result) > 0), and the parse gate, through the projection,
-# inlining the UDF into the filter and running it twice per row.
+# deterministic UDF, Catalyst pushes the filter it infers from the span
+# explode (size(spans) > 0) and the parse-gate filter through the
+# projection, inlining the UDF into the filter -- without the pin the
+# sentence_pipeline plan shows two ArrowEvalPython nodes, with it one.
 extract_doc_udf = extract_doc_udf.asNondeterministic()
-sentences_udf = sentences_udf.asNondeterministic()
 
 
-# -- family 5: verification (factories over broadcasts) -------------------
-
-
-def make_verify_udf(bc_gt_counts, bc_dictionary):
-    """similarity = 0.0 unless English, else pair-fit TF-IDF cosine vs
-    the broadcast ground-truth counts (reference: src/crawler.py:43-75)."""
-
-    @F.pandas_udf(DoubleType())
-    def verify_udf(text: pd.Series) -> pd.Series:
-        gt = bc_gt_counts.value
-        words = bc_dictionary.value
-
-        def _one(t):
-            if not t or not is_english(words, t):
-                return 0.0
-            return tfidf_cosine_counts(gt, tokenize_counts(t))
-
-        return text.map(_one)
-
-    return verify_udf
-
-
-# -- family 2: link extraction, fused with strip + verify in the fetch stage
+# -- crawl: the fetch stage's page kernel ----------------------------------
 
 
 def _process_rows(html, is_landing, expand_ok, gt, words) -> pd.DataFrame:
@@ -194,12 +161,28 @@ def _process_rows(html, is_landing, expand_ok, gt, words) -> pd.DataFrame:
     )
 
 
-def make_process_batch_fn(bc_gt_counts, bc_dictionary, max_depth: int):
+def _bloom_verdicts(bloom, hrefs) -> pd.Series:
+    """``bloom.might_contain`` for every href of a batch, in ONE
+    vectorized call over the flattened lists, split back per row
+    (a row without hrefs gets ``[]``)."""
+    flat = pd.Series([h for row in hrefs for h in row], dtype="object")
+    verdict = bloom.might_contain(flat).tolist()
+    out, i = [], 0
+    for row in hrefs:
+        out.append(verdict[i:i + len(row)])
+        i += len(row)
+    return pd.Series(out, dtype="object")
+
+
+def make_process_batch_fn(bc_gt_counts, bc_dictionary, max_depth: int,
+                          bc_bloom):
     """Pandas-batch page kernel for the fused fetch stage
     (PythonFetcher.fetch_process): the fetch mapInPandas calls this on
-    the batch it just fetched, so the hottest stage pays ONE
-    JVM<->Python round trip.  Reads is_landing / expand_ok from the
-    batch's ``phase`` / ``depth_count`` columns."""
+    the batch it just fetched, so the crawl pays ONE JVM<->Python round
+    trip per row.  Reads is_landing / expand_ok from the batch's
+    ``phase`` / ``depth_count`` columns, and emits ``might`` aligned
+    with ``hrefs``: the round's broadcast seen pre-filter's verdict
+    (``bc_bloom``, an operators.bloom.ShardedBloom handle)."""
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
         _bump_recursion_limit()
@@ -216,6 +199,7 @@ def make_process_batch_fn(bc_gt_counts, bc_dictionary, max_depth: int):
         pdf = pdf.copy()
         pdf["contents"] = res["contents"].values
         pdf["hrefs"] = res["hrefs"].values
+        pdf["might"] = _bloom_verdicts(bc_bloom.value, res["hrefs"]).values
         pdf["sim_raw"] = res["sim_raw"].values
         return pdf
 

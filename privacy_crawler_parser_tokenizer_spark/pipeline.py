@@ -5,20 +5,21 @@ One linear DataFrame dataflow replacing the reference's per-file
 process-pool (src/parser-tokenizer.py:339-397):
 
     documents(doc_id, html[, auto_text])
-      -> extract_doc UDF (spans with tag/prec_by/proc_by context
-         + stripped text + parse self-check)
+      -> extract_doc UDF (spans with tag/prec_by/proc_by context and
+         sentences, stripped text, parse self-check, parse gate)
       -> explode(spans), parse_ok per span row  [spans table]
-      -> filter parse_ok & kind in (p,h) -> sentence UDF -> posexplode
+      -> filter parse_ok & kind in (p,h) -> posexplode(sentences)
       -> native rule expressions                [sentences table]
       -> explode(rule_hits) -> groupBy          [rule_counts tables]
 
-Scale notes: the only Python is the two Arrow-batched UDFs (HTML parse,
-sentence split).  Span context comes from the same ``core.spans``
-kernel the oracle uses, computed once per document inside the
-extraction UDF (O(n) per document), so the sentence table is map-only:
-no window, no join, one scan of the documents.  The parse-success gate
-(residual > 5 -> drop, reference :306) is a column filter on the span
-rows; the aggregations are partial-agg hash groupBys.
+Scale notes: the only Python is ONE Arrow-batched UDF, one call per
+document: it parses the HTML once, computes each span's context with
+the same ``core.spans`` kernel the oracle uses (O(n) per document),
+evaluates the parse-success gate (residual > 5 -> drop, reference
+:306) and sentence-splits the p/h spans of passing documents.  The
+sentence table is therefore map-only: no window, no join, no second
+Python crossing, one scan of the documents.  The aggregations are
+partial-agg hash groupBys.
 """
 
 from __future__ import annotations
@@ -27,9 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.text import rule_hits_col, word_count_col
-from .functions.udfs import SPAN_CTX_STRUCT, extract_doc_udf, sentences_udf
-
-RESIDUAL_TOLERANCE = 5  # reference: src/parser-tokenizer.py:306
+# RESIDUAL_TOLERANCE is re-exported: the gate lives in the extraction UDF
+from .functions.udfs import RESIDUAL_TOLERANCE  # noqa: F401
+from .functions.udfs import SPAN_CTX_STRUCT, extract_doc_udf
 
 # fixed histogram bin edges (reference: src/statistics/sentences.py:207,215)
 RULE_HIST_BINS = [0, 10, 20, 30, 40, 50, 60, 70, 80, 90, 100,
@@ -43,28 +44,18 @@ _SPAN_ROW = ("doc_id", "parse_ok", *SPAN_CTX_STRUCT.fieldNames())
 
 def extract_documents(docs: DataFrame, auto_text: bool = True) -> DataFrame:
     """documents(doc_id, html[, auto_text]) -> + (spans, stripped_text,
-    residual_count, parse_ok).  Empty docs are kept with parse_ok=false
-    (reference skips them at :256-263; downstream filters do the same)."""
+    residual_count, parse_ok), all from the extraction UDF.  Empty docs
+    are kept with parse_ok=false (reference skips them at :256-263;
+    downstream filters do the same)."""
     at = F.col("auto_text") if auto_text and "auto_text" in docs.columns else F.lit(None).cast("string")
     ex = extract_doc_udf(F.col("html"), at)
-    out = docs.withColumn("_ex", ex).select(
-        "*",
-        F.col("_ex.spans").alias("spans"),
-        F.col("_ex.stripped_text").alias("stripped_text"),
-        F.col("_ex.residual_count").alias("residual_count"),
-    ).drop("_ex")
-    return out.withColumn(
-        "parse_ok",
-        (F.length(F.coalesce(F.col("html"), F.lit(""))) > 0)
-        & (F.length(F.col("stripped_text")) > 0)
-        & (F.col("residual_count") <= RESIDUAL_TOLERANCE),
-    )
+    return docs.withColumn("_ex", ex).select("*", "_ex.*").drop("_ex")
 
 
 def spans_table(extracted: DataFrame) -> DataFrame:
     """Explode spans: one row per span with its kernel-computed tag and
-    neighbor context (core.spans.span_context, emitted by the
-    extraction UDF), the document's ``parse_ok``, and every other
+    neighbor context (core.spans.span_context) and sentences, both
+    emitted by the extraction UDF, the document's ``parse_ok``, and every other
     document column (e.g. a stream's ``ts``).  The wide per-document
     columns (html, auto_text, stripped_text) are not carried through
     the explode."""
@@ -75,11 +66,11 @@ def spans_table(extracted: DataFrame) -> DataFrame:
 def sentences_table(spans: DataFrame) -> DataFrame:
     """p/h spans of parse_ok documents -> sentence rows (FIXTURES.md §7
     schema); failed docs are excluded from tokenization (reference:
-    parser-tokenizer.py:304-317).  Extra document columns pass through
-    after doc_id."""
+    parser-tokenizer.py:304-317).  The sentences were split inside the
+    extraction UDF, so this is a filter and a posexplode.  Extra
+    document columns pass through after doc_id."""
     extra = [c for c in spans.columns if c not in _SPAN_ROW]
     df = spans.filter(F.col("parse_ok") & F.col("kind").isin("p", "h"))
-    df = df.withColumn("sents", sentences_udf(F.col("text")))
     df = df.select(
         "doc_id",
         *extra,
@@ -87,7 +78,7 @@ def sentences_table(spans: DataFrame) -> DataFrame:
         "tag",
         "prec_by",
         "proc_by",
-        F.posexplode("sents").alias("sent_idx", "sentence"),
+        F.posexplode("sentences").alias("sent_idx", "sentence"),
     )
     return df.select(
         "doc_id",

@@ -20,9 +20,10 @@ crawler, src/crawler.py:143-241) as iterative batch DataFrame rounds:
       politeness window (row_number over host by (priority, seed_rank)
       <= budget) -> salted repartition by host-hash -> fused
       fetch + strip/extract + verify (English gate + TF-IDF vs
-      broadcast ground truth) -> candidate admission (Bloom pre-filter
-      + left-anti vs ``seen`` + in-round first occurrence by
-      (seed_rank, page_pos)) -> junk filter -> link completion ->
+      broadcast ground truth) + the broadcast Bloom's verdict per href
+      -> candidate admission (left-anti vs ``seen`` for every "might"
+      href + in-round first occurrence by (seed_rank, page_pos)) ->
+      junk filter -> link completion ->
       in-page + in-list dedupe -> frontier append -> content
       first-writer dedupe -> log/doc/metric/lineage deltas -> state
       update -> checkpoint + commit marker.
@@ -31,8 +32,9 @@ One round plan for every crawl — tests, benchmarks, the
 ``frontier_crawl`` query and live crawls run the same stages:
 
   * one fetch path: ``PythonFetcher.fetch_process`` runs
-    ``fetch_fn(url) -> html`` and the page kernel in ONE mapInPandas
-    call per batch;
+    ``fetch_fn(url) -> html`` and the page kernel -- strip, links,
+    verify and the Bloom verdict of every href -- in ONE mapInPandas
+    call per batch, so a fetched page crosses into Python once;
   * one robots gate: a ``(host, content)`` dimension joined on host,
     evaluated by a content UDF that parses each host's rules once per
     Arrow batch.  Only the dimension's source depends on the mode — a
@@ -42,8 +44,10 @@ One round plan for every crawl — tests, benchmarks, the
     fetches per host per round, which also bounds same-host fetch
     concurrency at k; a budget-less crawl has no per-host bound;
   * one seen filter: the sharded Bloom pre-filter always runs, and the
-    exact ``seen`` anti-join decides every "might" verdict.  Expiry
-    (``expire_seen``) rebuilds it from the kept set;
+    exact ``seen`` anti-join decides every "might" verdict.  The
+    round's filter is fixed before its fetch (it changes only in the
+    previous round's write wave, the resume rebuild and
+    ``expire_seen``, which rebuilds it from the kept set);
   * one state update: the per-round update side (at most one row per
     due domain) is broadcast into the ``domain_state`` rewrite;
   * one write wave: every delta snapshot write and the filter delta
@@ -57,8 +61,8 @@ The reference's racy cross-domain ``Manager()`` dicts
 (src/crawler.py:350-351) become deterministic window functions: every
 in-round conflict resolves by the commit order ``(seed_rank,
 page_pos)``, exactly as the oracle commits granted fetches in seed-rank
-order.  All cross-row logic is relational; per-doc logic (HTML parse,
-strip, TF-IDF) lives in the Arrow-batched UDF families of
+order.  All cross-row logic is relational; per-page logic (HTML parse,
+strip, TF-IDF, Bloom probe) lives in the Arrow-batched page kernel of
 ``functions.udfs`` — no per-row Python at the Spark boundary.
 
 Scale notes (10^10-URL frontier):
@@ -181,10 +185,10 @@ class PythonFetcher:
     def fetch_process(self, requests: DataFrame, round_id: int,
                       process_fn) -> DataFrame:
         """Fully-fused fetch stage: fetch each batch's html AND run the
-        strip/extract/verify page kernel on it inside the SAME
+        strip/extract/verify/Bloom page kernel on it inside the SAME
         mapInPandas call — one Python round trip for the hottest stage.
         ``process_fn`` is functions.udfs.make_process_batch_fn's batch
-        kernel."""
+        kernel; ``might`` is aligned with ``hrefs``."""
         fn = self.fetch_fn
         out_schema = T.StructType(
             requests.schema.fields
@@ -192,6 +196,7 @@ class PythonFetcher:
                 T.StructField("html", T.StringType()),
                 T.StructField("contents", T.StringType()),
                 T.StructField("hrefs", T.ArrayType(T.StringType())),
+                T.StructField("might", T.ArrayType(T.BooleanType())),
                 T.StructField("sim_raw", T.DoubleType()),
             ]
         )
@@ -237,7 +242,7 @@ def _salt_by_host(requests: DataFrame, round_id: int,
 
 
 # ---------------------------------------------------------------------------
-# robots + seen-filter UDF factories
+# robots UDF, robots fetch, seen-filter build
 # ---------------------------------------------------------------------------
 
 
@@ -288,17 +293,6 @@ def fetch_robots_delta(new_hosts: DataFrame, fetch_fn, rnd: int) -> DataFrame:
             )
 
     return new_hosts.mapInPandas(run, schema=out_schema)
-
-
-def make_bloom_udf_from_bc(bc):
-    """Membership UDF over a managed broadcast handle: each round's
-    re-broadcast destroys the previous round's copy
-    (``FrontierCrawler._broadcast_filter``)."""
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(href: pd.Series) -> pd.Series:
-        return pd.Series(bc.value.might_contain(href.fillna("")))
-
-    return might_contain
 
 
 def build_filter_distributed(df: DataFrame, col: str, factory):
@@ -378,8 +372,7 @@ class FrontierCrawler:
                  robots: dict[str, str] | None = None,
                  robots_fetch_fn=None,
                  config: FrontierConfig | None = None,
-                 priority_expr=None,
-                 debug_invariants: bool = False):
+                 priority_expr=None):
         self.spark = spark
         self.wh = Warehouse(warehouse_dir)
         self.seeds = list(seeds)
@@ -414,11 +407,8 @@ class FrontierCrawler:
         self._delta_tables = DELTA_TABLES + (
             ("robots",) if self.robots_live else ()
         )
-        bc_gt = broadcast_ground_truth(spark, ground_truth)
-        bc_dict = broadcast_dictionary(spark, dictionary)
-        self.process_batch_fn = make_process_batch_fn(
-            bc_gt, bc_dict, self.cfg.max_depth
-        )
+        self._bc_gt = broadcast_ground_truth(spark, ground_truth)
+        self._bc_dict = broadcast_dictionary(spark, dictionary)
         # an empty seen filter; a partial, so it pickles into executors
         self._new_filter = partial(ShardedBloom, self.cfg.bloom_capacity,
                                    BLOOM_FPP)
@@ -431,13 +421,9 @@ class FrontierCrawler:
         self.round_seconds: list[float] = []  # per-round wall clock (scale evidence)
         self.round_trace: list[dict] = []     # per-round phase timings
         # test seam: when set, called as fn(name, df) on the round's key
-        # frames so plan-quality tests can introspect the optimized plan
-        # (explain only — never triggers execution)
+        # frames so tests can introspect the optimized plan or check a
+        # frame's invariants (any job a probe runs is the test's own)
         self.plan_probe = None
-        # debug seam: per-round assertions of the two invariants the
-        # admission groupBy's argmin correctness rests on (extra jobs —
-        # parity tests only, never production)
-        self.debug_invariants = debug_invariants
         # one long-lived driver thread: overlaps the per-round stats job
         # with step-4/5 plan construction (the round's driver floor)
         self._driver_pool = ThreadPoolExecutor(max_workers=1)
@@ -645,11 +631,17 @@ class FrontierCrawler:
             granted = eligible
         blocked = requests.filter(~F.col("robots_ok"))
 
-        # 3. fetch + fused strip/extract/verify: fetch AND the page
-        # kernel run in ONE mapInPandas round trip (fetch_process)
+        # 3. fetch + fused strip/extract/verify/Bloom: fetch AND the page
+        # kernel run in ONE mapInPandas round trip (fetch_process).  The
+        # round's Bloom is already fixed here (it is merged only in the
+        # previous round's write wave, the resume rebuild and
+        # expire_seen), so the in-kernel verdicts are the admission's.
         is_landing = F.col("phase") == "landing"
         depth_ok = F.col("depth_count") < cfg.max_depth
-        staged = self.fetcher.fetch_process(granted, rnd, self.process_batch_fn)
+        process_fn = make_process_batch_fn(
+            self._bc_gt, self._bc_dict, cfg.max_depth, self._broadcast_filter()
+        )
+        staged = self.fetcher.fetch_process(granted, rnd, process_fn)
         processed = staged.withColumn(
             "expanding",
             (F.col("contents") != "") & (is_landing | depth_ok),
@@ -678,11 +670,13 @@ class FrontierCrawler:
         self._pending_stats = _stats_fut  # drained by run() on error
         _t_fetch = _time.monotonic()
 
-        # 4. candidate admission: Bloom pre-filter + exact anti path -------
-        bloom_udf = make_bloom_udf_from_bc(self._broadcast_filter())
+        # 4. candidate admission: Bloom verdict (from the fetch kernel)
+        # + exact anti path ---------------------------------------------
         cand = processed.filter("expanding").select(
-            "seed_rank", "full_url", F.posexplode("hrefs").alias("page_pos", "href")
-        ).withColumn("_might", bloom_udf(F.col("href")))
+            "seed_rank", "full_url",
+            F.posexplode(F.arrays_zip("hrefs", "might")).alias("page_pos", "_hm"),
+        ).select("seed_rank", "full_url", "page_pos",
+                 F.col("_hm.hrefs").alias("href"), F.col("_hm.might").alias("_might"))
         # distinct is required for correctness, not just hygiene: an href
         # re-probed in 3+ distinct rounds has one seen-delta row PER
         # round, and a multi-match here would duplicate the cand row and
@@ -698,6 +692,8 @@ class FrontierCrawler:
         )
         fresh = cand.filter(~F.col("_might")).withColumn("hist_seen", F.lit(False))
         cand2 = probed.unionByName(fresh)
+        if self.plan_probe is not None:
+            self.plan_probe("cand2", cand2)
         # One partial-aggregable groupBy replaces the former
         # row_number-over-href window: the in-round winner row per href
         # is min(struct(seed_rank, page_pos, ...)) — (seed_rank,
@@ -710,21 +706,8 @@ class FrontierCrawler:
         # occurrences) ships as one partial row per task instead of
         # funneling every occurrence into one skewed sort partition,
         # and the cached frame shrinks to unique hrefs.
-        if self.debug_invariants:
-            # (1) one fetched page per seed per round => (seed_rank,
-            # page_pos) unique in-round, so min(struct(...)) IS the old
-            # window's probe_rank==1 row; (2) hist_seen is a pure
-            # function of href (Bloom verdict + seen membership), so
-            # max() over the group is exact, not a vote.  A future
-            # fetcher/probe change violating either fails loudly here.
-            assert cand.groupBy("seed_rank", "page_pos").count().filter(
-                "count > 1"
-            ).isEmpty(), "admission invariant: (seed_rank, page_pos) not unique in-round"
-            assert cand2.groupBy("href").agg(
-                F.countDistinct("hist_seen").alias("k")
-            ).filter("k > 1").isEmpty(), (
-                "admission invariant: hist_seen not href-constant"
-            )
+        # test_frontier_adversarial_web asserts both invariants on the
+        # ``cand2`` probe frame.
         _admission = cand2.groupBy("href").agg(
             F.min(
                 F.struct("seed_rank", "page_pos", "full_url")

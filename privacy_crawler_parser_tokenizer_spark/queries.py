@@ -1759,8 +1759,9 @@ def q_verify_scores(spark, sf_dir):
     ground truth (docs 0-2), as pure relational algebra: token-count
     aggregation, broadcast join on the tiny ground-truth vocabulary,
     closed-form norm arithmetic (core/tfidf.py; reference:
-    src/crawler.py:43-75).  The UDF twin (make_verify_udf) drives the
-    frontier; this is the set-oriented re-scoring path
+    src/crawler.py:43-75).  The Python twin (the fetch stage's page
+    kernel, functions.udfs.make_process_batch_fn) drives the frontier;
+    this is the set-oriented re-scoring path
     (src/verification/verify.py:216-290)."""
     docs = _t(spark, sf_dir, "documents")
     tok = _doc_tokens(docs)

@@ -46,7 +46,6 @@ def run_frontier(spark, tmpdir, pages, seeds, *, fetcher=None, **kw):
         dictionary=DICT,
         robots=kw.pop("robots", None),
         config=cfg,
-        debug_invariants=kw.pop("debug_invariants", False),
     )
     fc.run()
     return fc
@@ -100,6 +99,46 @@ POLICY = (
     "retention security for the service and we share information with "
     "partners and advertising analytics providers.</p></body></html>"
 )
+
+
+def test_fetch_kernel_bloom_verdicts_match_might_contain():
+    """The fetch kernel's ``might`` column is the round Bloom's
+    ``might_contain`` of its ``hrefs``, row by row, from one call per
+    batch: rows without hrefs (failed fetch, links not wanted, a
+    linkless page) get ``[]``, and an empty batch stays empty."""
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    from privacy_crawler_parser_tokenizer_spark.core.tfidf import tokenize_counts
+    from privacy_crawler_parser_tokenizer_spark.functions.udfs import (
+        make_process_batch_fn,
+    )
+    from privacy_crawler_parser_tokenizer_spark.operators.bloom import ShardedBloom
+
+    bloom = ShardedBloom(64, 0.01, n_shards=2)
+    bloom.add(pd.Series(["/privacy", "http://b.com/privacy-b"]))
+    process = make_process_batch_fn(
+        SimpleNamespace(value=tokenize_counts(GT)), SimpleNamespace(value=DICT),
+        2, SimpleNamespace(value=bloom),
+    )
+    links = ('<a href="/privacy">privacy</a><a href="/privacy-new">privacy</a>'
+             '<a href="http://b.com/privacy-b">privacy b</a><p>welcome</p>')
+    pdf = pd.DataFrame({
+        "url": ["http://a.com", "http://a.com/x", "http://c.com",
+                "http://a.com/y", "http://a.com/z"],
+        "html": [links, "", "<p>no links here</p>", links, links],
+        "phase": ["landing", "link", "landing", "link", "link"],
+        "depth_count": [0, 0, 0, 2, 1],  # row 3 is at the depth budget
+    })
+    out = process(pdf)
+    assert [len(h) for h in out["hrefs"]] == [3, 0, 0, 0, 3]
+    for hrefs, might in zip(out["hrefs"], out["might"]):
+        want = bloom.might_contain(pd.Series(list(hrefs), dtype="object"))
+        assert list(might) == want.tolist()
+    assert list(out["might"][0]) == [True, False, True]
+    empty = process(pdf.iloc[:0])
+    assert len(empty) == 0 and list(empty["might"]) == []
 
 
 def test_host_of_col_matches_kernel(spark):
@@ -232,14 +271,16 @@ def test_frontier_resume_is_exact(spark, tmp_path):
 
 
 @pytest.mark.parametrize("resume", ["fresh", "same"])
-@pytest.mark.parametrize("fault", ["commit", "fetch"])
+@pytest.mark.parametrize("fault", ["commit", "fetch", "wave"])
 def test_frontier_fault_resume_is_exact(spark, tmp_path, fault, resume):
     """A round that fails before its commit marker replays exactly on
     resume, in a new crawler or in the failed one.  The commit fault
     strikes after the write wave has put the round's delta snapshots on
     disk with no marker; the fetch fault raises partway through a fetch
-    batch (a flag file makes it fire once across executor processes).
-    The rebuilt Bloom answers "might" for every committed href."""
+    batch (a flag file makes it fire once across executor processes);
+    the wave fault makes the policy_seen snapshot write raise while the
+    wave's other snapshots land.  The rebuilt Bloom answers "might" for
+    every committed href."""
     import os
 
     import pandas as pd
@@ -277,13 +318,26 @@ def test_frontier_fault_resume_is_exact(spark, tmp_path, fault, resume):
             commit(round_id, tables)
 
         fc.wh.commit = failing_commit
+    elif fault == "wave":
+        write = fc.wh.write
+
+        def failing_write(df, table, snapshot):
+            if table == "policy_seen" and snapshot == fault_round:
+                fc.wh.write = write  # fire once
+                raise RuntimeError(f"injected write fault at {table}")
+            write(df, table, snapshot)
+
+        fc.wh.write = failing_write
     with pytest.raises(Exception, match="injected"):
         fc.run()
     assert fc.wh.last_committed_round() == fault_round - 1
-    if fault == "commit":
-        assert fault_round in fc.wh.snapshots("crawl_log")  # unmarked deltas
-    else:
+    if fault == "fetch":
         assert os.path.exists(flag)
+    else:
+        assert fault_round in fc.wh.snapshots("crawl_log")  # unmarked deltas
+    if fault == "wave":
+        assert fault_round in fc.wh.snapshots("domain_state")
+        assert fault_round not in fc.wh.snapshots("policy_seen")
 
     resumed = fc if resume == "same" else crawler()
     resumed.run()
@@ -419,13 +473,28 @@ def test_frontier_adversarial_web(spark, tmp_path):
     }
     seeds = ["a.com", "b.com"]
     res = run_oracle(pages, seeds, max_depth=3)
-    # debug_invariants asserts per round that (seed_rank, page_pos) is
-    # unique and hist_seen is href-constant — the two preconditions the
-    # admission argmin rests on (ADVICE r3)
-    fc = run_frontier(
-        spark, tmp_path / "wh", pages, seeds, max_depth=3, debug_invariants=True
+    fc = FrontierCrawler(
+        spark, str(tmp_path / "wh"), fetcher=PythonFetcher(pages.get),
+        seeds=seeds, ground_truth=GT, dictionary=DICT,
+        config=FrontierConfig(threshold=0.3, max_depth=3,
+                              bloom_capacity=1 << 12),
     )
+    # every round's admission input: (seed_rank, page_pos) is unique
+    # in-round and hist_seen is href-constant, the two preconditions the
+    # admission argmin rests on (ADVICE r3)
+    cand2 = []
+    fc.plan_probe = lambda name, df: name == "cand2" and cand2.append(
+        df.select("seed_rank", "page_pos", "href", "hist_seen").collect()
+    )
+    fc.run()
     assert_matches_oracle(fc, res)
+    assert len(cand2) >= 2 and any(r.hist_seen for rows in cand2 for r in rows)
+    for rows in cand2:
+        positions = [(r.seed_rank, r.page_pos) for r in rows]
+        assert len(positions) == len(set(positions)), positions
+        verdicts = {}
+        for r in rows:
+            assert verdicts.setdefault(r.href, r.hist_seen) == r.hist_seen, r
     # the quirks actually fired: the cycle back to a.com's landing
     # re-extracts it, bumping every landing href once; the two distinct
     # raw hrefs (#frag/#other) each entered the seen set separately and

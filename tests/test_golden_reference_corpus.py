@@ -49,10 +49,11 @@ def test_kernel_matches_golden_snapshot():
 
 def test_spark_binaryfile_path_equals_kernel(spark):
     """§2.1 HTML-bytes dir scan: spark.read.binaryFile -> extraction UDF
-    == the sequential kernel, span for span, on real pages."""
+    == the sequential kernel, span for span, on real pages (extract_doc
+    is bit-identical to extract_spans)."""
     from pyspark.sql import functions as F
 
-    from privacy_crawler_parser_tokenizer_spark.functions.udfs import extract_spans_udf
+    from privacy_crawler_parser_tokenizer_spark.functions.udfs import extract_doc_udf
 
     df = (
         spark.read.format("binaryFile")
@@ -61,10 +62,12 @@ def test_spark_binaryfile_path_equals_kernel(spark):
             F.element_at(F.split("path", "/"), -1).alias("doc_id"),
             F.col("content").cast("string").alias("html"),
         )
-        .withColumn("spans", extract_spans_udf(F.col("html")))
+        .withColumn("spans", extract_doc_udf(
+            F.col("html"), F.lit(None).cast("string")).spans)
     )
     got = {
-        r.doc_id: [tuple(s) for s in r.spans] for r in df.collect()
+        r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
+        for r in df.collect()
     }
     for f in sorted(glob.glob(os.path.join(CORPUS, "*"))):
         raw = open(f, "rb").read()

@@ -71,15 +71,15 @@ def test_shuffle_budgets(spark):
 
 def test_sentence_pipeline_one_scan_no_join(spark):
     """The parse gate is a column filter, not a join against a second
-    extraction: one documents scan, one extraction UDF, one sentence
-    UDF."""
+    extraction: one documents scan and ONE Python crossing -- the
+    extraction UDF emits the sentences too."""
     import re
 
     p = plan(spark, "sentence_pipeline")
     assert "Join" not in p, p
     scans = re.findall(r"\(\d+\) Scan parquet", p)
     assert len(scans) == 1 and "documents.parquet" in p, p
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 2, p
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 1, p
 
 
 def _mixed_span_html(n: int) -> str:
@@ -99,9 +99,11 @@ def _mixed_span_html(n: int) -> str:
 
 def test_spans_table_matches_kernels(spark):
     """spans_table == core.spans.extract_doc + span_context + the
-    parse gate, row for row, with zero shuffles."""
+    parse gate + sent_tokenize of the p/h spans of passing documents,
+    row for row, with zero shuffles."""
     from collections import Counter
 
+    from privacy_crawler_parser_tokenizer_spark.core.sentencize import sent_tokenize
     from privacy_crawler_parser_tokenizer_spark.core.spans import (
         compare_parsed_text,
         extract_doc,
@@ -118,21 +120,31 @@ def test_spans_table_matches_kernels(spark):
               "<p>b!</p><img src='m.png'></body></html>",
         "d2": "<html><body><p>only one</p></body></html>",
         "big": _mixed_span_html(2000),
+        # 7 residual sentences outside any span: fails the parse gate
+        "gate": "<html><body><h1>Title</h1><p>Kept para. Two.</p><div>One. "
+                "Two. Three. Four. Five. Six. Seven.</div></body></html>",
     }
     docs = spark.createDataFrame(sorted(html.items()), "doc_id string, html string")
     ex = extract_documents(docs, auto_text=False)
     cols = ["doc_id", "kind", "text", "media_ref", "offset", "tag_index",
-            "tag", "prec_by", "proc_by", "parse_ok"]
-    got = Counter(tuple(r) for r in spans_table(ex).select(cols).collect())
+            "tag", "prec_by", "proc_by", "parse_ok", "sentences"]
+    got = Counter(
+        tuple(r[:-1]) + (tuple(r.sentences),)
+        for r in spans_table(ex).select(cols).collect()
+    )
 
     want = Counter()
     for doc_id, h in html.items():
         spans, stripped = extract_doc(h)
         ok = bool(stripped) and len(compare_parsed_text(spans, stripped)) <= RESIDUAL_TOLERANCE
         for s, ctx in zip(spans, span_context(spans)):
-            want[(doc_id, *s.as_tuple(), *ctx, ok)] += 1
+            sents = sent_tokenize(s.text) if ok and s.kind in ("p", "h") else []
+            want[(doc_id, *s.as_tuple(), *ctx, ok, tuple(sents))] += 1
     assert got == want
     assert sum(1 for k in got if k[0] == "big") == 2000
+    assert {k[-2] for k in got if k[0] == "gate"} == {False}
+    assert not any(k[-1] for k in got if k[0] == "gate")
+    assert any(k[-1] for k in got if k[0] == "d1")
 
     # the kernel itself: per-kind tags, -1 wraparound, 'None' past the end
     spans, _ = extract_doc(html["d1"])
@@ -259,7 +271,11 @@ def test_frontier_links_chain_plan_shape(spark, tmp_path):
     aggregable groupBys — map-side combine collapses a viral href
     before the exchange instead of funneling every occurrence into one
     skewed Window sort partition.  The only Window left in the links
-    chain is the per-seed append positioner (inherently ordered)."""
+    chain is the per-seed append positioner (inherently ordered).  The
+    Bloom verdict rides the fetch kernel's ``might`` column, so the
+    admission plan runs no Python."""
+    import re
+
     from privacy_crawler_parser_tokenizer_spark.plans.frontier import (
         FrontierConfig,
         FrontierCrawler,
@@ -290,6 +306,7 @@ def test_frontier_links_chain_plan_shape(spark, tmp_path):
     cand3, links_delta = plans["cand3"], plans["links_delta"]
     assert has_partial_aggregation(cand3), cand3
     assert n_windows(cand3) == 0, cand3
+    assert not re.search(r"EvalPython|InPandas|PythonUDF", cand3, re.I), cand3
     assert has_partial_aggregation(links_delta), links_delta
     assert n_windows(links_delta) == 1, links_delta
     # content first-writer dedupe: groupBy winners + join, no window

@@ -90,9 +90,9 @@ def job_pipeline(spark) -> tuple[float, int]:
     from privacy_crawler_parser_tokenizer_spark.functions.udfs import (
         broadcast_dictionary,
         broadcast_ground_truth,
-        make_verify_udf,
-        strip_text_udf,
+        make_process_batch_fn,
     )
+    from privacy_crawler_parser_tokenizer_spark.operators.bloom import ShardedBloom
     from privacy_crawler_parser_tokenizer_spark.pipeline import parse_tokenize
     from privacy_crawler_parser_tokenizer_spark.sources.synth import (
         make_dictionary,
@@ -100,19 +100,32 @@ def job_pipeline(spark) -> tuple[float, int]:
     )
 
     docs, n = _base_pages(spark)
-    verify = make_verify_udf(
+    # the crawl's page kernel on link pages at the depth budget
+    # (max_depth=0): strip + verify, no link extraction, so the empty
+    # Bloom probes nothing
+    process = make_process_batch_fn(
         broadcast_ground_truth(spark, make_ground_truth()),
         broadcast_dictionary(spark, make_dictionary()),
+        0,
+        spark.sparkContext.broadcast(ShardedBloom(1)),
     )
     t0 = time.monotonic()
-    staged = docs.withColumn("contents", strip_text_udf(F.col("html"))).withColumn(
-        "sim", verify(F.col("contents"))
+    staged = docs.select(
+        "doc_id", "html", F.lit("link").alias("phase"),
+        F.lit(0).alias("depth_count"),
+    ).mapInPandas(
+        lambda batches: (process(pdf) for pdf in batches),
+        "doc_id string, html string, phase string, depth_count int, "
+        "contents string, hrefs array<string>, might array<boolean>, "
+        "sim_raw double",
     )
     # only (doc_id, html): parse_tokenize passes other doc columns through
-    sentences = parse_tokenize(staged.select("doc_id", "html"))["sentences"]
+    sentences = parse_tokenize(docs.select("doc_id", "html"))["sentences"]
     # attach the verify score so BOTH the tokenize and verify paths are
     # materialized in one action (same shape as the crawl data plane)
-    out = sentences.join(staged.select("doc_id", "sim"), "doc_id")
+    out = sentences.join(
+        staged.select("doc_id", F.col("sim_raw").alias("sim")), "doc_id"
+    )
     out.write.format("noop").mode("overwrite").save()
     return time.monotonic() - t0, n
 
