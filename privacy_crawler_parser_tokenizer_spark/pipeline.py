@@ -12,6 +12,14 @@ process-pool (src/parser-tokenizer.py:339-397):
       -> native rule expressions                [sentences table]
       -> explode(rule_hits) -> groupBy          [rule_counts tables]
 
+One extraction per ``parse_tokenize`` call: its ``sentences`` frame is
+lazily ``localCheckpoint``-ed, and ``rule_counts``/``corpus_hist`` are
+derived from it (the reference counts rule hits in the loop that
+tokenizes each sentence, :221-227, and sums them on the driver,
+:391-394).  Whichever output is written first runs the extraction and
+stores the sentence rows; the other reads those rows.  Spark's
+ContextCleaner frees the stored blocks once the frame is unreachable.
+
 Scale notes: the only Python is ONE Arrow-batched UDF, one call per
 document: it parses the HTML once, computes each span's context with
 the same ``core.spans`` kernel the oracle uses (O(n) per document),
@@ -147,10 +155,15 @@ def save_reference_outputs(tables: dict[str, DataFrame], out_dir: str) -> None:
 
 
 def parse_tokenize(docs: DataFrame) -> dict[str, DataFrame]:
-    """Full §3.2 pipeline; returns the named output tables."""
+    """Full §3.2 pipeline; returns the named output tables.
+
+    ``rule_counts`` and ``corpus_hist`` read the lazily checkpointed
+    ``sentences`` (one extraction per call).  Building the dict starts
+    no Spark job: the sentences plan is map-only, so AQE does not wrap
+    it and the checkpoint only compiles it."""
     extracted = extract_documents(docs)
     spans = spans_table(extracted)
-    sentences = sentences_table(spans)
+    sentences = sentences_table(spans).localCheckpoint(eager=False)
     rc = rule_counts_table(sentences)
     return {
         "extracted": extracted,

@@ -54,8 +54,11 @@ One round plan for every crawl — tests, benchmarks, the
     build are submitted at once;
   * one round cache: the five round-local frames read by several
     writes (requests, processed, cand3, links_delta, visits) are
-    lazily ``localCheckpoint``-ed, and the round frees their blocks by
-    RDD id before it returns.
+    ``localCheckpoint(eager=False)``-ed, and the round frees their
+    blocks by RDD id before it returns.  Under AQE that call is not
+    lazy for a frame with a shuffle: it runs the frame's shuffle-map
+    stages on the driver thread (a ``local[4]`` crawl on a 4-vCPU VM
+    started 64 of its 112 jobs inside the five calls).
 
 The reference's racy cross-domain ``Manager()`` dicts
 (src/crawler.py:350-351) become deterministic window functions: every
@@ -178,17 +181,17 @@ class PythonFetcher:
     per-partition connection reuse + the (3,6)s timeouts of the
     reference live; tests inject a dict-backed fn (``pages.get``)."""
 
-    def __init__(self, fetch_fn, fetch_partitions: int | None = None):
+    def __init__(self, fetch_fn):
         self.fetch_fn = fetch_fn
-        self.fetch_partitions = fetch_partitions
 
     def fetch_process(self, requests: DataFrame, round_id: int,
-                      process_fn) -> DataFrame:
+                      process_fn, n_partitions: int) -> DataFrame:
         """Fully-fused fetch stage: fetch each batch's html AND run the
         strip/extract/verify/Bloom page kernel on it inside the SAME
         mapInPandas call — one Python round trip for the hottest stage.
         ``process_fn`` is functions.udfs.make_process_batch_fn's batch
-        kernel; ``might`` is aligned with ``hrefs``."""
+        kernel; ``might`` is aligned with ``hrefs``.  The wave is salted
+        into ``n_partitions`` partitions (``_salt_by_host``)."""
         fn = self.fetch_fn
         out_schema = T.StructType(
             requests.schema.fields
@@ -209,15 +212,19 @@ class PythonFetcher:
                 ]
                 yield process_fn(pdf)
 
-        salted = _salt_by_host(requests, round_id, self.fetch_partitions)
+        salted = _salt_by_host(requests, round_id, n_partitions)
         return salted.mapInPandas(run, schema=out_schema)
 
 
 def _salt_by_host(requests: DataFrame, round_id: int,
-                  n_partitions: int | None) -> DataFrame:
-    """Salted repartition by host-hash (north rule): spreads hot hosts
-    across partitions while keeping the shuffle deterministic per
-    round.  ``None`` keeps the session's default parallelism.
+                  n_partitions: int) -> DataFrame:
+    """Salted repartition by host-hash (north rule) into
+    ``n_partitions`` partitions (``_fetch_partitions``): spreads hot
+    hosts across partitions while keeping the shuffle deterministic per
+    round.  The count must be explicit: AQE coalesces a count-less
+    ``repartition(key)`` by bytes exactly like ``rebalance`` (below) —
+    a 2,000-URL wave ran in ONE partition, per-partition rows
+    ``[2000]``; ``repartition(4, key)`` gave ``[481, 496, 506, 517]``.
 
     The key is the RAW ``hash(host, round, url)`` — measured against
     the alternatives under an adversarial 30%-one-host wave
@@ -228,7 +235,7 @@ def _salt_by_host(requests: DataFrame, round_id: int,
         ratio 6.1-6.3, wall 2.7x worse;
       * AQE ``rebalance`` splits by BYTES, and a 40k-URL wave is tiny
         in bytes — it coalesced the whole CPU-bound wave to a single
-        partition (worst case measured);
+        partition;
       * pre-``pmod``-ing the key re-hashes P small ints into P
         buckets (balls-in-bins collisions: 2x clumps); the raw hash
         keeps Spark's partitioner uniform — straggler ratio 1.05-1.07.
@@ -236,9 +243,14 @@ def _salt_by_host(requests: DataFrame, round_id: int,
     Per-URL spread is bounded by politeness, not by the key: with
     ``host_budget=k`` at most k of a host's URLs are in the wave."""
     key = F.hash(host_of_col(F.col("url")), F.lit(round_id), F.col("url"))
-    if n_partitions:
-        return requests.repartition(n_partitions, key)
-    return requests.repartition(key)
+    return requests.repartition(n_partitions, key)
+
+
+def _fetch_partitions(spark: SparkSession, n_active: int) -> int:
+    """The fetch wave's partition count: one per task slot (the default
+    parallelism), capped by the round's due domains — each due domain
+    makes at most one request — so a one-URL tail round runs one task."""
+    return min(spark.sparkContext.defaultParallelism, n_active)
 
 
 # ---------------------------------------------------------------------------
@@ -587,10 +599,12 @@ class FrontierCrawler:
             return False
         # The round-local frames below (requests, processed, cand3,
         # links_delta, visits) are each read by several writes, so each
-        # is lazily localCheckpoint-ed: computed once on first use, and
-        # every downstream plan re-analyzes a shallow RDD scan instead
-        # of the round's full lineage.  The blocks are freed by id at
-        # the end of the round.
+        # is localCheckpoint(eager=False)-ed: its rows are stored once,
+        # and every downstream plan re-analyzes a shallow RDD scan
+        # instead of the round's full lineage.  Under AQE the call runs
+        # the frame's shuffle-map stages at once; only its final stage
+        # waits for first use.  The blocks are freed by id at the end of
+        # the round.
 
         # 1. resolve each due domain's single request url ------------------
         link_at = links.select(
@@ -641,7 +655,9 @@ class FrontierCrawler:
         process_fn = make_process_batch_fn(
             self._bc_gt, self._bc_dict, cfg.max_depth, self._broadcast_filter()
         )
-        staged = self.fetcher.fetch_process(granted, rnd, process_fn)
+        staged = self.fetcher.fetch_process(
+            granted, rnd, process_fn, _fetch_partitions(spark, n_active)
+        )
         processed = staged.withColumn(
             "expanding",
             (F.col("contents") != "") & (is_landing | depth_ok),
@@ -649,9 +665,10 @@ class FrontierCrawler:
         # materialize (fetch/UDF run exactly once) + round stats + the
         # per-partition fetch lineage in ONE job — submitted on a
         # background thread so the JVM executes the fetch while the
-        # driver keeps building step-4/5 plans.  The lazy-localCheckpoint
-        # compiles (toRdd at creation) are the dominant per-round driver
-        # fixed cost at small rounds; hiding the stats job behind them
+        # driver keeps building step-4/5 plans.  The localCheckpoint
+        # calls (toRdd at creation, which under AQE runs each frame's
+        # shuffle-map stages) are the dominant per-round driver fixed
+        # cost at small rounds; hiding the stats job behind them
         # shrinks the round floor.  Grouping by partition id (vs the
         # former global agg) makes the same job yield the lineage rows
         # (round, fetch, partition_id, n_rows) for free — the result is

@@ -193,9 +193,9 @@ def http_get(url: str) -> str:
     return _WORKER_CLIENT.get(url)
 
 
-def make_http_fetcher(fetch_partitions: int | None = None):
+def make_http_fetcher():
     """A frontier fetcher hitting the real web: PythonFetcher
     (mapInPandas over salted host-partitions) driving ``http_get``."""
     from ..plans.frontier import PythonFetcher
 
-    return PythonFetcher(http_get, fetch_partitions)
+    return PythonFetcher(http_get)

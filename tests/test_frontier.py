@@ -233,16 +233,26 @@ def test_frontier_saturated_bloom_same_result(spark, tmp_path):
 
 
 def test_frontier_python_fetcher(spark, tmp_path):
-    """The partition count of the fetch exchange changes only how a wave
-    is spread, never what it fetches: an explicit count stays
-    oracle-exact."""
-    pages, seeds, _ = gen_web(n_domains=5, seed=3)
+    """The fetch wave spreads over every task slot: a round with at
+    least 8·P granted URLs (P = the default parallelism) runs in P fetch
+    partitions, and a plain fetch function stays oracle-exact."""
+    n_slots = spark.sparkContext.defaultParallelism
+    pages, seeds, _ = gen_web(n_domains=8 * n_slots + 4, seed=3)
     res = run_oracle(pages, seeds)
     fc = run_frontier(
         spark, tmp_path / "wh", pages, seeds,
-        fetcher=PythonFetcher(pages.get, fetch_partitions=3),
+        fetcher=PythonFetcher(lambda url: pages.get(url)),
     )
     assert_matches_oracle(fc, res)
+
+    parts = {}
+    for r in fc.lineage().collect():
+        parts.setdefault(r.round, set()).add(r.partition_id)
+    granted = {m.round: m.granted for m in fc.metrics().collect()}
+    wide = [rnd for rnd, g in granted.items() if g >= 8 * n_slots]
+    assert wide
+    for rnd in wide:
+        assert len(parts[rnd]) == n_slots, (rnd, sorted(parts[rnd]))
 
 
 def test_frontier_resume_is_exact(spark, tmp_path):

@@ -190,8 +190,8 @@ def test_spark_fetch_parity_with_fixture(spark, tmp_path, server, monkeypatch):
         )
         return log, seen, docs
 
-    live = crawl("wh-live", make_http_fetcher(fetch_partitions=2))
-    fix = crawl("wh-dict", PythonFetcher(pages.get, fetch_partitions=2))
+    live = crawl("wh-live", make_http_fetcher())
+    fix = crawl("wh-dict", PythonFetcher(pages.get))
     assert live == fix
     log, _, docs = live
     fetched = {r[1]: r[4] for r in log}
@@ -221,7 +221,7 @@ def test_frontier_crawl_over_live_http(spark, tmp_path, server):
     fc = FrontierCrawler(
         spark,
         str(tmp_path / "wh-live"),
-        fetcher=make_http_fetcher(fetch_partitions=2),
+        fetcher=make_http_fetcher(),
         seeds=[host],
         ground_truth="privacy policy one",
         dictionary=frozenset(
@@ -298,13 +298,13 @@ def test_live_robots_parity_with_injected(spark, tmp_path, server):
 
     live = FrontierCrawler(
         spark, str(tmp_path / "wh-robots-live"),
-        fetcher=make_http_fetcher(fetch_partitions=2),
+        fetcher=make_http_fetcher(),
         robots_fetch_fn=http_get, **common,
     )
     live.run()
     injected = FrontierCrawler(
         spark, str(tmp_path / "wh-robots-inj"),
-        fetcher=make_http_fetcher(fetch_partitions=2),
+        fetcher=make_http_fetcher(),
         robots={host: ROBOTS_TXT}, **common,
     )
     injected.run()

@@ -155,6 +155,99 @@ def test_spans_table_matches_kernels(spark):
     assert n_exchanges(formatted_plan(spans_table(ex))) == 0
 
 
+_GATED_DOCS = [
+    ("d1", "<html><body><h1>Privacy Policy</h1><p>We collect data. "
+           "We share it with partners.</p><ul><li>cookies</li></ul>"
+           "<p>Contact us!</p></body></html>"),
+    ("d2", "<html><body><p>Short one.</p></body></html>"),
+    # fails the parse gate: 7 sentences of div text no span covers (> 5)
+    ("gate", "<html><body><div>One here. Two here. Three here. Four here. "
+             "Five here. Six here. Seven here.</div><p>Kept sentence.</p>"
+             "</body></html>"),
+]
+
+
+@pytest.fixture
+def gated_docs(spark, tmp_path):
+    """The documents as a parquet scan (the schema read runs here)."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(_GATED_DOCS, "doc_id string, html string") \
+        .coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_parse_tokenize_extracts_once(spark, gated_docs):
+    """parse_tokenize checkpoints its sentences lazily and derives the
+    rule counts from them: building it starts no Spark job, and the
+    rule_counts / corpus_hist plans hold neither the extraction UDF nor
+    a documents scan."""
+    from privacy_crawler_parser_tokenizer_spark.pipeline import parse_tokenize
+
+    sc = spark.sparkContext
+    group = "parse-tokenize-build"
+    sc.setJobGroup(group, "build parse_tokenize")
+    try:
+        out = parse_tokenize(gated_docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for name in ("rule_counts", "corpus_hist"):
+        p = formatted_plan(out[name])
+        assert "ArrowEvalPython" not in p and "Scan parquet" not in p, p
+
+
+def test_parse_tokenize_matches_uncheckpointed_dataflow(spark, gated_docs):
+    """The checkpointed sentences and the histogram derived from them
+    equal the uncheckpointed dataflow's rows, the gate-failing document
+    included, when corpus_hist is materialized first."""
+    from privacy_crawler_parser_tokenizer_spark.pipeline import (
+        corpus_rule_histogram,
+        extract_documents,
+        parse_tokenize,
+        rule_counts_table,
+        sentences_table,
+        spans_table,
+    )
+
+    def rows(df):
+        return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                      for r in df.collect())
+
+    out = parse_tokenize(gated_docs)
+    hist = rows(out["corpus_hist"])
+    sentences = rows(out["sentences"])
+
+    want = sentences_table(spans_table(extract_documents(gated_docs)))
+    assert sentences == rows(want)
+    assert hist == rows(corpus_rule_histogram(rule_counts_table(want)))
+    assert {r[0] for r in sentences} == {"d1", "d2"}
+
+
+def test_fetch_exchange_is_not_coalesced(spark):
+    """AQE coalesces a small-in-bytes exchange by bytes; the salted fetch
+    exchange carries an explicit count, one per task slot, so a 2,000-URL
+    wave keeps every partition (a count-less repartition(key) ran it in
+    one), and a one-URL tail round plans one task."""
+    from pyspark.sql import functions as F
+
+    from privacy_crawler_parser_tokenizer_spark.plans.frontier import (
+        _fetch_partitions,
+        _salt_by_host,
+    )
+
+    n_slots = spark.sparkContext.defaultParallelism
+    reqs = spark.createDataFrame(
+        [(f"http://h{i}.example/",) for i in range(2000)], "url string"
+    )
+    parts = (
+        _salt_by_host(reqs, 1, _fetch_partitions(spark, 2000))
+        .groupBy(F.spark_partition_id().alias("p")).count().collect()
+    )
+    assert len(parts) == n_slots, parts
+    assert min(r["count"] for r in parts) > 0.8 * 2000 / n_slots, parts
+    assert _fetch_partitions(spark, 1) == 1
+
+
 def test_verify_scores_matches_kernel(spark):
     """The relational closed-form TF-IDF cosine == the Python kernel
     (which replicates sklearn pair-fit numerics) on ASCII docs."""
