@@ -5,7 +5,8 @@ pipeline (rmjacobson/privacy-crawler-parser-tokenizer): a distributed
 URL-frontier + fetch scheduler, HTML->span extraction, sentence
 tokenization + quality rules, TF-IDF policy verification, corpus
 statistics, and large-scale training-data operators (dedup, similarity
-search, multimodal plumbing, text analysis).
+search, text analysis).  Media stays as spans (``kind="media"`` with a
+``media_ref``) inside the interleaved text+media documents.
 
 Layout:
   core/       pure-Python kernels, shared verbatim by the sequential

@@ -674,7 +674,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # more training-data operators: token counting, SimHash, sessionization,
-# multimodal metadata, embedding near-dup / IVF / sign-LSH ANN
+# embedding near-dup / IVF / sign-LSH ANN
 # ---------------------------------------------------------------------------
 
 _TOKEN_RE = r"\p{L}+|\p{N}|[^\s\p{L}\p{N}]"
@@ -1135,78 +1135,6 @@ def q_sessionize(spark, sf_dir):
         e.withColumn("_new", news)
         .withColumn("session_id", F.sum("_new").over(w).cast("long"))
         .select("event_id", "user_id", "session_id")
-    )
-
-
-@query(
-    "media_frame_roundtrip",
-    """
-    SELECT d.doc_id,
-           CAST(gs.i AS BIGINT) AS frame_index,
-           d.nf AS n_frames,
-           d.w AS width, d.h AS height,
-           CAST(1 AS BIGINT) AS ok_i
-    FROM (SELECT doc_id,
-                 CAST(doc_id % 3 + 1 AS BIGINT) AS nf,
-                 CAST(doc_id % 30 + 1 AS BIGINT) AS w,
-                 CAST(doc_id % 20 + 2 AS BIGINT) AS h
-          FROM documents) d
-    JOIN (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2) gs
-      ON gs.i < d.nf
-    """,
-)
-def q_media_frame_roundtrip(spark, sf_dir):
-    """REAL multimodal codec round-trip, oracle-gated: per document a
-    real payload is ENCODED (doc_id%3: 1-frame PNG / 2-frame animated
-    WebP (VP8X/ANIM/ANMF + VP8L) / 3-frame APNG) with geometry and
-    frame count that are pure doc_id arithmetic, then frame-sampled
-    through ``frame_sample_media`` — full pixel decode (core/png.py,
-    core/apng.py, core/webp.py), compositing, and PNG re-encode run
-    inside the engine, and the emitted frame geometry/counts must
-    hash-match the arithmetic DuckDB oracle.  Replaces the byte-length
-    `media_meta` plumbing demo (its schema path is subsumed here).
-
-    Scale shape: one mapInPandas encode stage + the standard
-    frame-sample stage — map-only, no shuffle; bytes stay
-    executor-side."""
-    import numpy as np
-
-    from .core import apng, png, webp
-    from .functions import multimodal as mm
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                nf = did % 3 + 1
-                w, h = did % 30 + 1, did % 20 + 2
-                frames = np.stack([
-                    np.full((h, w, 3), (did * 37 + fi * 11) % 256, np.uint8)
-                    for fi in range(nf)
-                ])
-                if nf == 1:
-                    fmt, data = "png", png.encode_png(frames[0])
-                elif nf == 2:
-                    fmt, data = "webp", webp.encode_webp_anim(frames)
-                else:
-                    fmt, data = "apng", apng.encode_apng(frames)
-                rows.append((str(did), f"media://{did}", fmt, data))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_ref", "fmt", "content"]
-            )
-
-    media = docs.mapInPandas(make, schema=mm.MEDIA_SCHEMA)
-    sampled = mm.frame_sample_media(media)
-    return sampled.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("frame_index").cast("long").alias("frame_index"),
-        F.col("n_frames").cast("long").alias("n_frames"),
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("ok").cast("long").alias("ok_i"),
     )
 
 

@@ -278,30 +278,6 @@ def exact_dedup_stream(docs: DataFrame, watermark: str | None = "10 minutes",
     )
 
 
-def read_media_stream(spark: SparkSession, src_dir: str,
-                      max_files: int | None = None) -> DataFrame:
-    """Streaming source over an arriving media directory (the crawl
-    keeps dropping parquet batches of fetched binary payloads)."""
-    from ..functions.multimodal import MEDIA_SCHEMA
-
-    return (
-        spark.readStream.schema(MEDIA_SCHEMA)
-        .option("maxFilesPerTrigger", max_files or 16)
-        .parquet(src_dir)
-    )
-
-
-def media_meta_stream(media: DataFrame) -> DataFrame:
-    """Streaming multimodal ingestion: the SAME ``decode_media``
-    mapInPandas stage runs on the unbounded frame — real codec
-    metadata (PNG/JPEG incl. progressive/GIF/WebP/WAV/AVI) per item as
-    batches arrive, adversarial bytes labeled ok=false, never a task
-    failure (codec totality guards).  Stateless map -> append mode."""
-    from ..functions.multimodal import decode_media
-
-    return decode_media(media)
-
-
 def crawl_log_stream(spark: SparkSession, warehouse_dir: str) -> DataFrame:
     """Streaming source over the frontier's crawl_log delta snapshots:
     each committed round drops new parquet files under

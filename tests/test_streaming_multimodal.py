@@ -1,9 +1,9 @@
-"""Streaming jobs (batch-equivalence) + multimodal plumbing tests."""
+"""Streaming jobs: batch equivalence of the sentence, dedup, LSH and
+sessionize streams, the crawl_log monitor, and the CSV sinks."""
 
 import pandas as pd
 import pytest
 
-from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
 from privacy_crawler_parser_tokenizer_spark.pipeline import parse_tokenize
 from privacy_crawler_parser_tokenizer_spark.streaming import jobs
 
@@ -97,44 +97,6 @@ def test_stateful_sessionize_matches_batch(spark):
     assert got == {
         (1, 100, 1), (1, 101, 1), (1, 102, 2), (2, 200, 1), (2, 201, 1),
     }
-
-
-def test_multimodal_decode_and_features(spark):
-    docs = spark.createDataFrame(
-        [(1, "hello media world"), (2, ""), (3, "payload three")],
-        "doc_id long, text string",
-    )
-    media = mm.synthesize_media(docs)
-    assert media.schema.simpleString() == (
-        "struct<doc_id:string,media_ref:string,fmt:string,content:binary>"
-    )
-
-    decoded = mm.decode_media(media, n_partitions=2).collect()
-    assert len(decoded) == 3
-    for r in decoded:
-        assert r.width >= 16 and r.height >= 16 and 1 <= r.n_channels <= 4
-        assert not r.ok  # stub codec path (no Pillow in container)
-    by_id = {r.doc_id: r for r in decoded}
-    assert by_id["1"].n_bytes == len("hello media world")
-    assert by_id["2"].n_bytes == 0
-
-    # determinism: same bytes -> same fake dimensions
-    again = {r.doc_id: (r.width, r.height) for r in mm.decode_media(media).collect()}
-    assert again == {r.doc_id: (r.width, r.height) for r in decoded}
-
-    feats = mm.media_features(media).collect()
-    assert all(len(r.feature) == mm.FEATURE_DIM for r in feats)
-    s = sum(by_id_f := feats[0].feature)
-    assert abs(s - 1.0) < 1e-5  # histogram normalized
-
-
-def test_frame_sample_offsets(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.range(1).select(
-        mm.frame_sample_offsets(F.lit(1000), n_frames=4).alias("offs")
-    )
-    assert df.collect()[0].offs == [0, 250, 500, 750]
 
 
 def test_crawl_log_streaming_monitor(spark, tmp_path):
@@ -316,29 +278,6 @@ def test_streaming_lsh_candidates_match_batch(spark, tmp_path):
     assert (1, 2) in got and (2, 4) in got       # real near-dups surfaced
 
 
-def test_resize_media_geometry(spark):
-    """Bounded resize: aspect preserved, never upscaled, payload sized
-    to the new geometry (the codec-independent plumbing contract)."""
-    docs = spark.createDataFrame(
-        [(i, f"payload text {i} " * (i + 1)) for i in range(12)],
-        "doc_id long, text string",
-    )
-    media = mm.synthesize_media(docs)
-    decoded = {r.media_ref: r for r in mm.decode_media(media).collect()}
-    resized = {r.media_ref: r for r in mm.resize_media(media, max_side=64).collect()}
-    assert set(resized) == set(decoded)
-    for ref, r in resized.items():
-        d = decoded[ref]
-        assert max(r.width, r.height) <= 64
-        assert 0 < r.scale <= 1.0
-        if max(d.width, d.height) <= 64:
-            assert (r.width, r.height) == (d.width, d.height)  # no upscale
-        # aspect preserved within integer rounding
-        assert abs(r.width - d.width * r.scale) <= 1
-        assert abs(r.height - d.height * r.scale) <= 1
-        assert len(r.content) == r.width * r.height
-
-
 def _write_doc_files(spark, d, groups):
     """One parquet file per group => with max_files=1, one microbatch
     per group."""
@@ -445,61 +384,3 @@ def test_streaming_lsh_ttl_evicts_stale_buckets(spark, tmp_path):
     got = {(r.a, r.b) for r in spark.table("lsh_ttl_short").collect()}
     assert (1, 2) in got                      # same-batch pair: unaffected
     assert (1, 4) not in got and (2, 4) not in got  # evicted before 4 arrived
-
-
-def test_media_features_real_image_path(spark):
-    import numpy as np
-
-    from privacy_crawler_parser_tokenizer_spark.core import png, webp
-
-    img = np.zeros((10, 20, 3), np.uint8)   # half black, half white rows
-    img[5:] = 255
-    rows = [
-        ("p", "media://p", "png", bytearray(png.encode_png(img))),
-        ("w", "media://w", "webp", bytearray(webp.encode_webp(img))),
-        ("x", "media://x", "txt", bytearray(b"not an image at all")),
-    ]
-    media = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-    feats = {r.doc_id: r.feature for r in mm.media_features(media).collect()}
-    for key in ("p", "w"):  # same pixels -> identical REAL features
-        f = feats[key]
-        assert abs(f[0] - float(np.log1p(200.0))) < 1e-5   # log-area
-        assert abs(f[1] - 2.0) < 1e-6                      # aspect w/h
-        assert abs(f[2] - 0.5) < 1e-3                      # mean luminance
-        hist = f[4:]
-        assert abs(hist[0] - 0.5) < 1e-6 and abs(hist[-1] - 0.5) < 1e-6
-        assert sum(hist[1:-1]) == 0.0
-    assert feats["p"] == feats["w"]
-    assert abs(sum(feats["x"]) - 1.0) < 1e-5  # fallback stays byte-histogram
-
-
-def test_media_meta_stream_incremental(spark, tmp_path):
-    import numpy as np
-
-    from privacy_crawler_parser_tokenizer_spark.core import png, webp
-    from privacy_crawler_parser_tokenizer_spark.streaming import jobs
-
-    src = str(tmp_path / "media_in")
-    img1 = np.full((6, 9, 3), 40, np.uint8)
-    spark.createDataFrame(
-        [("a", "m://a", "png", bytearray(png.encode_png(img1)))],
-        schema=mm.MEDIA_SCHEMA,
-    ).write.mode("append").parquet(src)
-    stream = jobs.media_meta_stream(jobs.read_media_stream(spark, src))
-    jobs.run_to_memory(stream, "media_meta_stream")
-    got = {r.doc_id: r for r in spark.sql(
-        "SELECT * FROM media_meta_stream").collect()}
-    assert got["a"].width == 9 and got["a"].height == 6 and got["a"].ok
-    # second arriving wave: a lossless webp + adversarial bytes
-    img2 = np.full((4, 5, 3), 90, np.uint8)
-    spark.createDataFrame(
-        [("b", "m://b", "webp", bytearray(webp.encode_webp(img2))),
-         ("c", "m://c", "bin", bytearray(b"\x13\x37" * 40))],
-        schema=mm.MEDIA_SCHEMA,
-    ).write.mode("append").parquet(src)
-    jobs.run_to_memory(stream, "media_meta_stream")
-    got = {r.doc_id: r for r in spark.sql(
-        "SELECT * FROM media_meta_stream").collect()}
-    assert len(got) == 3
-    assert got["b"].width == 5 and got["b"].ok
-    assert not got["c"].ok  # labeled ok=false; the stream never fails
