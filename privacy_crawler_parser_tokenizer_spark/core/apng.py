@@ -1,8 +1,7 @@
 """Pure-stdlib APNG (animated PNG) codec over ``core.png``.
 
-Retires the last byte-window frame-sampling stub for a format this
-container can genuinely decode: APNG is plain PNG plus three chunks
-(public spec, now part of the W3C PNG 3rd edition) —
+APNG is plain PNG plus three chunks (public spec, now part of the W3C
+PNG 3rd edition) —
 
   * ``acTL``  animation control: num_frames, num_plays;
   * ``fcTL``  per-frame control: sequence, region (w, h, x, y), delay,
@@ -15,10 +14,9 @@ container can genuinely decode: APNG is plain PNG plus three chunks
 dispose/blend rules and returns the rendered animation as
 ``(n_frames, height, width, 4)`` RGBA — the same frames a browser
 shows.  ``encode_apng`` writes full-canvas SOURCE/NONE frames (the
-round-trip writer for tests and the frame-sample sink).
+round-trip writer for tests).
 
-Kernel-module rules apply: plain Python + numpy, shared verbatim by
-tests and the Arrow UDFs — no Spark imports.
+Kernel-module rules apply: plain Python + numpy, no Spark imports.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Pure-stdlib AVI (RIFF) video container codec: decode / encode / metadata.
 
-Retires the last fake-video boundary: `frame_sample_media` in
-functions/multimodal.py can now sample REAL frames from a real video
-container.  Two in-sandbox-decodable codecs are supported:
+Decodes REAL frames from a real video container.  Two
+in-sandbox-decodable codecs are supported:
 
 - **MJPEG** (`'00dc'` chunks, fourcc ``MJPG``): each frame is a baseline
   JPEG, decoded by the existing pure-stdlib DCT path in ``core/jpeg.py``.
@@ -17,8 +16,7 @@ chunks (word-aligned, optional 'rec ' sub-lists) → optional idx1
 (skipped).  Non-video streams (e.g. an audio 'auds' strl) are skipped;
 the first 'vids' stream is decoded.  Anything structurally invalid, or
 a video codec outside the two above (H.264 etc. need licensed entropy
-decoders), raises ``AviError`` — callers surface an honest ok=false
-rather than fake frames.
+decoders), raises ``AviError`` rather than returning fake frames.
 
 Encoder: writes a spec-valid single-video-stream AVI (avih + strh/strf
 + movi + idx1) in either codec, used by round-trip tests; container

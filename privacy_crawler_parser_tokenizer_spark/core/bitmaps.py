@@ -1,9 +1,6 @@
 """Pure-stdlib BMP and PPM/PGM codecs (decode / encode / metadata).
 
-Companion to ``core/png.py``: two more REAL formats for the multimodal
-operators so the labeled ``FakeCodec`` stand-in shrinks to formats that
-genuinely need an external library (jpeg/webp/audio/video).  Both are
-spec-simple:
+Companion to ``core/png.py``.  Both formats are spec-simple:
 
 * BMP (Windows V3+ ``BITMAPINFOHEADER``): uncompressed ``BI_RGB`` at
   8 (grayscale-palette), 24 (BGR) and 32 (BGRA) bits per pixel,
@@ -11,9 +8,8 @@ spec-simple:
 * PPM/PGM (netpbm ``P6``/``P5``): ASCII header (with ``#`` comments),
   maxval <= 255, raw binary samples.
 
-Anything else raises ``BitmapError`` and callers fall back to the
-labeled stub.  Kernel-module rules apply: plain Python + numpy, shared
-verbatim by tests and the Arrow UDFs — no Spark imports.
+Anything else raises ``BitmapError``.  Kernel-module rules apply:
+plain Python + numpy, no Spark imports.
 """
 
 from __future__ import annotations

@@ -1,11 +1,7 @@
 """Pure-stdlib GIF (87a/89a) codec: decode / encode / frame metadata.
 
-GIF is the one real multi-frame animation container expressible without
-external libraries (LZW + palettes, no DCT, no entropy ranges), so it
-carries the engine's REAL video-ish path: `frame_sample_media` in
-functions/multimodal.py decodes animated GIFs with this module and
-samples genuinely decoded frames, rather than the byte-offset stub the
-remaining video formats keep.
+GIF is a real multi-frame animation container expressible without
+external libraries (LZW + palettes, no DCT, no entropy ranges).
 
 Supported: GIF87a/GIF89a, global + local color tables, interlaced
 images, graphic-control extensions (transparency, disposal methods
@@ -15,8 +11,7 @@ images, graphic-control extensions (transparency, disposal methods
 canvas).  Anything structurally invalid raises ``GifError``.
 
 Encoder: GIF89a with one global color table built from the frames'
-unique colors (≤256 or ``GifError`` — the engine only re-encodes
-decoded GIF frames, which are palette-bounded by construction).
+unique colors (≤256 or ``GifError``).
 
 Kernel-module rules apply: plain Python + numpy, no Spark imports.
 """

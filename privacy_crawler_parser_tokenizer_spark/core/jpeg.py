@@ -1,10 +1,7 @@
 """Pure-stdlib baseline JPEG codec (decode / encode / metadata).
 
-Third real image format for the multimodal operators (after
-``core/png.py`` and ``core/bitmaps.py``): baseline sequential DCT JPEG
-(ITU-T T.81 / JFIF), implemented from the public spec so the labeled
-``FakeCodec`` stand-in shrinks to formats that genuinely need an
-external library (webp/audio/video).
+Baseline sequential DCT JPEG (ITU-T T.81 / JFIF), implemented from
+the public spec.
 
 Decoder supports: SOF0 (baseline), SOF1, and PROGRESSIVE SOF2 —
 multi-scan spectral selection + successive approximation per T.81
@@ -13,7 +10,7 @@ transforms) with coefficients accumulated across scans; 8-bit
 samples, 1- or 3-component (grayscale / YCbCr with any sampling
 factors up to 4), Huffman and quant tables read from the stream,
 restart intervals, byte stuffing.  Anything else raises
-``JpegError`` and callers fall back to the labeled stub.
+``JpegError``.
 
 Encoders write: baseline 4:4:4 (or single-component grayscale) via
 ``encode_jpeg``, and progressive SOF2 via ``encode_jpeg_progressive``
@@ -27,8 +24,7 @@ tests assert.
 The 2-D DCT uses the orthonormal DCT-II matrix (F = C f C^T,
 f = C^T F C); tests verify it against a brute-force cosine sum.
 
-Kernel-module rules apply: plain Python + numpy, shared verbatim by
-tests and the Arrow UDFs — no Spark imports.
+Kernel-module rules apply: plain Python + numpy, no Spark imports.
 """
 
 from __future__ import annotations

@@ -1,19 +1,15 @@
 """Pure-stdlib PNG codec (decode / encode / nearest-neighbor resize).
 
-No Pillow exists in this container, but PNG (RFC 2083 / ISO 15948) is
-just zlib-deflate over per-scanline-filtered rows — small enough to
-implement from the public spec so the multimodal operators
-(`functions/multimodal.py`) can verify REAL decoded dimensions, channel
-counts and pixel bytes for at least one real format instead of the
-FakeCodec stand-in.
+PNG (RFC 2083 / ISO 15948) is just zlib-deflate over
+per-scanline-filtered rows — small enough to implement from the public
+spec without Pillow.
 
 Supported: bit depth 8, color types 0 (gray), 2 (RGB), 3 (palette ->
 expanded to RGB), 4 (gray+alpha), 6 (RGBA), all five scanline filters,
-non-interlaced.  Anything else raises ``PngError`` and callers fall
-back to the labeled stub.
+non-interlaced.  Anything else raises ``PngError``.
 
-Kernel-module rules apply: this file is plain Python + numpy, shared
-verbatim by tests and the Arrow UDFs — no Spark imports.
+Kernel-module rules apply: this file is plain Python + numpy, no Spark
+imports.
 """
 
 from __future__ import annotations

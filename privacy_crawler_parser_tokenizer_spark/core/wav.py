@@ -1,8 +1,6 @@
 """Pure-stdlib WAV (RIFF PCM) codec: decode / encode / metadata.
 
-Extends the real-codec set (`png.py`, `bitmaps.py`, `jpeg.py`) to the
-audio modality so WAV payloads in the media table report true sample
-counts / channel counts / rates instead of the ``FakeCodec`` stand-in.
+Reports true sample counts / channel counts / rates of WAV payloads.
 
 Supported: RIFF/WAVE with a ``fmt `` chunk of format 1 (integer PCM,
 8- or 16-bit) or 3 (IEEE float32), any channel count, chunk order

@@ -1,7 +1,7 @@
 """Pure-stdlib WebP: container metadata + REAL lossless (VP8L) decode.
 
 Geometry is plain header arithmetic in all three chunk variants, so
-``decode_media`` reports REAL dimensions/alpha for every webp:
+``webp_meta`` reports REAL dimensions/alpha for every webp:
 
 - ``VP8 `` (lossy): 3-byte frame tag, keyframe start code 9D 01 2A,
   then 14-bit width/height (little-endian u16, low 14 bits).
@@ -21,8 +21,8 @@ groups via a recursively coded entropy image, the color cache
 transforms: 14-mode predictor, cross-channel color transform,
 subtract-green, and color-indexing with sub-byte packed indices.
 ``encode_vp8l`` is a deliberately small independent writer (literals +
-optional run-length LZ77 / color cache / subtract-green) used by
-``resize_media`` re-encode and by the round-trip tests; the decoder is
+optional run-length LZ77 / color cache / subtract-green) used by the
+round-trip tests; the decoder is
 additionally verified against hand-packed bitstreams built by the test
 suite, not by this module.  Lossy VP8 pixel decode (boolean range
 coder + loop filter) stays out of scope and raises ``WebpError``.

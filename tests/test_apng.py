@@ -9,7 +9,7 @@ import zlib
 import numpy as np
 import pytest
 
-from privacy_crawler_parser_tokenizer_spark.core import apng, gif, png
+from privacy_crawler_parser_tokenizer_spark.core import png
 from privacy_crawler_parser_tokenizer_spark.core.apng import (
     ApngError,
     apng_meta,
@@ -186,28 +186,3 @@ def test_frame_out_of_bounds_rejected():
 
 
 # ------------------------------------------------- spark-side sampling ----
-
-
-def test_frame_sample_media_real_apng(spark):
-    import privacy_crawler_parser_tokenizer_spark.functions.multimodal as mm
-
-    rng = np.random.default_rng(12)
-    frames = rng.integers(0, 6, size=(9, 5, 7, 3), dtype=np.uint8) * 40
-    payload = encode_apng(frames)
-    assert gif.gif_meta.__name__  # sanity: module imported
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "apng", bytearray(payload)),
-         ("d2", "media://d2", "webp", bytearray(b"\x07\x08" * 99))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    out = mm.frame_sample_media(media, n_frames=4).collect()
-    real = sorted((r for r in out if r["doc_id"] == "d1"),
-                  key=lambda r: r["frame_index"])
-    assert [r["frame_index"] for r in real] == [0, 3, 5, 8]
-    for r in real:
-        assert r["ok"] and (r["width"], r["height"]) == (7, 5)
-        assert r["n_frames"] == 9
-        px = png.decode_png(bytes(r["content"]))
-        assert (px[:, :, :3] == frames[r["frame_index"]]).all()
-    stub = [r for r in out if r["doc_id"] == "d2"]
-    assert len(stub) == 1 and not stub[0]["ok"] and stub[0]["content"] is None

@@ -1,5 +1,4 @@
-"""Pure-stdlib AVI codec tests (core/avi.py) and the real video
-frame-sampling path in functions/multimodal.py.
+"""Pure-stdlib AVI codec tests (core/avi.py).
 
 The container parser is verified against AVIs hand-assembled BY THE
 TEST (independent struct-packed writer, including a 'rec ' grouped
@@ -13,8 +12,7 @@ import struct
 import numpy as np
 import pytest
 
-from privacy_crawler_parser_tokenizer_spark.core import avi, jpeg, png
-from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
+from privacy_crawler_parser_tokenizer_spark.core import avi, jpeg
 
 
 def _chunk(fcc, payload):
@@ -161,36 +159,3 @@ def test_geometry_mismatch_rejected():
 
 
 # ------------------------------------------------- spark-side sampling ----
-
-
-def test_frame_sample_media_real_avi(spark):
-    rng = np.random.default_rng(13)
-    frames = rng.integers(0, 256, size=(7, 6, 8, 3), dtype=np.uint8)
-    payload = avi.encode_avi(frames, codec="rgb")
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "avi", bytearray(payload)),
-         ("d2", "media://d2", "webp", bytearray(b"\x05\x06" * 80))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    out = mm.frame_sample_media(media, n_frames=4).collect()
-    real = sorted((r for r in out if r["doc_id"] == "d1"),
-                  key=lambda r: r["frame_index"])
-    assert [r["frame_index"] for r in real] == [0, 2, 4, 6]
-    for r in real:
-        assert r["ok"] and (r["width"], r["height"]) == (8, 6)
-        assert r["n_frames"] == 7
-        # sampled content is a REAL PNG of the exact decoded frame
-        px = png.decode_png(bytes(r["content"]))
-        assert (px == frames[r["frame_index"]]).all()
-    stub = [r for r in out if r["doc_id"] == "d2"]
-    assert len(stub) == 1 and not stub[0]["ok"] and stub[0]["content"] is None
-
-
-def test_decode_media_reports_avi_geometry(spark):
-    payload = avi.encode_avi(np.zeros((2, 11, 17, 3), np.uint8), codec="rgb")
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "avi", bytearray(payload))], schema=mm.MEDIA_SCHEMA
-    )
-    row = mm.decode_media(media).collect()[0]
-    assert (row["width"], row["height"], row["n_channels"]) == (17, 11, 3)
-    assert row["ok"]

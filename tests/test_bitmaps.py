@@ -1,10 +1,8 @@
-"""BMP + PPM/PGM codec tests (core/bitmaps.py) and their multimodal
-wiring.
+"""BMP + PPM/PGM codec tests (core/bitmaps.py).
 
 Decode is verified against files built BY THE TEST (hand-assembled
 headers, rows padded/flipped per the spec — a separate code path from
-the encoder), plus encode->decode roundtrips; the Spark tests pin that
-real BMP/PPM payloads no longer fall to FakeCodec.
+the encoder), plus encode->decode roundtrips.
 """
 
 import struct
@@ -117,51 +115,3 @@ def test_error_paths():
     hdr = struct.pack("<2sIHHI", b"BM", 54, 0, 0, 54)
     with pytest.raises(bm.BitmapError):
         bm.bmp_meta(hdr + info)
-
-
-def test_decode_media_real_bmp_ppm_dims(spark):
-    """Spark path: BMP and PPM payloads decode to true dimensions with
-    ok=True (FakeCodec only for formats with no codec)."""
-    from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
-
-    rng = np.random.default_rng(5)
-    bmp = bm.encode_bmp(_rand(rng, 11, 4, 3))
-    ppm = bm.encode_pnm(_rand(rng, 2, 30, 1))
-    media = spark.createDataFrame(
-        [("a", "media://a", "bmp", bytearray(bmp)),
-         ("b", "media://b", "pgm", bytearray(ppm)),
-         ("c", "media://c", "jpeg", bytearray(b"\xff\xd8 not decodable"))],
-        mm.MEDIA_SCHEMA,
-    )
-    got = {r.media_ref: r for r in mm.decode_media(media).collect()}
-    assert (got["media://a"].width, got["media://a"].height,
-            got["media://a"].n_channels, got["media://a"].ok) == (4, 11, 3, True)
-    assert (got["media://b"].width, got["media://b"].height,
-            got["media://b"].n_channels, got["media://b"].ok) == (30, 2, 1, True)
-    assert not got["media://c"].ok
-
-
-def test_resize_media_real_bmp_ppm_pixels(spark):
-    """resize_media re-encodes BMP/PPM in their own format with truly
-    resampled pixels (round-trips through the matching decoder)."""
-    from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
-
-    rng = np.random.default_rng(6)
-    src_bmp = _rand(rng, 80, 20, 3)
-    src_ppm = _rand(rng, 8, 8, 1)
-    media = spark.createDataFrame(
-        [("a", "media://a", "bmp", bytearray(bm.encode_bmp(src_bmp))),
-         ("b", "media://b", "pgm", bytearray(bm.encode_pnm(src_ppm)))],
-        mm.MEDIA_SCHEMA,
-    )
-    got = {r.media_ref: r for r in mm.resize_media(media, max_side=40).collect()}
-
-    from privacy_crawler_parser_tokenizer_spark.core import png
-
-    a = got["media://a"]
-    assert (a.width, a.height) == (10, 40)
-    assert np.array_equal(bm.decode_bmp(bytes(a.content)),
-                          png.resize_nearest(src_bmp, 10, 40))
-    b = got["media://b"]                       # never upscaled
-    assert (b.width, b.height) == (8, 8)
-    assert np.array_equal(bm.decode_pnm(bytes(b.content)), src_ppm)

@@ -1,7 +1,7 @@
 """Codec totality + DoS guards: every pure-stdlib decoder must be TOTAL
 on adversarial bytes — raise ONLY its own error class (never IndexError
-/ struct.error / bare numpy ValueError, which would kill a mapInPandas
-executor task), and must refuse implausible header geometry instead of
+/ struct.error / bare numpy ValueError, which would kill an executor
+task), and must refuse implausible header geometry instead of
 allocating gigabytes from attacker-controlled u16/u24 dimension fields
 (the canvas for a 65535x65535 GIF is ~12 GB; a VP8X canvas can claim
 16M x 16M).  Found by fuzzing: decode_gif/decode_jpeg/decode_vp8l and
@@ -79,51 +79,6 @@ def test_caps_leave_real_media_untouched():
     assert gif.decode_gif(gif.encode_gif(img)).shape == (1, 64, 64, 3)
     assert jpeg.decode_jpeg(jpeg.encode_jpeg(img)).shape == (64, 64, 3)
     assert webp.decode_webp(webp.encode_webp(img)).shape == (64, 64, 3)
-
-
-def test_resize_media_survives_multi_palette_gif(spark):
-    # A legal 2-frame GIF via two local color tables can composite to
-    # >256 unique colors; gif.encode_gif then refuses the re-encode.
-    # resize_media must fall through to the labeled stub, never fail
-    # the task.  Build the GIF by hand (encode_gif can't write it).
-    import struct as _s
-
-    from privacy_crawler_parser_tokenizer_spark.functions import (
-        multimodal as mm,
-    )
-
-    w = h = 16
-    out = bytearray(b"GIF89a")
-    out += _s.pack("<HHBBB", w, h, 0, 0, 0)  # no global color table
-
-    def frame(base):
-        # 256-color local palette, each pixel a distinct index
-        buf = bytearray(b"\x2c" + _s.pack("<HHHHB", 0, 0, w, h, 0x87))
-        pal = bytearray()
-        for i in range(256):
-            pal += bytes(((base + i) % 256, i, (base * 7) % 256))
-        buf[-1:] = bytes([0x80 | 0x07])  # local table, 256 entries
-        buf += pal
-        idx = bytes(range(256))
-        lzw = gif.lzw_encode(8, idx)
-        buf.append(8)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            buf.append(len(chunk))
-            buf += chunk
-        buf.append(0)
-        return bytes(buf)
-
-    out += frame(0) + frame(100) + b"\x3b"
-    payload = bytes(out)
-    assert len(np.unique(
-        gif.decode_gif(payload).reshape(-1, 3), axis=0)) > 256
-    media = spark.createDataFrame(
-        [("g", "m://g", "gif", bytearray(payload))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = mm.resize_media(media, max_side=8).collect()  # must not raise
-    assert len(rows) == 1 and rows[0].width == 8
 
 
 def test_animation_pixel_budget_caps_total_frames():

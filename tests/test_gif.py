@@ -1,5 +1,4 @@
-"""Pure-stdlib GIF codec tests (core/gif.py) and the real multi-frame
-sampling / audio-feature paths in functions/multimodal.py.
+"""Pure-stdlib GIF codec tests (core/gif.py).
 
 The encoder writes non-interlaced full-frame images, so interlace,
 transparency, disposal compositing and sub-rect frames are verified
@@ -15,8 +14,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from privacy_crawler_parser_tokenizer_spark.core import gif, png, wav
-from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
+from privacy_crawler_parser_tokenizer_spark.core import gif
 
 _PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
@@ -222,91 +220,3 @@ def test_malformed_gifs_raise():
     data = _build_gif(3, 3, _GCT4, [{"idx": np.zeros((3, 3), np.uint8), "left": 2}])
     with pytest.raises(gif.GifError):
         gif.decode_gif(data)
-
-
-# ------------------------------------------------------ Spark-side paths ----
-
-
-def test_decode_media_reports_real_gif_geometry(spark):
-    rng = np.random.default_rng(5)
-    frames = rng.integers(0, 4, size=(3, 21, 33, 3), dtype=np.uint8) * 70
-    payload = gif.encode_gif(frames)
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "gif", bytearray(payload)),
-         ("d2", "media://d2", "webp", bytearray(b"not-a-real-image"))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = {r["doc_id"]: r for r in mm.decode_media(media).collect()}
-    assert (rows["d1"]["width"], rows["d1"]["height"]) == (33, 21)
-    assert rows["d1"]["n_channels"] == 3 and rows["d1"]["ok"]
-    assert not rows["d2"]["ok"]
-
-
-def test_frame_sample_media_real_gif_frames(spark):
-    rng = np.random.default_rng(11)
-    frames = rng.integers(0, 5, size=(10, 8, 12, 3), dtype=np.uint8) * 40
-    payload = gif.encode_gif(frames)
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "gif", bytearray(payload)),
-         ("d2", "media://d2", "webp", bytearray(b"\x01\x02\x03\x04" * 64))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    out = mm.frame_sample_media(media, n_frames=4).collect()
-    real = sorted((r for r in out if r["doc_id"] == "d1"),
-                  key=lambda r: r["frame_index"])
-    assert [r["frame_index"] for r in real] == [0, 3, 6, 9]
-    for r in real:
-        assert r["ok"] and (r["width"], r["height"]) == (12, 8)
-        assert r["n_frames"] == 10
-        # sampled content is a REAL PNG of the composited frame
-        px = png.decode_png(bytes(r["content"]))
-        assert (px == frames[r["frame_index"]]).all()
-    stub = [r for r in out if r["doc_id"] == "d2"]
-    # undecodable format: exactly one labeled row, no fake frame bytes
-    assert len(stub) == 1 and not stub[0]["ok"]
-    assert stub[0]["content"] is None and stub[0]["n_frames"] == 0
-
-
-def test_frame_sample_still_image_single_row(spark):
-    payload = gif.encode_gif(np.zeros((5, 5), dtype=np.uint8))
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "gif", bytearray(payload))], schema=mm.MEDIA_SCHEMA
-    )
-    out = mm.frame_sample_media(media, n_frames=4).collect()
-    assert len(out) == 1 and out[0]["n_frames"] == 1 and out[0]["ok"]
-
-
-# ---------------------------------------------------- real audio features ----
-
-
-def _sine_wav(freq=440.0, rate=8000, seconds=0.5, amp=16000):
-    t = np.arange(int(rate * seconds)) / rate
-    pcm = (amp * np.sin(2 * np.pi * freq * t)).astype(np.int16)
-    return wav.encode_wav(pcm, rate)
-
-
-def test_wav_features_real_values():
-    feats = mm._wav_features(_sine_wav(), dim=16)
-    assert feats.shape == (16,) and feats.dtype == np.float32
-    duration, rms, peak, zcr = feats[:4]
-    assert abs(duration - 0.5) < 1e-6
-    assert abs(rms - (16000 / 32768) / np.sqrt(2)) < 1e-3
-    assert abs(peak - 16000 / 32768) < 1e-3
-    assert abs(zcr - 2 * 440 / 8000) < 0.01
-    bands = feats[4:]
-    # 12 bands over the 4 kHz Nyquist span = ~333 Hz each: 440 Hz -> band 1
-    assert bands[1] > 0.95 and abs(bands.sum() - 1.0) < 1e-3
-
-
-def test_media_features_wav_vs_fallback(spark):
-    payload = _sine_wav()
-    media = spark.createDataFrame(
-        [("a1", "media://a1", "wav", bytearray(payload)),
-         ("d1", "media://d1", "webp", bytearray(b"plain bytes"))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = {r["doc_id"]: r["feature"] for r in mm.media_features(media).collect()}
-    assert np.allclose(rows["a1"], mm._wav_features(payload, 16), atol=1e-6)
-    assert np.allclose(
-        rows["d1"], mm.FakeCodec.features(b"plain bytes", 16), atol=1e-6
-    )

@@ -1,4 +1,4 @@
-"""Baseline JPEG codec tests (core/jpeg.py) and multimodal wiring.
+"""Baseline JPEG codec tests (core/jpeg.py).
 
 Verification strategy (no reference codec in this container):
 * the 2-D DCT is checked against a brute-force four-loop cosine sum
@@ -245,47 +245,6 @@ def test_decode_420_chroma_upsampling():
     b = 128 + 1.772 * (180 - 128)
     assert abs(out[:, :, 0].mean() - r) < 1.5
     assert abs(out[:, :, 2].mean() - b) < 1.5
-
-
-# ------------------------------------------------------- Spark wiring
-
-
-def test_decode_media_real_jpeg_dims(spark):
-    from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
-
-    rng = np.random.default_rng(13)
-    px = _smooth(rng, 24, 10, 3)
-    media = spark.createDataFrame(
-        [("a", "media://a", "jpeg", bytearray(J.encode_jpeg(px))),
-         ("b", "media://b", "webp", bytearray(b"RIFF....WEBP"))],
-        mm.MEDIA_SCHEMA,
-    )
-    got = {r.media_ref: r for r in mm.decode_media(media).collect()}
-    assert (got["media://a"].width, got["media://a"].height,
-            got["media://a"].n_channels, got["media://a"].ok) == (10, 24, 3, True)
-    assert not got["media://b"].ok
-
-
-def test_resize_media_real_jpeg_pixels(spark):
-    """resize_media re-encodes JPEG with truly resampled pixels: the
-    output decodes to the nearest-neighbor resample within JPEG
-    quantization tolerance."""
-    from privacy_crawler_parser_tokenizer_spark.core import png
-    from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
-
-    rng = np.random.default_rng(17)
-    src = _smooth(rng, 120, 60, 3)
-    media = spark.createDataFrame(
-        [("a", "media://a", "jpeg", bytearray(J.encode_jpeg(src, quality=95)))],
-        mm.MEDIA_SCHEMA,
-    )
-    got = mm.resize_media(media, max_side=60).collect()[0]
-    assert (got.width, got.height) == (30, 60)
-    out = J.decode_jpeg(bytes(got.content))
-    want = png.resize_nearest(J.decode_jpeg(J.encode_jpeg(src, quality=95)),
-                              30, 60)
-    err = np.abs(out.astype(int) - want.astype(int))
-    assert err.mean() <= 6.0
 
 
 # ------------------------------------------------- progressive (SOF2)

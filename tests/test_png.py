@@ -138,50 +138,3 @@ def test_resize_nearest_geometry_and_identity():
     assert half.shape == (4, 6, 3)
     # pixel-center sampling: output (0,0) samples input (1,1)
     assert np.array_equal(half[0, 0], px[1, 1])
-
-
-def test_decode_media_real_png_dims(spark):
-    """Spark path: a media table holding REAL PNG bytes decodes to true
-    dimensions with ok=True (no more FakeCodec for PNG)."""
-    from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
-
-    rng = np.random.default_rng(9)
-    rows = []
-    dims = {}
-    for i, (h, w, ch) in enumerate([(5, 7, 3), (20, 3, 1), (9, 9, 4)]):
-        blob = png.encode_png(_rand_pixels(rng, h, w, ch))
-        rows.append((str(i), f"media://{i}", "png", bytearray(blob)))
-        dims[f"media://{i}"] = (w, h, ch)
-    rows.append(("3", "media://3", "webp", bytearray(b"not an image")))
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-
-    got = {r.media_ref: r for r in mm.decode_media(media).collect()}
-    for ref, (w, h, ch) in dims.items():
-        assert (got[ref].width, got[ref].height, got[ref].n_channels) == (w, h, ch)
-        assert got[ref].ok
-    assert not got["media://3"].ok               # stub fallback, labeled
-
-
-def test_resize_media_real_png_pixels(spark):
-    """Spark path: resize_media on PNG payloads emits VALID PNGs whose
-    pixels equal nearest-neighbor resampling of the source."""
-    from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
-
-    rng = np.random.default_rng(11)
-    src = _rand_pixels(rng, 100, 40, 3)
-    small = _rand_pixels(rng, 10, 10, 1)
-    media = spark.createDataFrame(
-        [("a", "media://a", "png", bytearray(png.encode_png(src))),
-         ("b", "media://b", "png", bytearray(png.encode_png(small)))],
-        mm.MEDIA_SCHEMA,
-    )
-    got = {r.media_ref: r for r in mm.resize_media(media, max_side=50).collect()}
-
-    a = got["media://a"]
-    assert (a.width, a.height) == (20, 50)        # longer side bounded
-    out_px = png.decode_png(bytes(a.content))
-    assert np.array_equal(out_px, png.resize_nearest(src, 20, 50))
-
-    b = got["media://b"]                          # never upscaled
-    assert (b.width, b.height) == (10, 10)
-    assert np.array_equal(png.decode_png(bytes(b.content)), small)

@@ -1,4 +1,4 @@
-"""WAV codec tests (core/wav.py) and multimodal metadata wiring.
+"""WAV codec tests (core/wav.py).
 
 Decode is verified against files built BY THE TEST (hand-assembled
 RIFF chunks, including out-of-order and padded chunks) plus
@@ -79,19 +79,3 @@ def test_error_paths():
         W.encode_wav(np.zeros((2, 2, 2)), 8000)
     with pytest.raises(W.WavError):
         W.encode_wav(np.zeros(4, dtype=np.int16), 0)
-
-
-def test_decode_media_real_wav_meta(spark):
-    """Spark path: WAV payloads report true frame/channel counts
-    (width=frames, height=1 in the image-shaped schema)."""
-    from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
-
-    rng = np.random.default_rng(8)
-    blob = W.encode_wav(
-        rng.integers(-300, 300, (480, 2)).astype(np.int16), 16000
-    )
-    media = spark.createDataFrame(
-        [("a", "media://a", "wav", bytearray(blob))], mm.MEDIA_SCHEMA
-    )
-    got = mm.decode_media(media).collect()[0]
-    assert (got.width, got.height, got.n_channels, got.ok) == (480, 1, 2, True)

@@ -12,7 +12,6 @@ import numpy as np
 import pytest
 
 from privacy_crawler_parser_tokenizer_spark.core import webp
-from privacy_crawler_parser_tokenizer_spark.functions import multimodal as mm
 
 
 def _riff(*chunks):
@@ -72,19 +71,6 @@ def test_rejects_garbage_truncation_and_interframe():
                 _riff((b"VP8 ", inter))):
         with pytest.raises(webp.WebpError):
             webp.webp_meta(bad)
-
-
-def test_decode_media_reports_real_webp_geometry(spark):
-    real = _riff((b"VP8L", _vp8l_chunk(33, 21, alpha=1)))
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "webp", bytearray(real)),
-         ("d2", "media://d2", "webp", bytearray(b"\x01\x02" * 40))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = {r["doc_id"]: r for r in mm.decode_media(media).collect()}
-    assert (rows["d1"]["width"], rows["d1"]["height"]) == (33, 21)
-    assert rows["d1"]["n_channels"] == 4 and rows["d1"]["ok"]
-    assert not rows["d2"]["ok"]  # garbage stays labeled fake-path
 
 
 # --------------------------------------------------------------------------
@@ -395,39 +381,6 @@ def test_lossy_vp8_pixel_decode_stays_labeled():
         webp.decode_webp(_riff((b"VP8 ", _vp8_chunk(8, 6))))
 
 
-def test_resize_media_real_webp_path(spark):
-    img = np.zeros((20, 32, 3), np.uint8)
-    img[:, :16] = [10, 20, 30]
-    img[:, 16:] = [200, 100, 50]
-    payload = webp.encode_webp(img)
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "webp", bytearray(payload))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    row = mm.resize_media(media, max_side=16).collect()[0]
-    assert (row["width"], row["height"]) == (16, 10)
-    out = webp.decode_webp(bytes(row["content"]))
-    assert out.shape == (10, 16, 3)
-    assert out[0, 0].tolist() == [10, 20, 30]
-    assert out[-1, -1].tolist() == [200, 100, 50]
-
-
-def test_frame_sample_webp_still(spark):
-    img = np.arange(4 * 6 * 3, dtype=np.uint8).reshape(4, 6, 3)
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "webp", bytearray(webp.encode_webp(img))),
-         ("d2", "media://d2", "webp",
-          bytearray(_riff((b"VP8 ", _vp8_chunk(8, 6)))))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = {r["doc_id"]: r for r in mm.frame_sample_media(media).collect()}
-    ok = rows["d1"]
-    assert ok["ok"] and ok["n_frames"] == 1
-    from privacy_crawler_parser_tokenizer_spark.core import png as _png
-    assert (_png.decode_png(bytes(ok["content"])) == img).all()
-    assert not rows["d2"]["ok"] and rows["d2"]["content"] is None
-
-
 from hypothesis import given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
@@ -531,34 +484,10 @@ def test_webp_frames_rejects_lossy_and_still():
     assert webp.decode_webp(still).shape == (2, 2, 3)  # still path intact
 
 
-def test_frame_sample_animated_webp(spark):
-    rng = np.random.default_rng(3)
-    base = rng.integers(0, 256, size=(3, 5, 3), dtype=np.uint8)
-    f2 = rng.integers(0, 256, size=(3, 5, 3), dtype=np.uint8)
-    data = _riff(
-        (b"VP8X", _vp8x_anim(5, 3)),
-        (b"ANIM", _anim_chunk()),
-        (b"ANMF", _anmf(0, 0, base, flags=0x02)),
-        (b"ANMF", _anmf(0, 0, f2, flags=0x02)),
-    )
-    media = spark.createDataFrame(
-        [("d1", "media://d1", "webp", bytearray(data))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = sorted(mm.frame_sample_media(media, n_frames=2).collect(),
-                  key=lambda r: r.frame_index)
-    assert [r.frame_index for r in rows] == [0, 1]
-    assert all(r.n_frames == 2 and r.ok for r in rows)
-    from privacy_crawler_parser_tokenizer_spark.core import png as _png
-    got0 = _png.decode_png(bytes(rows[0].content))
-    assert (got0[..., :3] == base).all() and (got0[..., 3] == 255).all()
-    assert (_png.decode_png(bytes(rows[1].content))[..., :3] == f2).all()
-
-
 @settings(max_examples=60, deadline=None)
 @given(st.integers(0, 2**32 - 1), st.integers(0, 200))
 def test_vp8l_decoder_total_on_garbage(seed, nbytes):
-    # mapInPandas codecs must fail CLOSED: any byte soup either decodes
+    # codecs must fail CLOSED: any byte soup either decodes
     # or raises WebpError (ValueError) — never IndexError/struct.error.
     rng = np.random.default_rng(seed)
     tail = rng.integers(0, 256, size=nbytes, dtype=np.uint8).tobytes()
@@ -583,47 +512,6 @@ def test_encode_webp_anim_round_trip():
     assert (out[..., :3] == fr).all() and (out[..., 3] == 255).all()
     with pytest.raises(webp.WebpError):
         webp.encode_webp_anim(np.zeros((0, 2, 2, 3), np.uint8))
-
-
-def test_frame_sample_decodable_stills(spark):
-    from privacy_crawler_parser_tokenizer_spark.core import bitmaps, png as _png
-    img = np.arange(3 * 4 * 3, dtype=np.uint8).reshape(3, 4, 3)
-    media = spark.createDataFrame(
-        [("png", "m://p", "png", bytearray(_png.encode_png(img))),
-         ("bmp", "m://b", "bmp", bytearray(bitmaps.encode_bmp(img))),
-         ("pnm", "m://n", "ppm", bytearray(bitmaps.encode_pnm(img)))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = {r.doc_id: r for r in mm.frame_sample_media(media).collect()}
-    for k, r in rows.items():
-        assert r.ok and r.n_frames == 1 and (r.width, r.height) == (4, 3), k
-        assert (_png.decode_png(bytes(r.content)) == img).all(), k
-
-
-def test_resize_media_animated_paths(spark):
-    from privacy_crawler_parser_tokenizer_spark.core import gif
-    rng = np.random.default_rng(11)
-    # GIF: 4-color palette, resample keeps a palette subset -> exact
-    pal = np.array([[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], np.uint8)
-    gif_frames = pal[rng.integers(0, 4, size=(3, 10, 20))]
-    anim = np.stack([np.full((8, 30, 3), v, np.uint8) for v in (5, 250)])
-    media = spark.createDataFrame(
-        [("g", "m://g", "gif", bytearray(gif.encode_gif(gif_frames))),
-         ("w", "m://w", "webp", bytearray(webp.encode_webp_anim(anim)))],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = {r.doc_id: r for r in mm.resize_media(media, max_side=10).collect()}
-    g = rows["g"]
-    assert (g.width, g.height) == (10, 5)
-    out = gif.decode_gif(bytes(g.content))
-    assert out.shape == (3, 5, 10, 3)
-    from privacy_crawler_parser_tokenizer_spark.core.png import resize_nearest
-    want = np.stack([resize_nearest(f, 10, 5) for f in gif_frames])
-    assert (out == want).all()
-    w = rows["w"]
-    assert (w.width, w.height) == (10, 2)  # 30x8 at scale 1/3
-    wf = webp.webp_frames(bytes(w.content))
-    assert wf.shape[0] == 2 and (wf[0, ..., :3] == 5).all() and (wf[1, ..., :3] == 250).all()
 
 
 def test_vp8l_combined_transforms_inverse_order():
