@@ -28,7 +28,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # headline set: native exprs, Arrow-UDF pipeline, shuffle-heavy dedup,
-# joins+agg, window, ANN — one per family (full list in queries.py)
+# joins+agg, window — one per family (full list in queries.py)
 HEADLINE = [
     "rule_hits",
     "quality_scores",
@@ -52,12 +52,6 @@ HEADLINE = [
     "lang_rollup",
     "sessionize",
     "events_neighbor_context",
-    "lm_bigram_score",
-    "embedding_topk",
-    "ivf_topk",
-    "pq_topk",
-    "embedding_neardup",
-    "train_quality_perceptron",
     "mix_sample",
     "frontier_crawl",
 ]

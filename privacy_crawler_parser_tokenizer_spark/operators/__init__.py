@@ -1,2 +1,4 @@
-"""Engine-level operators that Spark lacks natively (SURVEY.md §2.2):
-sharded Bloom URL-seen pre-filter, frontier admission windows."""
+"""Operators that Spark lacks natively: the sharded Bloom URL-seen
+pre-filter of the frontier (SURVEY.md §2.2), and the training-data
+mixing, packing and scrubbing helpers behind their ``queries()``
+entries.  Frontier admission is a groupBy in ``plans/frontier.py``."""

@@ -82,9 +82,9 @@ class BloomFilter:
 
 class ShardedBloom:
     """N independent Bloom shards addressed by h1 mod n_shards — the
-    broadcast-lifecycle unit for 10^10-key seen sets.  At sandbox scale
-    n_shards=1 collapses to a single filter; the sharding math is the
-    same code path either way."""
+    broadcast-lifecycle unit for 10^10-key seen sets.  With n_shards=1
+    it is a single filter: ``add`` and ``might_contain`` skip the shard
+    routing and call that filter directly."""
 
     __slots__ = ("shards",)
 

@@ -93,7 +93,7 @@ Scale notes (10^10-URL frontier):
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import partial
 
 import pandas as pd
@@ -291,7 +291,6 @@ def fetch_robots_delta(new_hosts: DataFrame, fetch_fn, rnd: int) -> DataFrame:
     seam as the page fetch.  ``''`` (unreachable / absent / any error)
     means allow-all.  ``new_hosts`` must carry (host, any_url); the
     scheme is taken from the request url that introduced the host."""
-    out_schema = "host string, content string, fetched_round int"
 
     def run(batches):
         for pdf in batches:
@@ -304,7 +303,7 @@ def fetch_robots_delta(new_hosts: DataFrame, fetch_fn, rnd: int) -> DataFrame:
                  "fetched_round": rnd}
             )
 
-    return new_hosts.mapInPandas(run, schema=out_schema)
+    return new_hosts.mapInPandas(run, schema=_ROBOTS_SCHEMA)
 
 
 def build_filter_distributed(df: DataFrame, col: str, factory):
@@ -370,7 +369,7 @@ class FrontierConfig:
 class FrontierRun:
     warehouse: Warehouse
     rounds: int
-    config: FrontierConfig = field(default=None)
+    config: FrontierConfig
 
 
 class FrontierCrawler:

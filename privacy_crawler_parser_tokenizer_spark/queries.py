@@ -10,7 +10,7 @@ HUGEINT otherwise).
 Coverage maps to SURVEY.md §2: sentence rules (§2.3), dedupe/window/
 agg/sample (§2.2, §2.4), URL completion+canonicalization (§2.2), the
 full extraction pipeline with a closed-form oracle (§2.3), plus the
-training-data operators (exact/MinHash/Jaccard dedup, embedding ANN,
+training-data operators (exact/MinHash/Jaccard dedup, SimHash,
 quality/lang-id/fingerprint).
 """
 
@@ -19,7 +19,6 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -31,14 +30,10 @@ from .functions.text import (
     complete_link_col,
     fingerprint_col,
     lang_id_col,
-    minhash_col,
-    punct_ratio_col,
     quality_score_col,
     rule_hits_col,
     shingles_col,
-    stopword_ratio_col,
     word_count_col,
-    words_col,
 )
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -57,17 +52,6 @@ def query(name: str, sql: str | None = None):
         return fn
 
     return deco
-
-
-# shared oracle snippets: the label-bucketed embedding near-pair join
-# (one copy — embedding_neardup / dedup_components
-# all quote it, so a threshold change can't fork them)
-_EMB_E_SQL = "SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings"
-_NEAR_PAIRS_SQL = """
-      SELECT a.vec_id AS a, b.vec_id AS b
-      FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.emb, b.emb) >= 0.3
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -223,169 +207,6 @@ def q_lang_rollup(spark, sf_dir):
 
 
 _SW = "['" + "', '".join(EN_STOPWORDS) + "']"
-
-
-def _perceptron_stage_sql(t: int) -> str:
-    """Stage t of the pocket-perceptron oracle: update stage t-1's
-    weights over misclassified rows AND record how many rows those
-    incoming weights classify with positive margin (the pocket score,
-    measured without an extra pass) — mirrors the Spark loop in
-    q_train_quality_perceptron exactly."""
-    p = f"w{t - 1}"
-    m = f"y*({p}.a*x1 + {p}.b*x2 + {p}.c*x3 + {p}.d*x4 + {p}.e*x5)"
-    cols = ",\n             ".join(
-        f"CAST({p}.{c} + coalesce(sum(CASE WHEN {m} <= 0 "
-        f"THEN y*x{k} END), 0) AS BIGINT) {c}"
-        for k, c in ((1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e"))
-    )
-    return (
-        f"w{t} AS (\n      SELECT {cols},\n"
-        f"             CAST(coalesce(sum(CASE WHEN {m} > 0 THEN 1 END), 0)"
-        f" AS BIGINT) nc\n"
-        f"      FROM f, {p} GROUP BY {p}.a, {p}.b, {p}.c, {p}.d, {p}.e\n    )"
-    )
-
-
-_PERCEPTRON_STAGES = ",\n    ".join(_perceptron_stage_sql(t) for t in range(2, 7))
-
-
-@query(
-    "train_quality_perceptron",
-    f"""
-    WITH w AS (
-      SELECT doc_id, text,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS words
-      FROM documents
-    ), x AS (
-      SELECT doc_id,
-        CAST(len(words) AS BIGINT) AS x1,
-        CAST(CASE WHEN len(words) = 0 THEN 0
-             ELSE (1000 * len(list_filter(words, t -> list_contains({_SW}, t)))) // len(words)
-             END AS BIGINT) AS x2,
-        CAST(CASE WHEN len(text) = 0 THEN 0
-             ELSE (1000 * len(regexp_replace(text, '[\\p{{L}}\\p{{N}}\\s]', '', 'g'))) // len(text)
-             END AS BIGINT) AS x3,
-        CAST(1 AS BIGINT) AS x4
-      FROM w
-    ), f AS (
-      SELECT doc_id, x1, x2, x3, x4, abs(x1 - 50) AS x5,
-             CAST(CASE WHEN x1 BETWEEN 25 AND 75 AND x2 >= 60
-                  THEN 1 ELSE -1 END AS BIGINT) AS y
-      FROM x
-    ),
-    w1 AS (
-      SELECT CAST(sum(y*x1) AS BIGINT) a, CAST(sum(y*x2) AS BIGINT) b,
-             CAST(sum(y*x3) AS BIGINT) c, CAST(sum(y*x4) AS BIGINT) d,
-             CAST(sum(y*x5) AS BIGINT) e
-      FROM f
-    ),
-    {_PERCEPTRON_STAGES},
-    cand AS (
-      SELECT 1 AS i, w1.a, w1.b, w1.c, w1.d, w1.e, w2.nc FROM w1, w2
-      UNION ALL SELECT 2, w2.a, w2.b, w2.c, w2.d, w2.e, w3.nc FROM w2, w3
-      UNION ALL SELECT 3, w3.a, w3.b, w3.c, w3.d, w3.e, w4.nc FROM w3, w4
-      UNION ALL SELECT 4, w4.a, w4.b, w4.c, w4.d, w4.e, w5.nc FROM w4, w5
-      UNION ALL SELECT 5, w5.a, w5.b, w5.c, w5.d, w5.e, w6.nc FROM w5, w6
-    ),
-    best AS (SELECT * FROM cand ORDER BY nc DESC, i ASC LIMIT 1)
-    SELECT f.doc_id,
-           CAST(best.a*x1 + best.b*x2 + best.c*x3 + best.d*x4 + best.e*x5 AS BIGINT) AS score,
-           CAST(CASE WHEN best.a*x1 + best.b*x2 + best.c*x3 + best.d*x4 + best.e*x5 > 0
-                THEN 1 ELSE -1 END AS BIGINT) AS pred,
-           f.y AS label
-    FROM f, best
-    """,
-)
-def q_train_quality_perceptron(spark, sf_dir):
-    """Distributed CLASSIFIER TRAINING (the Llama/DCLM quality-
-    classifier pipeline stage, linear-model edition): a POCKET batch
-    perceptron over integer quality features (word count, stopword
-    milli-ratio, punct milli-ratio, bias, |words-50|) with weak rule
-    labels.  Six full-batch iterations; each aggregation measures the
-    incoming weights' correct-count alongside the gradient, so the
-    pocket argmax over candidates w1..w5 (by correct-count, earliest
-    wins ties) costs NO extra pass and lifts accuracy well above the
-    majority baseline despite batch-perceptron oscillation.  All
-    arithmetic is exact int64 — gradients and correct-counts are
-    order-independent SUMs, so training is partitioning-invariant and
-    hash-exact against the 6-stage materialized-CTE DuckDB oracle
-    (the BPE-oracle pattern).
-
-    Scale shape: each iteration is ONE partial-aggregable full-corpus
-    aggregation; only 5 weight integers + a count cross the driver per
-    iteration (broadcast-Lloyd's classifier twin, operators/kmeans.py).
-    Replaces the redundant EXCEPT demo `neardup_not_exact` on the
-    50-cap board (set-negation stays covered by training_keep_list's
-    left_anti stage)."""
-    docs = _t(spark, sf_dir, "documents")
-    ws = words_col(F.lower(F.col("text")))
-    n = F.size(ws).cast("long")
-    n_stop = F.size(
-        F.filter(ws, lambda t: t.isin(*EN_STOPWORDS))
-    ).cast("long")
-    n_chars = F.length("text").cast("long")
-    n_punct = F.length(
-        F.regexp_replace("text", r"[\p{L}\p{N}\s]", "")
-    ).cast("long")
-    feats = docs.select(
-        "doc_id",
-        n.alias("x1"),
-        (n_stop * 1000).alias("_s"),
-        (n_punct * 1000).alias("_p"),
-        n_chars.alias("_c"),
-    ).select(
-        "doc_id",
-        "x1",
-        F.when(F.col("x1") == 0, F.lit(0).cast("long"))
-        .otherwise(F.expr("_s div x1")).alias("x2"),
-        F.when(F.col("_c") == 0, F.lit(0).cast("long"))
-        .otherwise(F.expr("_p div _c")).alias("x3"),
-        F.lit(1).cast("long").alias("x4"),
-        F.abs(F.col("x1") - 50).cast("long").alias("x5"),
-    ).withColumn(
-        "y",
-        F.when(
-            F.col("x1").between(25, 75) & (F.col("x2") >= 60),
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(-1).cast("long")),
-    )
-    feats = feats.persist()  # six training scans; released below
-    try:
-        w = [0] * 5
-        cands = []
-        for t in range(6):
-            margin = F.col("y") * sum(
-                F.lit(int(w[k])) * F.col(f"x{k + 1}") for k in range(5)
-            )
-            row = feats.agg(
-                *[
-                    F.coalesce(
-                        F.sum(
-                            F.when(margin <= 0, F.col("y") * F.col(f"x{k + 1}"))
-                        ),
-                        F.lit(0),
-                    ).cast("long").alias(f"g{k}")
-                    for k in range(5)
-                ],
-                F.coalesce(
-                    F.sum(F.when(margin > 0, F.lit(1))), F.lit(0)
-                ).cast("long").alias("nc"),
-            ).collect()[0]
-            if t >= 1:  # nc measures the PRE-update weights = candidate w_t
-                cands.append((int(row["nc"]), -t, list(w)))
-            w = [w[k] + int(row[f"g{k}"]) for k in range(5)]
-        best = max(cands)[2]  # pocket: argmax correct-count, earliest t
-    finally:
-        feats.unpersist()
-    score = sum(F.lit(int(best[k])) * F.col(f"x{k + 1}") for k in range(5))
-    return feats.select(
-        "doc_id",
-        score.cast("long").alias("score"),
-        F.when(score > 0, F.lit(1).cast("long"))
-        .otherwise(F.lit(-1).cast("long")).alias("pred"),
-        F.col("y").alias("label"),
-    )
 
 
 def _mix_sql() -> str:
@@ -673,8 +494,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# more training-data operators: token counting, SimHash, sessionization,
-# embedding near-dup / IVF / sign-LSH ANN
+# more training-data operators: token counting, SimHash, sessionization
 # ---------------------------------------------------------------------------
 
 _TOKEN_RE = r"\p{L}+|\p{N}|[^\s\p{L}\p{N}]"
@@ -697,106 +517,6 @@ def q_token_counts(spark, sf_dir):
         F.size(F.regexp_extract_all("text", F.lit(_TOKEN_RE), 0))
         .cast("long")
         .alias("n_tokens"),
-    )
-
-
-def _bpe_oracle_sql(n_merges: int = 16) -> str:
-    """DuckDB oracle for the FULL iterative BPE pipeline, unrolled as
-    ``n_merges`` chained CTE stages (the merge count is a fixed query
-    parameter, so training is finitely expressible in SQL).
-
-    Symbol sequences ride as strings with every symbol wrapped in
-    US separators (``\\x1f a \\x1f  \\x1f b \\x1f`` ...): SQL
-    ``replace()`` scans left-to-right without rescanning replacements,
-    and the per-symbol wrapping keeps adjacent matches from sharing
-    boundary chars — together that reproduces ``merge_symbols``'s
-    non-overlapping left-to-right semantics exactly (a/a/a/a ->
-    aa/aa, verified in tests).  Each stage: pair counts from adjacent
-    wrapped symbols -> (count DESC, pair ASC) argmax -> one-row cross
-    join applying the merge.  Encoding reuses the SAME chain (rank-
-    order single pass == the kernel's lowest-rank-first loop: a merge
-    learned at rank r can only create pairs involving its new symbol,
-    and any merge over that symbol was learned later, so finished
-    ranks never re-fire).  Separator safety: no testdata document
-    contains \\x1f (checked when this oracle was written); a future
-    dataset that does will fail the board loudly, not silently."""
-    s = "\x1f"
-    ws = "[ \\t\\n\\x0b\\f\\r]+"      # Java/RE2 \s — the Spark trainer's split class
-    parts = [
-        f"""
-    WITH docw AS (
-      SELECT doc_id, w
-      FROM (SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(text), '{ws}')) AS w
-            FROM documents)
-      WHERE w <> ''
-    ),
-    wf AS (SELECT w, CAST(count(*) AS BIGINT) AS n FROM docw GROUP BY w),
-    t0 AS MATERIALIZED (
-      SELECT w,
-             '{s}' || array_to_string(
-                 list_append(string_split(w, ''), '</w>'), '{s}{s}') || '{s}'
-               AS seq,
-             n
-      FROM wf
-    )"""
-    ]
-    for r in range(n_merges):
-        parts.append(f"""
-    c{r} AS (
-      SELECT unnest(list_transform(
-               range(1, len(syms)),
-               i -> {{'a': syms[i], 'b': syms[i + 1]}})) AS pr, n
-      FROM (SELECT regexp_extract_all(seq, '[^{s}]+') AS syms, n FROM t{r})
-    ),
-    p{r} AS (
-      SELECT pr.a AS a, pr.b AS b
-      FROM c{r}
-      GROUP BY 1, 2
-      ORDER BY sum(n) DESC, a ASC, b ASC
-      LIMIT 1
-    ),
-    t{r + 1} AS MATERIALIZED (
-      SELECT w,
-             replace(seq, '{s}' || a || '{s}{s}' || b || '{s}',
-                          '{s}' || a || b || '{s}') AS seq,
-             n
-      FROM t{r}, p{r}
-    )""")
-    parts.append(f"""
-    enc AS (
-      SELECT w,
-             CAST(len(regexp_extract_all(seq, '[^{s}]+')) AS BIGINT) AS k
-      FROM t{n_merges}
-    ),
-    agg AS (
-      SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_bpe_tokens
-      FROM docw JOIN enc USING (w) GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(COALESCE(a.n_bpe_tokens, 0) AS BIGINT) AS n_bpe_tokens
-    FROM documents d LEFT JOIN agg a USING (doc_id)""")
-    return ",".join(parts)
-
-
-@query("bpe_token_counts", _bpe_oracle_sql())
-def q_bpe_token_counts(spark, sf_dir):
-    """Real subword tokenization: train 16 BPE merges over the corpus
-    with the distributed trainer (iterative pair-count aggregation over
-    the word-frequency table — cost O(vocab) per merge, not O(corpus)),
-    then encode every document with the learned merges and count
-    tokens.  Oracle: the training loop unrolled as 16 chained CTE
-    stages (``_bpe_oracle_sql``) — closing the last analytical
-    ``no_oracle`` board entry; exact parity of the distributed
-    trainer/encoder vs the sequential canon stays pinned in
-    tests/test_bpe.py."""
-    from .operators.bpe import make_bpe_encode_udf, train_bpe_distributed
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = train_bpe_distributed(docs, 16)
-    enc = make_bpe_encode_udf(spark, merges)
-    return docs.select(
-        "doc_id", F.size(enc(F.col("text"))).cast("long").alias("n_bpe_tokens")
     )
 
 
@@ -1138,75 +858,6 @@ def q_sessionize(spark, sf_dir):
     )
 
 
-def _unit_emb(col):
-    """L2-normalized copy of an embedding array: norms computed once per
-    VECTOR so pair joins only pay a dot product (computing both norms
-    inside every pair multiplies the interpreted-lambda work by the
-    pair count — 2.5M times at sf0.1 instead of 500)."""
-    norm = F.sqrt(
-        F.aggregate(F.transform(col, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
-    )
-    return F.transform(col, lambda x: x / norm)
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-@query(
-    "embedding_neardup",
-    f"""
-    WITH e AS ({_EMB_E_SQL}),
-    near AS ({_NEAR_PAIRS_SQL})
-    SELECT a, b FROM near
-    """,
-)
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs, bucketed by label so the
-    pair join is block-local (the 100TB path buckets by coarse quantizer
-    instead of a full cross join).  Pair-id output only: rank/set
-    semantics are float-noise-proof."""
-    return _neardup_pairs_gemm(spark, sf_dir)
-
-
-def _neardup_pairs_gemm(spark, sf_dir, threshold: float = 0.3) -> DataFrame:
-    """Label-bucketed near-dup candidate pairs ``(a, b)``, a < b, shared
-    by embedding_neardup / dedup_components (neardup_not_exact and
-    docs_without_pairs were rotated off the board for
-    train_quality_perceptron / mix_sample).
-
-    Block-local GEMM: one numpy matmul per bucket — the 100TB ANN shape
-    (an expression-level pair join pays interpreted lambda cost per
-    element and recomputes both norms inside every pair; this is
-    vectorized end to end).
-
-    Threshold-membership stability vs the DuckDB oracle
-    (list_cosine_similarity): the decision can only fork between engines
-    if a pair's true cosine sits within float summation error (~1e-15
-    relative) of the 0.3 boundary.  Measured margin of every in-bucket
-    pair to the boundary: 3.2e-4 (sf0.001), 1.9e-4 (sf0.01), 8.6e-6
-    (sf0.1) — 9+ orders above the divergence, regression-tested in
-    tests/test_properties.py::test_neardup_threshold_margin so a future
-    dataset that lands on the boundary fails loudly before the board
-    does.  (Grid-quantizing the similarity would NOT help here: the
-    decision boundary stays at 0.3 wherever the grid lies.)"""
-    import numpy as np
-    import pandas as pd
-
-    def block(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        sims = m @ m.T
-        iu = np.triu_indices(len(pdf), 1)
-        hit = sims[iu] >= threshold
-        ids = pdf["vec_id"].to_numpy()
-        x, y = ids[iu[0][hit]], ids[iu[1][hit]]
-        return pd.DataFrame({"a": np.minimum(x, y), "b": np.maximum(x, y)})
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    return emb.groupBy("label").applyInPandas(block, "a long, b long")
-
-
 @query(
     "training_keep_list",
     f"""
@@ -1254,374 +905,6 @@ def q_training_keep_list(spark, sf_dir):
         .join(losers, "doc_id", "left_anti")
         .select("doc_id")
     )
-
-
-@query(
-    "dedup_components",
-    f"""
-    WITH RECURSIVE e AS ({_EMB_E_SQL}),
-    near AS ({_NEAR_PAIRS_SQL}),
-    sym AS (SELECT a AS u, b AS w FROM near UNION SELECT b, a FROM near),
-    reach(u, w) AS (
-      SELECT u, w FROM sym
-      UNION
-      SELECT r.u, s.w FROM reach r JOIN sym s ON r.w = s.u
-    )
-    SELECT v.vec_id AS vec_id,
-           least(v.vec_id, coalesce(min(r.w), v.vec_id)) AS rep
-    FROM (SELECT vec_id FROM embeddings) v
-    LEFT JOIN reach r ON v.vec_id = r.u
-    GROUP BY v.vec_id
-    """,
-)
-def q_dedup_components(spark, sf_dir):
-    """Near-dup CLUSTERS: connected components over the candidate-pair
-    graph, min-id representative per component (the keep-set step that
-    turns pairs into dedup decisions — a~b and b~c form one cluster
-    even though a~c was never scored).  Iterative min-label propagation
-    (operators/components.py): one edge join per round, convergence
-    detected by an Observation riding the update, rounds = component
-    diameter.  The oracle is the same closure as a recursive CTE —
-    exact integer output, hash-checked."""
-    from .operators.components import connected_components
-
-    near = _neardup_pairs_gemm(spark, sf_dir)
-    verts = _t(spark, sf_dir, "embeddings").select("vec_id")
-    out = connected_components(near, verts)
-    return out.select(
-        F.col("v").cast("long").alias("vec_id"),
-        F.col("rep").cast("long").alias("rep"),
-    )
-
-
-_INT_D = (
-    "CAST(list_sum(list_transform(list_zip({a}, {b}),"
-    " p -> (p[1]-p[2])*(p[1]-p[2]))) AS BIGINT)"
-)
-
-
-def _lloyd_iter_sql(prev: str, assign: str, cent: str) -> str:
-    """One DuckDB Lloyd iteration: assign to nearest `prev` centroid
-    (exact int64 L2, ties on lowest cid), then per-dimension
-    floor(sum/count) means; empty cells keep the previous centroid —
-    mirrors operators/kmeans.py exactly."""
-    return f"""
-    {assign} AS (
-      SELECT vec_id, cid, q FROM (
-        SELECT e.vec_id, c.cid, e.q,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_INT_D.format(a='e.q', b='c.cemb')}, c.cid) AS rn
-        FROM e, {prev} c) WHERE rn = 1
-    ),
-    {cent}_s AS (
-      SELECT cid, i, CAST(floor(sum(v)::DOUBLE / count(*)) AS BIGINT) AS cv
-      FROM (SELECT cid, unnest(q) AS v, generate_subscripts(q, 1) AS i
-            FROM {assign})
-      GROUP BY cid, i
-    ),
-    {cent}_m AS (SELECT cid, list(cv ORDER BY i) AS cemb
-                 FROM {cent}_s GROUP BY cid),
-    {cent} AS (
-      SELECT p.cid, coalesce(m.cemb, p.cemb) AS cemb
-      FROM {prev} p LEFT JOIN {cent}_m m USING (cid)
-    )"""
-
-
-def _ivf_sql() -> str:
-    return f"""
-    WITH e AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> CAST(floor(x*1000 + 0.5) AS BIGINT)) AS q
-      FROM embeddings
-    ),
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid, q AS cemb FROM e WHERE vec_id < 8),
-    {_lloyd_iter_sql('c0', 'a1', 'c1')},
-    {_lloyd_iter_sql('c1', 'a2', 'c2')},
-    af AS (
-      SELECT vec_id, cid, q FROM (
-        SELECT e.vec_id, c.cid, e.q,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_INT_D.format(a='e.q', b='c.cemb')}, c.cid) AS rn
-        FROM e, c2 c) WHERE rn = 1
-    ),
-    qs AS (SELECT vec_id AS qid, cid, q AS qq FROM af
-           WHERE vec_id >= 8 AND vec_id < 18)
-    SELECT qid AS vec_id, neighbor_id, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT qs.qid, af.vec_id AS neighbor_id,
-             row_number() OVER (PARTITION BY qs.qid
-               ORDER BY {_INT_D.format(a='qs.qq', b='af.q')}, af.vec_id) AS rank
-      FROM qs JOIN af ON af.cid = qs.cid AND af.vec_id <> qs.qid)
-    WHERE rank <= 3
-    """
-
-
-@query("ivf_topk", _ivf_sql())
-def q_ivf_topk(spark, sf_dir):
-    """IVF ANN with a TRAINED coarse quantizer: k=8 centroids learned
-    by two distributed Lloyd iterations (operators/kmeans.py —
-    broadcast centroids -> crossJoin assign -> groupBy argmin ->
-    floor-mean update; only k x dim ints cross the driver per
-    iteration), seeded from the first 8 vectors; then exact top-k
-    inside the query's own cell only — the scale path where a full
-    scan is replaced by one-cell probes.  All arithmetic is int64
-    milli-space, hash-exact against the DuckDB Lloyd oracle."""
-    from .operators.kmeans import (
-        _centroid_df,
-        int_sqdist,
-        lloyd_int,
-        quantize_milli,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", quantize_milli(F.col("embedding")).alias("q")
-    )
-    init = [
-        r["q"]
-        for r in emb.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
-    ]
-    cents = lloyd_int(emb, k=8, dim=64, iters=2, init=init)
-    cent_df = _centroid_df(spark, list(enumerate(cents)))
-    scored = emb.join(F.broadcast(cent_df)).withColumn(
-        "_d", int_sqdist(F.col("q"), F.col("cemb"))
-    )
-    assign = (
-        scored.groupBy("vec_id")
-        .agg(F.min(F.struct("_d", "cid")).alias("_w"), F.first("q").alias("q"))
-        .select("vec_id", F.col("_w.cid").alias("cid"), "q")
-    )
-    qs = assign.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 18)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("cid").alias("qcid"),
-        F.col("q").alias("qq"),
-    )
-    cand = assign.select(
-        F.col("vec_id").alias("neighbor_id"), "cid", F.col("q").alias("nq")
-    ).join(
-        F.broadcast(qs),
-        (F.col("cid") == F.col("qcid")) & (F.col("neighbor_id") != F.col("qid")),
-    )
-    w_rank = Window.partitionBy("qid").orderBy("_d", "neighbor_id")
-    return (
-        cand.withColumn("_d", int_sqdist(F.col("qq"), F.col("nq")))
-        .withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select(F.col("qid").alias("vec_id"), "neighbor_id", "rank")
-    )
-
-
-_PQ_SQL_D = "list_sum(list_transform(list_zip({a}, {b}), p -> (p[1]-p[2])*(p[1]-p[2])))"
-
-
-def _pq_lloyd_iter_sql(prev: str, assign: str, cent: str) -> str:
-    """One per-subspace DuckDB Lloyd iteration over ALL subvectors
-    (assign to nearest codeword of `prev` within the same m; then
-    floor(sum/count) means per (m, cid); empty codewords persist) —
-    mirrors operators/kmeans.py lloyd_int_grouped exactly."""
-    return f"""
-    {assign} AS (
-      SELECT vec_id, m, cid, sv FROM (
-        SELECT s.vec_id, s.m, w.cid, s.sv,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_PQ_SQL_D.format(a="s.sv", b="w.cv")}, w.cid) AS rn
-        FROM sub s JOIN {prev} w ON s.m = w.m) WHERE rn = 1
-    ),
-    {cent}_s AS (
-      SELECT m, cid, i, CAST(floor(sum(v)::DOUBLE / count(*)) AS BIGINT) AS cv
-      FROM (SELECT m, cid, unnest(sv) AS v, generate_subscripts(sv, 1) AS i
-            FROM {assign})
-      GROUP BY m, cid, i
-    ),
-    {cent}_m AS (SELECT m, cid, list(cv ORDER BY i) AS cv
-                 FROM {cent}_s GROUP BY m, cid),
-    {cent} AS (
-      SELECT p.m, p.cid, coalesce(n.cv, p.cv) AS cv
-      FROM {prev} p LEFT JOIN {cent}_m n ON p.m = n.m AND p.cid = n.cid
-    )"""
-
-
-def _pq_sql() -> str:
-    return f"""
-    WITH e AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> CAST(floor(x*1000 + 0.5) AS BIGINT)) AS q
-      FROM embeddings
-    ),
-    sub AS (
-      SELECT vec_id, t.m AS m, q[t.m*16+1 : t.m*16+16] AS sv
-      FROM e, (VALUES (0), (1), (2), (3)) t(m)
-    ),
-    w0 AS (SELECT CAST(vec_id AS INT) AS cid, m, sv AS cv
-           FROM sub WHERE vec_id < 16),
-    {_pq_lloyd_iter_sql('w0', 'p1', 'w1')},
-    {_pq_lloyd_iter_sql('w1', 'p2', 'w2')},
-    db AS (SELECT vec_id, m, sv FROM sub WHERE vec_id >= 16),
-    codes AS (
-      SELECT vec_id, m, cid FROM (
-        SELECT db.vec_id, db.m, w2.cid,
-               row_number() OVER (PARTITION BY db.vec_id, db.m
-                 ORDER BY {_PQ_SQL_D.format(a="db.sv", b="w2.cv")}, w2.cid) AS rn
-        FROM db JOIN w2 ON db.m = w2.m) WHERE rn = 1
-    ),
-    qs AS (SELECT vec_id AS qid, m, sv AS qv FROM sub
-           WHERE vec_id >= 16 AND vec_id < 26),
-    parts AS (
-      SELECT qs.qid, codes.vec_id AS nid,
-             {_PQ_SQL_D.format(a="qs.qv", b="w2.cv")} AS d
-      FROM qs
-      JOIN codes ON qs.m = codes.m AND codes.vec_id <> qs.qid
-      JOIN w2 ON w2.m = codes.m AND w2.cid = codes.cid
-    ),
-    adc AS (SELECT qid, nid, CAST(sum(d) AS BIGINT) AS dist
-            FROM parts GROUP BY qid, nid)
-    SELECT qid AS vec_id, nid AS neighbor_id, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY dist, nid) AS rank
-      FROM adc) WHERE rank <= 5
-    """
-
-
-@query("pq_topk", _pq_sql())
-def q_pq_topk(spark, sf_dir):  # noqa: C901
-    """Product-quantization ANN (Jegou et al. 2011): 4 subspaces x 16
-    codewords TRAINED by two distributed Lloyd iterations per subspace
-    (operators/kmeans.py lloyd_int_grouped — all 4 codebooks learned in
-    one corpus scan per iteration), seeded from the first 16 vectors'
-    subvectors; asymmetric-distance top-5.
-
-    Exactness across engines: embeddings quantize ONCE to integer
-    milli-units (floor(x*1000+0.5) — floor is IEEE-exact everywhere),
-    so every distance, argmin and rank is exact int64 arithmetic — no
-    float-noise tie risk anywhere.
-
-    Scale shape: the codebook broadcasts (16 x 64 ints); encoding is a
-    block-local numpy argmin per partition (mapInPandas) producing M
-    one-byte codes per vector — the 100TB memory story of PQ; queries'
-    distance tables broadcast; ADC is a table lookup join, never a
-    full-vector scan per pair."""
-    import numpy as np
-
-    from .operators.kmeans import quantize_milli as _qm
-
-    M, SD, K = 4, 16, 16
-    # the ONE engine-exactness-critical quantization definition —
-    # shared with ivf_topk/lloyd so the formulas can never fork
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", _qm(F.col("embedding")).alias("q")
-    )
-    first = {
-        r.vec_id: np.array(r.q, dtype=np.int64)
-        for r in emb.filter(F.col("vec_id") < 26).collect()
-    }
-    # train the codebook: 2 Lloyd iterations per subspace over ALL
-    # subvectors, seeded with the first 16 vectors' subvectors
-    from .operators.kmeans import lloyd_int_grouped
-
-    sub_df = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("q", m * SD + 1, SD).alias("sv"),
-                    )
-                    for m in range(M)
-                ]
-            )
-        ).alias("_e"),
-    ).select("vec_id", F.col("_e.m").alias("m"), F.col("_e.sv").alias("sv"))
-    init = {
-        m: [first[i].reshape(M, SD)[m].tolist() for i in range(K)]
-        for m in range(M)
-    }
-    trained = lloyd_int_grouped(sub_df, k=K, dim=SD, iters=2, init=init)
-    cw_sub = np.array(
-        [[trained[m][cid] for cid in range(K)] for m in range(M)],
-        dtype=np.int64,
-    )                                                    # M x K x SD
-    # per-query ADC lookup tables: qid -> M x K int64
-    tables = {
-        qid: np.array(
-            [
-                ((first[qid].reshape(M, SD)[m][None, :] - cw_sub[m]) ** 2).sum(1)
-                for m in range(M)
-            ]
-        )
-        for qid in range(K, 26)
-    }
-    bc_cw = spark.sparkContext.broadcast(cw_sub)
-    bc_tables = spark.sparkContext.broadcast(tables)
-
-    def encode(batches):
-        cws = bc_cw.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf["q"].tolist(), dtype=np.int64).reshape(-1, M, SD)
-            out = {"vec_id": pdf["vec_id"]}
-            for m in range(M):
-                d = ((X[:, m, None, :] - cws[m][None]) ** 2).sum(2)
-                out[f"c{m}"] = d.argmin(1)               # first-min == lowest cid
-            yield pd.DataFrame(out)
-
-    codes = emb.filter(F.col("vec_id") >= 16).mapInPandas(
-        encode, "vec_id long, c0 int, c1 int, c2 int, c3 int"
-    )
-
-    @F.pandas_udf("long")
-    def adc(qid: pd.Series, c0: pd.Series, c1: pd.Series, c2: pd.Series,
-            c3: pd.Series) -> pd.Series:
-        t = bc_tables.value
-        cs = np.stack([c0, c1, c2, c3], axis=1)
-        qs = qid.to_numpy()
-        return pd.Series(
-            [int(sum(t[q][m][c[m]] for m in range(4))) for q, c in zip(qs, cs)]
-        )
-
-    queries_df = spark.range(K, 26).select(F.col("id").alias("qid"))
-    pairs = (
-        codes.crossJoin(F.broadcast(queries_df))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "dist",
-            adc(F.col("qid"), F.col("c0"), F.col("c1"), F.col("c2"), F.col("c3")),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy("dist", "vec_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-        )
-    )
-
-
-@query(
-    "sign_lsh_buckets",
-    """
-    SELECT vec_id,
-           list_aggregate(list_transform(embedding[1:8],
-             x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), 'string_agg', '') AS bucket
-    FROM embeddings
-    """,
-)
-def q_sign_lsh_buckets(spark, sf_dir):
-    """Sign-LSH bucketing over the first 8 dimensions (random-hyperplane
-    LSH with axis-aligned planes): the bucket key that turns ANN into an
-    equi-join at scale."""
-    emb = _t(spark, sf_dir, "embeddings")
-    bucket = F.concat_ws(
-        "",
-        F.transform(
-            F.slice("embedding", 1, 8),
-            lambda x: F.when(x >= 0, "1").otherwise("0"),
-        ),
-    )
-    return emb.select("vec_id", bucket.alias("bucket"))
 
 
 # ---------------------------------------------------------------------------
@@ -2274,75 +1557,6 @@ def q_events_running_avg(spark, sf_dir):
 
 
 @query(
-    "lm_bigram_score",
-    """
-    WITH w AS (
-      SELECT doc_id,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS words
-      FROM documents
-    ), b AS (
-      SELECT doc_id, unnest(
-        CASE WHEN len(words) < 2 THEN CAST([] AS VARCHAR[])
-             ELSE list_transform(range(1, len(words)),
-                  i -> words[i] || ' ' || words[i+1]) END) AS bigram
-      FROM w
-    ), uc AS (
-      SELECT u AS w1, CAST(count(*) AS BIGINT) AS c1
-      FROM (SELECT unnest(words) AS u FROM w) GROUP BY u
-    ), bc AS (
-      SELECT bigram, CAST(count(*) AS BIGINT) AS c12 FROM b GROUP BY bigram
-    ), v AS (SELECT CAST(count(*) AS BIGINT) AS vs FROM uc)
-    SELECT b.doc_id,
-           CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST(sum(((c1 + vs) * 1000) // c12) // count(*) AS BIGINT)
-             AS surprisal_milli
-    FROM b
-    JOIN bc USING (bigram)
-    JOIN uc ON uc.w1 = split_part(b.bigram, ' ', 1)
-    CROSS JOIN v
-    GROUP BY b.doc_id
-    """,
-)
-def q_lm_bigram_score(spark, sf_dir):
-    """Language-model quality filter (the CCNet / Llama perplexity-
-    filtering stage): a bigram LM is trained ON the corpus itself
-    (unigram + bigram count tables) and every document is scored by its
-    mean transition surprisal.  Kept log-free in exact int64 milli-space
-    — per word-pair ((c1 + V) * 1000) div c12, the integer-quantized
-    inverse conditional frequency, monotone in perplexity — so the
-    score is associativity-independent and hash-exact against the
-    DuckDB oracle (floats summed in engine-dependent order are not).
-
-    Scale shape: count tables build with partial-aggregable groupBys;
-    the score joins are shuffle equi-joins on (bigram) / (w1) — the
-    model IS corpus-sized, so broadcasting is wrong at 100 TB; AQE
-    handles skewed stopword bigrams.  The vocabulary size V rides a
-    broadcast 1-row crossJoin, no collect."""
-    docs = _t(spark, sf_dir, "documents")
-    b = docs.select(
-        "doc_id", F.explode(shingles_col(F.col("text"), 2)).alias("bigram")
-    )
-    u = docs.select(
-        F.explode(words_col(F.lower(F.col("text")))).alias("w1")
-    )
-    uc = u.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    bc = b.groupBy("bigram").agg(F.count(F.lit(1)).alias("c12"))
-    v = uc.agg(F.count(F.lit(1)).alias("vs"))
-    scored = (
-        b.join(bc, "bigram")
-        .withColumn("w1", F.substring_index("bigram", " ", 1))
-        .join(uc, "w1")
-        .crossJoin(F.broadcast(v))
-        .withColumn("q", F.expr("((c1 + vs) * 1000) div c12"))
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        F.expr("sum(q) div count(1)").cast("long").alias("surprisal_milli"),
-    )
-
-
-@query(
     "value_borderline",
     """
     SELECT event_id, value FROM events WHERE abs(value - 100.0) < 5.0
@@ -2488,44 +1702,6 @@ def q_deterministic_sample(spark, sf_dir):
     reproducible rule; src/statistics/sentences.py:265-272)."""
     d = _t(spark, sf_dir, "documents")
     return d.filter(F.col("doc_id") % 10 == 0).select("doc_id", "n_chars")
-
-
-@query(
-    "embedding_topk",
-    """
-    WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-    s AS (
-      SELECT q.vec_id AS vec_id, e.vec_id AS neighbor_id,
-             list_cosine_similarity(q.embedding, e.embedding) AS cos
-      FROM q, embeddings e WHERE e.vec_id <> q.vec_id
-    )
-    SELECT vec_id, neighbor_id, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT vec_id, neighbor_id,
-             row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
-      FROM s) WHERE rank <= 5
-    """,
-)
-def q_embedding_topk(spark, sf_dir):
-    """Brute-force cosine top-k ANN baseline over the embedding column
-    (rank-only output: engine-portable under float noise)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", _unit_emb(F.col("embedding").cast("array<double>")).alias("u")
-    )
-    qv = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("u").alias("qe")
-    )
-    ev = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("u").alias("ee"))
-    pairs = (
-        qv.crossJoin(ev)
-        .filter(F.col("qid") != F.col("neighbor_id"))
-        .withColumn("cos", _dot(F.col("qe"), F.col("ee")))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select(F.col("qid").alias("vec_id"), "neighbor_id", "rank")
-    )
 
 
 # ---------------------------------------------------------------------------

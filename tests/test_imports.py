@@ -73,3 +73,25 @@ def test_every_package_import_resolves():
             problems += [f"{rel}:{line}: {m}" for m in _unresolved(module, names)]
     assert checked > 0
     assert not problems, "unresolved imports:\n" + "\n".join(problems)
+
+
+def _bench_headline():
+    """bench.py's ``HEADLINE`` list, read with ``ast`` (bench.py is not
+    imported: it starts Spark when run)."""
+    for node in ast.parse((ROOT / "bench.py").read_text()).body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "HEADLINE" for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError("bench.py defines no HEADLINE list")
+
+
+def test_bench_headline_names_are_queries():
+    """bench.py keeps only the HEADLINE names found in ``queries()``, so
+    a query deleted from the board would leave the suite silently."""
+    from privacy_crawler_parser_tokenizer_spark.queries import QUERIES
+
+    headline = _bench_headline()
+    assert headline
+    missing = [n for n in headline if n not in QUERIES]
+    assert not missing, f"bench.py HEADLINE names no query: {missing}"
