@@ -31,28 +31,16 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # joins+agg, window — one per family (full list in queries.py)
 HEADLINE = [
     "rule_hits",
-    "quality_scores",
-    "gopher_quality",
-    "dup_ngram_fraction",
-    "lang_id",
     "fingerprints",
     "token_counts",
     "verify_scores",
     "english_gate",
-    "simhash",
-    "minhash_bands",
-    "lsh_candidate_pairs",
     "exact_dedup",
     "pii_scrub",
-    "decontaminate",
-    "training_keep_list",
     "sentence_pipeline",
-    "pack_sequences",
     "exact_substring_dedup",
     "lang_rollup",
-    "sessionize",
     "events_neighbor_context",
-    "mix_sample",
     "frontier_crawl",
 ]
 

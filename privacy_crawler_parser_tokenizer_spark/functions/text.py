@@ -168,72 +168,8 @@ def canonicalize_url_col(url: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# text analytics (training-data pipeline operators, native)
+# document fingerprints and word k-grams
 # ---------------------------------------------------------------------------
-
-# small built-in stopword markers per language for the heuristic lang-id
-LANG_MARKERS = {
-    "en": ["the", "and", "of", "to", "in", "is", "you", "that", "for", "with"],
-    "es": ["el", "la", "de", "que", "los", "las", "una", "por", "con", "para"],
-    "fr": ["le", "la", "les", "des", "une", "est", "dans", "pour", "que", "vous"],
-    "de": ["der", "die", "das", "und", "ist", "nicht", "mit", "ein", "für", "auf"],
-    "zh": ["的", "是", "在", "了", "我", "有", "和", "不", "人", "这"],
-}
-
-EN_STOPWORDS = LANG_MARKERS["en"] + [
-    "a", "an", "it", "on", "as", "are", "was", "be", "by", "at", "or", "we",
-]
-
-
-def stopword_ratio_col(text: Column, stopwords=None) -> Column:
-    """Fraction of words that are (lowercased) stopwords."""
-    sw = F.array(*[F.lit(s) for s in (stopwords or EN_STOPWORDS)])
-    w = words_col(F.lower(text))
-    n = F.size(w)
-    hits = F.size(F.filter(w, lambda x: F.array_contains(sw, x)))
-    return F.when(n == 0, F.lit(0.0)).otherwise(hits.cast("double") / n)
-
-
-def punct_ratio_col(text: Column) -> Column:
-    """Fraction of characters that are not letters/digits/whitespace."""
-    stripped = F.regexp_replace(text, r"[\p{L}\p{N}\s]", "")
-    return F.when(F.length(text) == 0, F.lit(0.0)).otherwise(
-        F.length(stripped).cast("double") / F.length(text)
-    )
-
-
-def quality_score_col(text: Column) -> Column:
-    """Composite document quality score in [0,1]: rewards stopword
-    presence and sane length, penalises punctuation soup.  Training-data
-    quality heuristic (word-count band 50..2000)."""
-    n = word_count_col(text)
-    len_ok = F.when((n >= 50) & (n <= 2000), F.lit(1.0)).otherwise(
-        F.when(n == 0, F.lit(0.0)).otherwise(F.lit(0.5))
-    )
-    score = (
-        len_ok * 0.4
-        + F.least(stopword_ratio_col(text) * F.lit(4.0), F.lit(1.0)) * 0.4
-        + (F.lit(1.0) - F.least(punct_ratio_col(text) * F.lit(5.0), F.lit(1.0))) * 0.2
-    )
-    return F.round(score, 6)
-
-
-def lang_id_col(text: Column) -> Column:
-    """Heuristic language ID: the language whose marker-word hit-count
-    is highest wins; ties and zero-hit docs -> 'und'.  Deterministic
-    tie-break by language code order."""
-    w = words_col(F.lower(text))
-    scores = []
-    for lang in sorted(LANG_MARKERS):
-        markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-        cnt = F.size(F.filter(w, lambda x: F.array_contains(markers, x)))
-        scores.append((lang, cnt))
-    best = F.greatest(*[c for _, c in scores])
-    pred = F.lit("und")
-    # reversed so earlier codes win ties via later .when precedence
-    for lang, cnt in reversed(scores):
-        pred = F.when((cnt == best) & (best > 0), F.lit(lang)).otherwise(pred)
-    return pred
 
 
 def fingerprint_col(text: Column) -> Column:
@@ -244,43 +180,15 @@ def fingerprint_col(text: Column) -> Column:
     return F.md5(normalized)
 
 
-# MinHash-LSH band count shared by the batch queries, the streaming
-# online-LSH operator, and their tests — one constant, no drift
-N_BANDS = 4
-
-
 def shingle_slots_of_words(w: Column, k: int) -> tuple[Column, Column]:
-    """``shingle_slots`` over an already-tokenized word array — for
-    callers that materialize the words as a projected attribute BELOW a
-    Generate (the english_gate lesson: an inline text expression in the
+    """The k-gram construction over a tokenized word array: (word
+    count, zipped struct array of k shifted word slices).  Callers
+    materialize the words as a projected attribute BELOW a Generate
+    (the english_gate lesson: an inline text expression in the
     generator re-evaluates the split per slice reference; an attribute
-    is computed once per doc)."""
+    is computed once per doc).  Built by zipping k shifted slices — a
+    sequence+element_at lambda is ~16x slower at sf0.1: per-element
+    computed-index lookups defeat codegen."""
     n = F.size(w)
     m = n - F.lit(k - 1)
     return n, F.arrays_zip(*[F.slice(w, i + 1, m) for i in range(k)])
-
-
-def shingle_slots(text: Column, k: int) -> tuple[Column, Column]:
-    """The shared k-gram construction: (word count, zipped struct array
-    of k shifted word slices) — ONE definition of the shingle identity
-    consumed by both the string form (``shingles_col``) and the int64
-    hashed form (``operators.scrub.hashed_shingles_col``), so a
-    tokenization change can never fork them.  Built by zipping k
-    shifted slices — a sequence+element_at lambda is ~16x slower at
-    sf0.1: per-element computed-index lookups defeat codegen."""
-    return shingle_slots_of_words(words_col(F.lower(text)), k)
-
-
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Word k-gram shingles as an array (empty when < k words)."""
-    n, z = shingle_slots(text, k)
-    mk = F.transform(z, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(k)]))
-    return F.when(n < F.lit(k), F.array().cast("array<string>")).otherwise(mk)
-
-
-def minhash_col(shingles: Column, seed: int) -> Column:
-    """One MinHash value: lexicographic min of md5(seed || ':' || s).
-    md5-hex min is engine-portable (identical in Spark and DuckDB)."""
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s)))
-    )

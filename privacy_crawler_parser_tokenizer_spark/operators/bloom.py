@@ -12,8 +12,9 @@ vectorized 64-bit hash over the whole Series at once — no per-row
 Python), expanded to k index positions by standard double hashing
 h_i = h1 + i*h2 (Kirsch–Mitzenmacher).  The filter pickles cleanly for
 ``sc.broadcast`` and supports sharding by ``pmod(h1, n_shards)`` so a
-10^10-key filter splits across several broadcasts (~1.2 GB at 1% FPR
-total — each shard stays under the broadcast sweet spot).
+10^10-key filter splits across several broadcasts.  At 1% FPR the
+filter needs -ln(0.01)/ln(2)^2 ~ 9.6 bits per key, so 10^10 keys take
+~12 GB in total.
 """
 
 from __future__ import annotations

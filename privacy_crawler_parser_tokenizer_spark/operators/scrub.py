@@ -1,17 +1,5 @@
-"""Training-corpus scrubbing operators: benchmark decontamination and
-PII redaction.
-
-Both are standard large-scale LLM-data-pipeline stages the reference
-repo predates; they complete the dedup/quality/gate family in
-queries.py (the composed ``training_keep_list`` shows where they slot).
-
-Decontamination follows the n-gram collision method used for GPT-3 /
-Llama training sets: a document is contaminated when any word n-gram
-(default n=13) also appears in an evaluation benchmark.  Shape at
-100 TB: the benchmark n-gram set is tiny (test sets, not the corpus) —
-broadcast it; the document side shingles in-row (zipped shifted
-slices, codegen-friendly), dedupes per doc, and aggregates with one
-shuffle on doc_id.  No corpus self-join anywhere.
+"""Training-corpus scrubbing operators: PII redaction and exact-substring
+dedup.
 
 PII redaction is a chain of native ``regexp_replace`` expressions —
 JVM-side, whole-stage-codegen, shuffle-free, RE2-compatible patterns
@@ -19,6 +7,12 @@ JVM-side, whole-stage-codegen, shuffle-free, RE2-compatible patterns
 Pattern order matters and is fixed: wider numeric shapes (credit card)
 before narrower ones (phone) so substrings of an already-redacted span
 can't re-match.
+
+Exact-substring dedup (Lee et al. 2022, "Deduplicating Training Data
+Makes Language Models Better") finds the word runs of length >= k that
+occur earlier in the corpus, reports them per document and cuts them
+out.  The ``pii_scrub`` and ``exact_substring_dedup`` board entries in
+queries.py run these and check them against DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -26,12 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    shingle_slots,
-    shingle_slots_of_words,
-    shingles_col,
-    words_col,
-)
+from ..functions.text import shingle_slots_of_words, words_col
 
 # ---------------------------------------------------------------- PII ----
 
@@ -80,68 +69,6 @@ def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# ------------------------------------------------------- decontamination ----
-
-def _hashed_gram_array(n: Column, z: Column, k: int) -> Column:
-    """ONE hashed k-gram identity — xxhash64 over the k zipped word
-    slots, empty array below k words — shared by decontamination and
-    exact-substring dedup so the int64 identity can never fork between
-    them (the same reason ``shingle_slots`` is shared)."""
-    mk = F.transform(z, lambda s: F.xxhash64(*[s[str(i)] for i in range(k)]))
-    return F.when(n < F.lit(k), F.array().cast("array<bigint>")).otherwise(mk)
-
-
-def hashed_shingles_col(text: Column, n: int = 13) -> Column:
-    """Distinct word n-gram identities as int64 — xxhash64 straight
-    over the n zipped word slots (the SHARED ``shingle_slots``
-    construction, so the identity can never fork from the string
-    form), never materializing the concatenated shingle string.
-    Collision identity matches the string form except for 64-bit hash
-    collisions (~2^-64/pair — negligible even at 100 TB shingle
-    counts).  Sized for the broadcast side: an int64 set is ~10x
-    smaller in the hash map than ~80-byte 13-gram strings."""
-    sz, z = shingle_slots(text, n)
-    return F.array_distinct(_hashed_gram_array(sz, z, n))
-
-
-def decontaminate(docs: DataFrame, benchmark: DataFrame, *,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  n: int = 13, broadcast: bool = True) -> DataFrame:
-    """Per-document benchmark-collision report: (id, n_collisions,
-    contaminated).  Every input document appears exactly once;
-    ``n_collisions`` counts DISTINCT colliding n-grams.
-
-    Plan shape: docs shingle+dedupe in-row (no shuffle), the benchmark
-    n-gram set joins broadcast (default — it is an eval set, not a
-    corpus), and one hash aggregation on ``id_col`` produces the
-    report.  Set ``broadcast=False`` for a pathologically large
-    benchmark to fall back to a shuffle join.
-
-    Both sides join on :func:`hashed_shingles_col` int64 identities
-    (tools/ab_decon.py interleaved A/B at sf0.1/32c: string join
-    2.51 s, hash-of-concat 2.33 s, struct-hash 2.21 s — the join was
-    never the dominant cost, but the int64 key also shrinks the
-    broadcast map ~10x, which is what matters at a real benchmark
-    suite's size)."""
-    bench = benchmark.select(
-        F.explode(hashed_shingles_col(F.col(text_col), n)).alias("ngram")
-    ).distinct()
-    if broadcast:
-        bench = F.broadcast(bench)
-    grams = docs.select(
-        F.col(id_col),
-        F.explode_outer(hashed_shingles_col(F.col(text_col), n)).alias("ngram"),
-    )
-    hit = grams.join(
-        bench.withColumn("_hit", F.lit(1)), "ngram", "left"
-    )
-    return (
-        hit.groupBy(id_col)
-        .agg(F.coalesce(F.sum("_hit"), F.lit(0)).cast("long").alias("n_collisions"))
-        .withColumn("contaminated", F.col("n_collisions") > 0)
-    )
-
-
 # ------------------------------------------------- exact-substring ----
 
 
@@ -163,7 +90,7 @@ def _esub_report(toks: DataFrame, k: int, *, with_words: bool = False) -> DataFr
     windows merge into maximal spans.
 
     Shape at 100 TB: gram identities are int64 xxhash64 over the
-    SHARED ``shingle_slots`` zipped word slots (never materializes
+    ``shingle_slots_of_words`` zipped word slots (never materializes
     gram strings; 2^-64/pair collision odds); the global
     first-occurrence winner is ONE partial-aggregable groupBy
     (min(struct(_id, pos)) — map-side combine collapses viral
@@ -174,9 +101,9 @@ def _esub_report(toks: DataFrame, k: int, *, with_words: bool = False) -> DataFr
     from pyspark.sql import Window
 
     n, z = shingle_slots_of_words(F.col("_ws"), k)
-    grams = toks.select(
-        "_id", F.posexplode(_hashed_gram_array(n, z, k)).alias("pos", "g")
-    )
+    ids = F.transform(z, lambda s: F.xxhash64(*[s[str(i)] for i in range(k)]))
+    ids = F.when(n < F.lit(k), F.array().cast("array<bigint>")).otherwise(ids)
+    grams = toks.select("_id", F.posexplode(ids).alias("pos", "g"))
     winners = grams.groupBy("g").agg(
         F.min(F.struct("_id", "pos")).alias("_w"),
         F.count(F.lit(1)).alias("_cnt"),

@@ -9,9 +9,8 @@ HUGEINT otherwise).
 
 Coverage maps to SURVEY.md §2: sentence rules (§2.3), dedupe/window/
 agg/sample (§2.2, §2.4), URL completion+canonicalization (§2.2), the
-full extraction pipeline with a closed-form oracle (§2.3), plus the
-training-data operators (exact/MinHash/Jaccard dedup, SimHash,
-quality/lang-id/fingerprint).
+full extraction pipeline with a closed-form oracle (§2.3), plus
+exact-substring dedup, token counts and document fingerprints.
 """
 
 from __future__ import annotations
@@ -23,16 +22,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.text import (
-    EN_STOPWORDS,
-    LANG_MARKERS,
-    N_BANDS,
     canonicalize_url_col,
     complete_link_col,
     fingerprint_col,
-    lang_id_col,
-    quality_score_col,
     rule_hits_col,
-    shingles_col,
     word_count_col,
 )
 
@@ -206,58 +199,6 @@ def q_lang_rollup(spark, sf_dir):
     )
 
 
-_SW = "['" + "', '".join(EN_STOPWORDS) + "']"
-
-
-def _mix_sql() -> str:
-    from .operators.mixing import PPM, doc_hash_ppm_sql
-
-    hash_expr = doc_hash_ppm_sql("t.doc_id")
-    return f"""
-    WITH t AS (
-      SELECT doc_id, lang,
-             CAST(CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\\s+')) END
-                  AS BIGINT) AS n_tok
-      FROM documents),
-    k AS (SELECT lang, sum(n_tok) AS ktok FROM t GROUP BY lang),
-    g AS (SELECT sum(ktok) AS total, count(*) AS n_keys FROM k),
-    r AS (SELECT lang,
-                 CASE WHEN k.ktok <= 0 THEN {PPM}
-                      ELSE least({PPM}, (g.total * {PPM}) // (g.n_keys * k.ktok))
-                 END AS rate_ppm
-          FROM k, g)
-    SELECT t.doc_id, t.lang, t.n_tok, CAST(r.rate_ppm AS BIGINT) AS rate_ppm
-    FROM t JOIN r ON t.lang IS NOT DISTINCT FROM r.lang
-    WHERE {hash_expr} < r.rate_ppm
-    """
-
-
-@query("mix_sample", _mix_sql())
-def q_mix_sample(spark, sf_dir):
-    """Deterministic source-mixing sampler (The Pile / Llama / DoReMi
-    shape): per-language token totals set integer ppm sampling rates
-    targeting uniform token shares, applied with an engine-portable
-    multiplicative doc-id hash — the kept SET is reproducible and
-    oracle-checked, not just its size.  Scale shape: the rate table is
-    one partial-aggregable groupBy (|langs| rows) broadcast into a
-    map-only filter; no shuffle touches the corpus
-    (operators/mixing.py).  Rotates the generic set-negation demo
-    `docs_without_pairs` off the 50-cap board (anti-join coverage
-    stays on training_keep_list's left_anti stage)."""
-    from .operators.mixing import mix_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        "lang",
-        F.coalesce(word_count_col(F.col("text")), F.lit(0))
-        .cast("long")
-        .alias("n_tok"),
-    )
-    return mix_sample(t, "lang")
-
-
 _CHAR_BINS = "[0, 100, 200, 400, 800, 1600, 3200, 6400]"
 
 
@@ -280,72 +221,6 @@ def q_char_histogram(spark, sf_dir):
     )
 
 
-
-
-@query(
-    "quality_scores",
-    f"""
-    WITH w AS (
-      SELECT doc_id, text,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS lwords,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(trim(text), '\\s+') END AS words
-      FROM documents
-    ), c AS (
-      SELECT doc_id,
-        len(words) AS n,
-        CASE WHEN len(lwords) = 0 THEN 0.0
-             ELSE len(list_filter(lwords, x -> list_contains({_SW}, x))) * 1.0 / len(lwords) END AS swr,
-        CASE WHEN len(text) = 0 THEN 0.0
-             ELSE len(regexp_replace(text, '[\\p{{L}}\\p{{N}}\\s]', '', 'g')) * 1.0 / len(text) END AS pr
-      FROM w
-    )
-    SELECT doc_id, round(
-        (CASE WHEN n >= 50 AND n <= 2000 THEN 1.0 WHEN n = 0 THEN 0.0 ELSE 0.5 END) * 0.4
-        + least(swr * 4.0, 1.0) * 0.4
-        + (1.0 - least(pr * 5.0, 1.0)) * 0.2, 6) AS q
-    FROM c
-    """,
-)
-def q_quality_scores(spark, sf_dir):
-    """Training-data quality heuristic (length/stopword/punct ratios)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", quality_score_col(F.col("text")).alias("q"))
-
-
-def _lang_id_sql() -> str:
-    parts = []
-    for lang in sorted(LANG_MARKERS):
-        markers = "['" + "', '".join(LANG_MARKERS[lang]) + "']"
-        parts.append(
-            f"len(list_filter(lwords, x -> list_contains({markers}, x))) AS c_{lang}"
-        )
-    cols = ", ".join(parts)
-    langs = sorted(LANG_MARKERS)
-    best = "greatest(" + ", ".join(f"c_{la}" for la in langs) + ")"
-    case = " ".join(
-        f"WHEN c_{la} = best AND best > 0 THEN '{la}'" for la in langs
-    )
-    return f"""
-    WITH w AS (
-      SELECT doc_id,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS lwords
-      FROM documents
-    ), c AS (SELECT doc_id, {cols} FROM w),
-    b AS (SELECT *, {best} AS best FROM c)
-    SELECT doc_id, CASE {case} ELSE 'und' END AS pred_lang FROM b
-    """
-
-
-@query("lang_id", _lang_id_sql())
-def q_lang_id(spark, sf_dir):
-    """Heuristic n-gram/stopword language ID (training-data operator)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", lang_id_col(F.col("text")).alias("pred_lang"))
-
-
 @query(
     "fingerprints",
     """
@@ -360,141 +235,8 @@ def q_fingerprints(spark, sf_dir):
     return docs.select("doc_id", fingerprint_col(F.col("text")).alias("fp"))
 
 
-_N_BANDS = N_BANDS
-
-_SHINGLES_SQL = """
-    SELECT doc_id,
-           CASE WHEN len(words) < 3 THEN CAST([] AS VARCHAR[])
-                ELSE list_transform(range(1, len(words) - 1),
-                     i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]) END AS sh
-    FROM (
-      SELECT doc_id,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS words
-      FROM documents)
-"""
-
-
-def _minhash_sql() -> str:
-    bands = ", ".join(
-        f"list_min(list_transform(sh, s -> md5('{b}:' || s))) AS mh_{b}"
-        for b in range(_N_BANDS)
-    )
-    unions = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, mh_{b} AS mh FROM m" for b in range(_N_BANDS)
-    )
-    return f"""
-    WITH s AS ({_SHINGLES_SQL}),
-    m AS (SELECT doc_id, {bands} FROM s WHERE len(sh) > 0)
-    SELECT doc_id, CAST(band AS BIGINT) AS band, mh FROM ({unions})
-    """
-
-
-@query("minhash_bands", _minhash_sql())
-def q_minhash_bands(spark, sf_dir):
-    """MinHash signatures over word-3-gram shingles; one row per band.
-    md5-hex lexicographic min is engine-portable (no seed-dependent
-    integer hashing).  Shingling happens ONCE; the per-band minima are
-    computed from the same array and stacked (a per-band union would
-    re-split and re-shingle every document N_BANDS times)."""
-    docs = _t(spark, sf_dir, "documents")
-    sh = shingles_col(F.col("text")).alias("sh")
-    base = docs.select("doc_id", sh).filter(F.size("sh") > 0)
-    # explode + per-band md5 columns + hash-agg min: the md5s run in
-    # whole-stage codegen instead of interpreted array lambdas (~4x
-    # faster at sf0.1); min over duplicates == min over distinct, so
-    # array_distinct first cuts the exploded row count
-    e = base.select("doc_id", F.explode(F.array_distinct("sh")).alias("s"))
-    sig = e.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{b}:"), F.col("s")))).alias(f"mh_{b}")
-            for b in range(_N_BANDS)
-        ]
-    )
-    stack = ", ".join(f"{b}L, mh_{b}" for b in range(_N_BANDS))
-    return sig.select(
-        "doc_id", F.expr(f"stack({_N_BANDS}, {stack}) AS (band, mh)")
-    )
-
-
-@query(
-    "lsh_candidate_pairs",
-    f"""
-    WITH s AS ({_SHINGLES_SQL}),
-    m AS (SELECT doc_id,
-                 {", ".join(f"list_min(list_transform(sh, s -> md5('{b}:' || s))) AS mh_{b}" for b in range(_N_BANDS))}
-          FROM s WHERE len(sh) > 0),
-    bands AS ({" UNION ALL ".join(f"SELECT doc_id, {b} AS band, mh_{b} AS mh FROM m" for b in range(_N_BANDS))})
-    SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-    FROM bands a JOIN bands b ON a.band = b.band AND a.mh = b.mh AND a.doc_id < b.doc_id
-    """,
-)
-def q_lsh_candidate_pairs(spark, sf_dir):
-    """MinHash-LSH near-dup candidates: docs sharing any band minhash.
-
-    Bucket-local pair expansion instead of a signature self-join: one
-    scan of the signature table, one shuffle on (band, mh), then pairs
-    are generated inside each bucket (collect_list + double explode,
-    all codegen).  The previous self-join either recomputed the
-    shingle+minhash subtree on both sides or needed an unbounded
-    ``persist`` that leaked cache across a long session (ADVICE r01)."""
-    bands = q_minhash_bands(spark, sf_dir)
-    bucket = (
-        bands.groupBy("band", "mh")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    return (
-        bucket.select("ids", F.explode("ids").alias("a"))
-        .select("a", F.explode("ids").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-
-
-@query(
-    "ngram_jaccard_pairs",
-    f"""
-    WITH s AS ({_SHINGLES_SQL}),
-    e AS (SELECT doc_id, unnest(list_distinct(sh)) AS sh FROM s WHERE len(sh) > 0),
-    sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS a, b.doc_id AS b, CAST(count(*) AS BIGINT) AS i
-      FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT a, b, round(i * 1.0 / (sa.n + sb.n - i), 6) AS jac
-    FROM inter JOIN sz sa ON inter.a = sa.doc_id JOIN sz sb ON inter.b = sb.doc_id
-    WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.3
-    """,
-)
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    """Exact n-gram Jaccard near-dup pairs (>= 0.3) via shingle join."""
-    docs = _t(spark, sf_dir, "documents")
-    e = (
-        docs.select(
-            "doc_id", F.explode(F.array_distinct(shingles_col(F.col("text")))).alias("sh")
-        )
-    )
-    sz = e.groupBy("doc_id").agg(F.count("*").cast("long").alias("n"))
-    a = e.alias("a")
-    b = e.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .agg(F.count("*").cast("long").alias("i"))
-    )
-    j = (
-        inter.join(sz.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
-        .join(sz.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
-        .withColumn("jac_raw", F.col("i") / (F.col("na") + F.col("nb") - F.col("i")))
-        .filter(F.col("jac_raw") >= 0.3)
-    )
-    return j.select("a", "b", F.round("jac_raw", 6).alias("jac"))
-
-
 # ---------------------------------------------------------------------------
-# more training-data operators: token counting, SimHash, sessionization
+# token counting (documents)
 # ---------------------------------------------------------------------------
 
 _TOKEN_RE = r"\p{L}+|\p{N}|[^\s\p{L}\p{N}]"
@@ -517,393 +259,6 @@ def q_token_counts(spark, sf_dir):
         F.size(F.regexp_extract_all("text", F.lit(_TOKEN_RE), 0))
         .cast("long")
         .alias("n_tokens"),
-    )
-
-
-# 16-bit SimHash: per-word hash from the first 4 md5 nibbles (engine-
-# portable: md5/instr/substr/% behave identically in Spark and DuckDB)
-_NIB = "(instr('0123456789abcdef', substr(md5(w), {k}, 1)) - 1)"
-_H16 = " + ".join(
-    f"{_NIB.format(k=k)} * {16 ** (4 - k)}" for k in range(1, 5)
-)
-_SIM_SUMS = ", ".join(
-    f"sum(CASE WHEN h % {1 << (j + 1)} >= {1 << j} THEN 1 ELSE -1 END) AS s{j}"
-    for j in range(16)
-)
-_SIM_VAL = " + ".join(f"(CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(16))
-
-
-@query(
-    "simhash",
-    f"""
-    WITH w AS (
-      SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-      FROM documents WHERE trim(text) <> ''
-    ),
-    h AS (SELECT doc_id, {_H16} AS h FROM w),
-    s AS (SELECT doc_id, {_SIM_SUMS} FROM h GROUP BY doc_id)
-    SELECT doc_id, CAST({_SIM_VAL} AS BIGINT) AS simhash FROM s
-    """,
-)
-def q_simhash(spark, sf_dir):
-    """SimHash near-dup fingerprint (16-bit, md5-nibble word hashes):
-    explode words -> per-bit +/-1 majority vote -> bit assembly.  All
-    native expressions; the identical arithmetic runs in DuckDB."""
-    docs = _t(spark, sf_dir, "documents")
-    e = (
-        docs.filter(F.trim("text") != "")
-        .select("doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w"))
-        .withColumn("h", F.expr(_H16))
-    )
-    g = e.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.expr(f"CASE WHEN h % {1 << (j + 1)} >= {1 << j} THEN 1 ELSE -1 END")
-            ).alias(f"s{j}")
-            for j in range(16)
-        ]
-    )
-    return g.select("doc_id", F.expr(_SIM_VAL).cast("long").alias("simhash"))
-
-
-# 32-bit SimHash for the PAIR generator: a 16-bit hash has only 64
-# nibble-buckets — mega-buckets and a quadratic pair explosion at 60k+
-# docs.  32 bits banded as 2 x 16-bit halves gives 65,536 buckets per
-# band; pigeonhole covers hamming <= 1 exactly.
-_H32 = " + ".join(
-    f"{_NIB.format(k=k)} * CAST({16 ** (8 - k)} AS BIGINT)" for k in range(1, 9)
-)
-_SIM32_SUMS = ", ".join(
-    f"sum(CASE WHEN h % {1 << (j + 1)} >= {1 << j} THEN 1 ELSE -1 END) AS s{j}"
-    for j in range(32)
-)
-_SIM32_VAL = " + ".join(
-    f"(CASE WHEN s{j} > 0 THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-    for j in range(32)
-)
-_SIMHASH32_SQL = f"""
-    WITH w AS (
-      SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-      FROM documents WHERE trim(text) <> ''
-    ),
-    h AS (SELECT doc_id, {_H32} AS h FROM w),
-    s AS (SELECT doc_id, {_SIM32_SUMS} FROM h GROUP BY doc_id)
-    SELECT doc_id, CAST({_SIM32_VAL} AS BIGINT) AS simhash FROM s
-"""
-
-
-@query(
-    "simhash_candidates",
-    f"""
-    WITH sim AS ({_SIMHASH32_SQL}),
-    bands AS (
-      SELECT doc_id, t.b AS band, (simhash >> (16 * t.b)) & 65535 AS nib
-      FROM sim, (VALUES (0), (1)) t(b)
-    ),
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band = y.band AND x.nib = y.nib AND x.doc_id < y.doc_id
-    )
-    SELECT cand.a, cand.b
-    FROM cand
-    JOIN sim sa ON cand.a = sa.doc_id
-    JOIN sim sb ON cand.b = sb.doc_id
-    WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 1
-    """,
-)
-def q_simhash_candidates(spark, sf_dir):
-    """SimHash near-dup PAIRS: 32-bit fingerprint banded as 2 x 16-bit
-    halves, bucket-join on any equal band (pigeonhole: <=1 differing
-    bit must leave one band intact, so banding never misses), then
-    exact-filter hamming(simhash) <= 1 with a codegen bit_count.
-
-    Bucket-local pair expansion (collect_list + double explode), the
-    same no-self-join shape as lsh_candidate_pairs.  65,536 buckets per
-    band keep candidate sets selective at corpus scale (the 16-bit
-    q_simhash fingerprint has only 64 nibble-buckets — quadratic at
-    60k+ docs); at 100 TB the identical plan widens to 64-bit with
-    16-bit bands."""
-    docs = _t(spark, sf_dir, "documents")
-    e = (
-        docs.filter(F.trim("text") != "")
-        .select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w"),
-        )
-        .withColumn("h", F.expr(_H32))
-    )
-    g = e.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.expr(f"CASE WHEN h % {1 << (j + 1)} >= {1 << j} THEN 1 ELSE -1 END")
-            ).alias(f"s{j}")
-            for j in range(32)
-        ]
-    )
-    sim = g.select("doc_id", F.expr(_SIM32_VAL).cast("long").alias("simhash"))
-    nibs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(f"shiftright(simhash, {16 * b}) & 65535").alias("nib"),
-            )
-            for b in range(2)
-        ]
-    )
-    # the fingerprint rides through the bucket expansion so the 32-sum
-    # aggregate computes ONCE (joining hashes back would re-derive the
-    # whole fingerprint subtree on both join sides)
-    bands = sim.select("doc_id", "simhash", F.explode(nibs).alias("x")).select(
-        "doc_id", "simhash", F.col("x.band").alias("band"), F.col("x.nib").alias("nib")
-    )
-    bucket = (
-        bands.groupBy("band", "nib")
-        .agg(F.collect_list(F.struct("doc_id", "simhash")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    return (
-        bucket.select("ids", F.explode("ids").alias("x"))
-        .select("x", F.explode("ids").alias("y"))
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .filter(
-            F.bit_count(
-                F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))
-            ) <= 1
-        )
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .distinct()
-    )
-
-
-# half-up fraction quantized to 6 dp in EXACT integer arithmetic — the
-# events_running_avg tie-proof pattern (double division + round() can
-# disagree between engines on exact .5e-6 boundaries)
-def _microfrac_sql(num: str, den: str) -> str:
-    return (
-        f"CASE WHEN {den} > 0 THEN "
-        f"CAST((2000000 * CAST({num} AS BIGINT) + CAST({den} AS BIGINT)) "
-        f"// (2 * CAST({den} AS BIGINT)) AS DOUBLE) / 1000000.0 "
-        f"ELSE 0.0 END"
-    )
-
-
-def _microfrac_spark(num: str, den: str):
-    return F.expr(
-        f"CASE WHEN {den} > 0 THEN "
-        f"CAST((2000000 * CAST({num} AS BIGINT) + CAST({den} AS BIGINT)) "
-        f"DIV (2 * CAST({den} AS BIGINT)) AS DOUBLE) / 1000000.0 "
-        f"ELSE 0.0 END"
-    )
-
-
-_GOPHER_SQL = (
-    f"""
-    WITH w AS (
-      SELECT doc_id, text,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(trim(text), '\\s+') END AS words,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS lwords,
-             string_split(text, chr(10)) AS lines
-      FROM documents
-    ), c AS (
-      SELECT doc_id,
-        CAST(len(words) AS BIGINT) AS n,
-        CAST(list_sum(list_transform(words, x -> len(x))) AS BIGINT) AS sumlen,
-        CAST(len(lines) AS BIGINT) AS nl,
-        CAST(len(list_filter(lines, l -> starts_with(ltrim(l), '-')
-             OR starts_with(ltrim(l), '*'))) AS BIGINT) AS nb,
-        CAST(len(list_filter(lines, l -> ends_with(rtrim(l), '...'))) AS BIGINT) AS ne,
-        CAST(len(list_filter(lwords, x -> list_contains({{_SW}}, x))) AS BIGINT) AS ns
-      FROM w
-    )
-    SELECT doc_id, n AS n_words,
-      {{mean_wlen}} AS mean_wlen,
-      {{bullet_frac}} AS bullet_frac,
-      {{ellipsis_frac}} AS ellipsis_frac,
-      {{stop_frac}} AS stop_frac,
-      (n >= 50 AND n <= 100000
-       AND {{mean_wlen}} >= 3.0 AND {{mean_wlen}} <= 10.0
-       AND {{bullet_frac}} <= 0.9 AND {{ellipsis_frac}} <= 0.3
-       AND {{stop_frac}} >= 0.06) AS gopher_pass
-    FROM c
-    """.format(
-        _SW=_SW,
-        mean_wlen=_microfrac_sql("sumlen", "n"),
-        bullet_frac=_microfrac_sql("nb", "nl"),
-        ellipsis_frac=_microfrac_sql("ne", "nl"),
-        stop_frac=_microfrac_sql("ns", "n"),
-    )
-)
-
-
-@query("gopher_quality", _GOPHER_SQL)
-def q_gopher_quality(spark, sf_dir):
-    """Gopher-style document quality rules (Rae et al. 2021 §A1.1,
-    adapted): word count band, mean word length band, bullet/ellipsis
-    line fractions, stopword fraction — each fully native, each
-    micro-quantized so the pass/fail booleans are bit-identical across
-    engines.  The [NEW] training-data gate alongside quality_scores."""
-    docs = _t(spark, sf_dir, "documents")
-    empty = F.array().cast("array<string>")
-    c = docs.select(
-        "doc_id",
-        F.when(F.trim("text") == "", empty)
-        .otherwise(F.split(F.trim("text"), r"\s+"))
-        .alias("words"),
-        F.when(F.trim("text") == "", empty)
-        .otherwise(F.split(F.lower(F.trim("text")), r"\s+"))
-        .alias("lwords"),
-        F.split("text", "\n").alias("lines"),
-    ).select(
-        "doc_id",
-        F.size("words").cast("long").alias("n"),
-        F.aggregate(
-            "words", F.lit(0).cast("long"), lambda a, x: a + F.length(x)
-        ).alias("sumlen"),
-        F.size("lines").cast("long").alias("nl"),
-        F.size(
-            F.filter(
-                "lines",
-                lambda l: F.ltrim(l).startswith("-") | F.ltrim(l).startswith("*"),
-            )
-        ).cast("long").alias("nb"),
-        F.size(
-            F.filter("lines", lambda l: F.rtrim(l).endswith("..."))
-        ).cast("long").alias("ne"),
-        F.size(
-            F.filter(
-                "lwords", lambda x: F.array_contains(_sw_array(), x)
-            )
-        ).cast("long").alias("ns"),
-    )
-    mean_wlen = _microfrac_spark("sumlen", "n")
-    bullet = _microfrac_spark("nb", "nl")
-    ellipsis = _microfrac_spark("ne", "nl")
-    stop = _microfrac_spark("ns", "n")
-    return c.select(
-        "doc_id",
-        F.col("n").alias("n_words"),
-        mean_wlen.alias("mean_wlen"),
-        bullet.alias("bullet_frac"),
-        ellipsis.alias("ellipsis_frac"),
-        stop.alias("stop_frac"),
-        (
-            (F.col("n") >= 50) & (F.col("n") <= 100000)
-            & (mean_wlen >= 3.0) & (mean_wlen <= 10.0)
-            & (bullet <= 0.9) & (ellipsis <= 0.3) & (stop >= 0.06)
-        ).alias("gopher_pass"),
-    )
-
-
-def _sw_array():
-    return F.array(*[F.lit(s) for s in EN_STOPWORDS])
-
-
-@query(
-    "dup_ngram_fraction",
-    f"""
-    WITH s AS ({{_SHINGLES}})
-    SELECT doc_id,
-           {{frac}} AS dup_frac
-    FROM (SELECT doc_id, CAST(len(sh) AS BIGINT) AS total,
-                 CAST(len(sh) - len(list_distinct(sh)) AS BIGINT) AS dups
-          FROM s)
-    """.format(
-        _SHINGLES=_SHINGLES_SQL,
-        frac=_microfrac_sql("dups", "total"),
-    ),
-)
-def q_dup_ngram_fraction(spark, sf_dir):
-    """Repetition-removal signal (Rae et al. 2021 §A1.2): fraction of a
-    document's word 3-grams that are duplicates.  Zero-shuffle: the
-    shingle array never explodes — array_distinct runs inside the row."""
-    docs = _t(spark, sf_dir, "documents")
-    sh = shingles_col(F.col("text"))
-    c = docs.select(
-        "doc_id",
-        F.size(sh).cast("long").alias("total"),
-        (F.size(sh) - F.size(F.array_distinct(sh))).cast("long").alias("dups"),
-    )
-    return c.select(
-        "doc_id", _microfrac_spark("dups", "total").alias("dup_frac")
-    )
-
-
-@query(
-    "sessionize",
-    """
-    SELECT event_id, user_id,
-           CAST(sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
-                OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS session_id
-    FROM (
-      SELECT event_id, user_id, ts,
-             epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) AS gap
-      FROM events)
-    """,
-)
-def q_sessionize(spark, sf_dir):
-    """30-minute-gap sessionization (stateful stream operator expressed
-    as a cumulative window; the Structured Streaming twin lives in
-    streaming/)."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    news = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    return (
-        e.withColumn("_new", news)
-        .withColumn("session_id", F.sum("_new").over(w).cast("long"))
-        .select("event_id", "user_id", "session_id")
-    )
-
-
-@query(
-    "training_keep_list",
-    f"""
-    WITH g AS ({_GOPHER_SQL}),
-    l AS ({_lang_id_sql()}),
-    d AS (
-      SELECT doc_id,
-             (row_number() OVER (PARTITION BY text ORDER BY doc_id) > 1) AS dup
-      FROM documents
-    ),
-    bands AS ({_minhash_sql()}),
-    losers AS (
-      SELECT DISTINCT y.doc_id AS doc_id
-      FROM bands x JOIN bands y
-        ON x.band = y.band AND x.mh = y.mh AND x.doc_id < y.doc_id
-    )
-    SELECT g.doc_id FROM g
-    JOIN l USING (doc_id) JOIN d USING (doc_id)
-    WHERE g.gopher_pass AND l.pred_lang = 'en' AND NOT d.dup
-      AND g.doc_id NOT IN (SELECT doc_id FROM losers)
-    """,
-)
-def q_training_keep_list(spark, sf_dir):
-    """The COMPOSED training-data gate — the pipeline a 100TB corpus
-    runs end to end: Gopher quality rules AND English language-ID AND
-    exact-dedup first-writer AND LSH near-dup survivor (a near-dup
-    candidate pair keeps its lower doc_id).  Every stage reuses the
-    standalone oracle-checked operator; the composite is itself
-    hash-checked, proving the operators compose without semantic
-    drift."""
-    g = q_gopher_quality(spark, sf_dir).select("doc_id", "gopher_pass")
-    lang = q_lang_id(spark, sf_dir)
-    dup = q_exact_dedup(spark, sf_dir)
-    losers = (
-        q_lsh_candidate_pairs(spark, sf_dir)
-        .select(F.col("b").alias("doc_id"))
-        .distinct()
-    )
-    return (
-        g.join(lang, "doc_id")
-        .join(dup, "doc_id")
-        .filter(
-            F.col("gopher_pass") & (F.col("pred_lang") == "en") & ~F.col("dup")
-        )
-        .join(losers, "doc_id", "left_anti")
-        .select("doc_id")
     )
 
 
@@ -1232,59 +587,8 @@ def q_complete_links(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# training-sequence assembly (documents)
+# exact-substring dedup (documents)
 # ---------------------------------------------------------------------------
-
-_PACK_L = 128  # training-sequence length in tokens; ~54-word docs make
-# most chunks multi-doc and many docs chunk-spanning at this length
-
-
-def _pack_sql(L: int) -> str:
-    return f"""
-    WITH w AS ({_WORDS_SQL}),
-    t AS (SELECT doc_id, CAST(len(words) AS BIGINT) AS n_tok
-          FROM w WHERE len(words) > 0),
-    s AS (SELECT doc_id, n_tok,
-                 CAST(sum(n_tok) OVER (ORDER BY doc_id) - n_tok AS BIGINT)
-                   AS off
-          FROM t),
-    seg AS (SELECT doc_id, off, n_tok,
-                   unnest(generate_series(off // {L},
-                                          (off + n_tok - 1) // {L}))
-                     AS chunk_id
-            FROM s)
-    SELECT CAST(chunk_id AS BIGINT) AS chunk_id, doc_id,
-           CAST(greatest(off, chunk_id * {L}) - chunk_id * {L}
-                AS BIGINT) AS seg_offset,
-           CAST(least(off + n_tok, (chunk_id + 1) * {L})
-                - greatest(off, chunk_id * {L}) AS BIGINT) AS seg_tokens
-    FROM seg
-    """
-
-
-@query("pack_sequences", _pack_sql(_PACK_L))
-def q_pack_sequences(spark, sf_dir):
-    """Concat-and-chunk sequence packing (GPT-2/3, Llama pretraining):
-    concatenate the tokenized corpus in doc_id order and slice every
-    _PACK_L tokens; emit the (chunk, doc) segment map.  The oracle's
-    global window cumsum is semantically what the operator computes,
-    but the Spark plan uses the two-pass distributed prefix sum of
-    operators/packing.py (bucket subtotals -> tiny-frame cumsum ->
-    broadcast -> in-bucket window) so no full-corpus single-partition
-    sort exists at 100 TB.  Rotates the generic TPC-H Q1 demo
-    `pricing_summary` off the 50-cap board; hash-agg shapes stay
-    covered by lang_freq / order_outcomes, while pricing_summary's
-    decimal-SUM and timestamp-pushdown parity demos leave the board
-    with it (both were generic-engine demos, not reference or
-    pipeline semantics)."""
-    from .operators.packing import pack_segments
-
-    docs = _t(spark, sf_dir, "documents")
-    ntok = docs.select(
-        "doc_id", word_count_col(F.col("text")).cast("long").alias("n_tok")
-    ).filter(F.col("n_tok") > 0)
-    return pack_segments(ntok, _PACK_L)
-
 
 _ESUB_K = 15  # duplicated-run window, in words (Lee et al. use 50 BPE
 # tokens on web-scale corpora; 15 words ~ the same share of this
@@ -1360,10 +664,9 @@ def q_exact_substring_dedup(spark, sf_dir):
     int64, hash-checked against the window/gaps-and-islands oracle.
 
     Spark-first shape for 100 TB: k-gram identities are int64
-    xxhash64 over the SHARED ``shingle_slots`` zipped word slots (the
-    decontaminate identity — never materializes gram strings; ~10x
-    less shuffle than ~100-byte grams; 2^-64/pair collision odds
-    noted), the global first-occurrence winner is ONE
+    xxhash64 over the ``shingle_slots_of_words`` zipped word slots (never
+    materializes gram strings; ~10x less shuffle than ~100-byte grams;
+    2^-64/pair collision odds noted), the global first-occurrence winner is ONE
     partial-aggregable groupBy (min(struct(doc_id, pos)) — map-side
     combine collapses viral boilerplate runs before the exchange, and
     the probe join reuses the aggregation's hash partitioning), and
@@ -1432,6 +735,10 @@ def q_pii_scrub(spark, sf_dir):
     )
 
 
+# ---------------------------------------------------------------------------
+# events, orders and samples (reference statistics and crawler analogs)
+# ---------------------------------------------------------------------------
+
 @query(
     "events_neighbor_context",
     """
@@ -1452,52 +759,6 @@ def q_events_neighbor_context(spark, sf_dir):
         F.coalesce(F.lag("event_type").over(w), F.lit("None")).alias("prev_type"),
         F.coalesce(F.lead("event_type").over(w), F.lit("None")).alias("next_type"),
     )
-
-
-_DECON_N = 13  # the GPT-3 / Llama benchmark-collision shingle width
-
-
-def _decon_sql() -> str:
-    """Benchmark decontamination oracle: 13-gram collisions against a
-    deterministic benchmark slice (doc_id % 17 = 3) of the same corpus."""
-    n = _DECON_N
-    joined = " || ' ' || ".join(f"words[i+{j}]" for j in range(n))
-    return f"""
-    WITH w AS (
-      SELECT doc_id,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS words
-      FROM documents),
-    s AS (
-      SELECT doc_id,
-             CASE WHEN len(words) < {n} THEN CAST([] AS VARCHAR[])
-                  ELSE list_transform(range(1, len(words) - {n - 2}),
-                                      i -> {joined}) END AS sh
-      FROM w),
-    bench AS (SELECT DISTINCT unnest(sh) AS ngram FROM s WHERE doc_id % 17 = 3),
-    e AS (SELECT doc_id, unnest(list_distinct(sh)) AS ngram FROM s),
-    hits AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS c
-             FROM e JOIN bench USING (ngram) GROUP BY 1)
-    SELECT s.doc_id,
-           CAST(coalesce(h.c, 0) AS BIGINT) AS n_collisions,
-           coalesce(h.c, 0) > 0 AS contaminated
-    FROM (SELECT DISTINCT doc_id FROM s) s LEFT JOIN hits h USING (doc_id)
-    """
-
-
-@query("decontaminate", _decon_sql())
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (operators/scrub.py): flag documents
-    sharing any word 13-gram with an evaluation benchmark — here a
-    deterministic slice of the corpus (doc_id % 17 = 3), standing in
-    for a broadcast eval set.  Plan shape: in-row shingle+dedupe (no
-    shuffle), broadcast hash join against the tiny benchmark n-gram
-    set, one aggregation on doc_id — no corpus self-join anywhere."""
-    from .operators.scrub import decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 17 == 3)
-    return decontaminate(docs, bench, n=_DECON_N)
 
 
 @query(
@@ -1798,7 +1059,7 @@ def q_sentence_pipeline(spark, sf_dir):
 # can only drop tail entries, never the headline query.
 # ---------------------------------------------------------------------------
 
-_PROMOTED = ["sentence_pipeline", "frontier_crawl", "training_keep_list"]
+_PROMOTED = ["sentence_pipeline", "frontier_crawl"]
 for _n in _PROMOTED:
     assert _n in QUERIES, _n
 _ORDER = _PROMOTED + [n for n in QUERIES if n not in _PROMOTED]

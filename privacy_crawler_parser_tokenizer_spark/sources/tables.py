@@ -15,27 +15,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# the testdata tables the ``queries()`` board reads; tools/check_oracles.py
+# creates its DuckDB views from this list
+BOARD_TABLES = ("documents", "events", "orders")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (same names DuckDB
-    pre-registers on the oracle side)."""
-    for t in TPCH_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def load_seed_list(path: str, n: int | None = None) -> list[str]:

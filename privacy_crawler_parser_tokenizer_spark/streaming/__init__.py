@@ -1,2 +1,2 @@
 """Structured Streaming jobs: incremental parse/tokenize, watermarked
-windowed aggregation, stateful sessionization."""
+windowed aggregation, exact dedup, and a crawl_log monitor."""

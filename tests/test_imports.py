@@ -95,3 +95,41 @@ def test_bench_headline_names_are_queries():
     assert headline
     missing = [n for n in headline if n not in QUERIES]
     assert not missing, f"bench.py HEADLINE names no query: {missing}"
+
+
+def _table_literals():
+    """Table names passed as string literals to ``_t(spark, sf_dir, ...)``
+    in queries.py, read with ``ast``."""
+    tree = ast.parse((ROOT / PKG / "queries.py").read_text())
+    return {
+        node.args[2].value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_t"
+        and len(node.args) == 3
+        and isinstance(node.args[2], ast.Constant)
+    }
+
+
+def test_board_tables_are_the_tables_queries_read():
+    """``BOARD_TABLES`` is the one list of testdata tables the board
+    reads: each listed table is read by some oracle, and each table a
+    query reads is listed, so tools/check_oracles.py creates no view
+    that nothing uses and misses none that a query needs."""
+    import re
+
+    from privacy_crawler_parser_tokenizer_spark.queries import ORACLE_SQL
+    from privacy_crawler_parser_tokenizer_spark.sources.tables import BOARD_TABLES
+
+    unread = [
+        t for t in BOARD_TABLES
+        if not any(
+            re.search(rf"\b(?:FROM|JOIN)\s+{t}\b", sql, re.IGNORECASE)
+            for sql in ORACLE_SQL.values()
+        )
+    ]
+    assert not unread, f"BOARD_TABLES lists tables no oracle reads: {unread}"
+    literals = _table_literals()
+    assert literals
+    unlisted = sorted(literals - set(BOARD_TABLES))
+    assert not unlisted, f"queries.py reads tables missing from BOARD_TABLES: {unlisted}"

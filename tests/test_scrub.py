@@ -1,28 +1,18 @@
-"""Decontamination + PII-redaction operators (operators/scrub.py).
+"""PII-redaction operator (operators/scrub.py).
 
 PII parity runs the SAME RE2-compatible patterns through DuckDB's
-regexp_replace as an independent engine oracle over real testdata;
-decontamination is checked against a from-scratch Python n-gram
-reference implemented in this file.
+regexp_replace as an independent engine oracle over real testdata.
 """
 
-import re
-
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 from privacy_crawler_parser_tokenizer_spark.operators import scrub
 from privacy_crawler_parser_tokenizer_spark.plans.introspect import (
     formatted_plan,
-    has_broadcast_join,
     n_exchanges,
 )
 
 SF = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------- PII ----
 
 CASES = [
     ("contact bob.smith+x@example.co.uk today", "contact <EMAIL> today"),
@@ -85,87 +75,6 @@ def test_pii_duckdb_engine_parity(spark):
 def test_pii_scrub_is_shuffle_free(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     assert n_exchanges(formatted_plan(scrub.pii_scrub(docs))) == 0
-
-
-# ------------------------------------------------------- decontamination ----
-
-def _py_ngrams(text, n):
-    words = text.lower().split()
-    return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
-
-
-def test_decontaminate_vs_python_reference(spark):
-    docs_rows = [
-        ("a", "the quick brown fox jumps over the lazy dog again and again"),
-        ("b", "completely unrelated content with no overlap whatsoever here"),
-        ("c", "short doc"),
-        ("d", ""),
-        ("e", "the quick brown fox jumps over the lazy dog again and AGAIN"),
-    ]
-    bench_rows = [
-        ("q1", "THE QUICK brown fox jumps over the lazy dog again and more"),
-        ("q2", "benchmark question two text"),
-    ]
-    n = 5
-    docs = spark.createDataFrame(docs_rows, "doc_id string, text string")
-    bench = spark.createDataFrame(bench_rows, "qid string, text string")
-    got = {
-        r["doc_id"]: (r["n_collisions"], r["contaminated"])
-        for r in scrub.decontaminate(docs, bench, n=n).collect()
-    }
-    bench_grams = set().union(*[_py_ngrams(t, n) for _, t in bench_rows])
-    for doc_id, text in docs_rows:
-        hits = len(_py_ngrams(text, n) & bench_grams)
-        assert got[doc_id] == (hits, hits > 0), doc_id
-    # every doc present exactly once, even empty/short ones
-    assert len(got) == len(docs_rows)
-    assert got["a"][1] and got["e"][1] and not got["b"][1]
-    assert got["c"] == (0, False) and got["d"] == (0, False)
-
-
-def test_decontaminate_distinct_counting(spark):
-    # a doc repeating one colliding n-gram 3x still counts it once
-    docs = spark.createDataFrame(
-        [("a", "one two three . one two three . one two three")],
-        "doc_id string, text string",
-    )
-    bench = spark.createDataFrame([("q", "one two three")], "qid string, text string")
-    row = scrub.decontaminate(docs, bench, n=3).collect()[0]
-    assert (row["n_collisions"], row["contaminated"]) == (1, True)
-
-
-def test_decontaminate_plan_broadcasts_benchmark(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    bench = docs.limit(5).select("doc_id", "text")
-    p = formatted_plan(scrub.decontaminate(docs, bench, n=8))
-    assert has_broadcast_join(p)
-    # in-row shingling + broadcast join + ONE doc-side hash-agg shuffle;
-    # the other counted exchanges are the BroadcastExchange itself and
-    # the tiny benchmark-side limit/distinct
-    assert "CartesianProduct" not in p
-    assert n_exchanges(p) <= 4
-
-
-def test_decontaminate_real_docs_no_self_contamination(spark):
-    """Real documents vs an unrelated benchmark: zero collisions; vs a
-    benchmark sampled from themselves: those docs collide."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    alien = spark.createDataFrame(
-        [("q", "zz yy xx ww vv uu tt ss rr qq pp oo nn mm")],
-        "qid string, text string",
-    )
-    rep = scrub.decontaminate(docs, alien, n=13)
-    assert rep.filter("contaminated").count() == 0
-    assert rep.count() == docs.count()
-    sampled = docs.orderBy("doc_id").limit(3).select("doc_id", "text")
-    rep2 = scrub.decontaminate(docs, sampled, n=13)
-    flagged = {r["doc_id"] for r in rep2.filter("contaminated").collect()}
-    long_enough = {
-        r["doc_id"]
-        for r in sampled.collect()
-        if len(r["text"].split()) >= 13
-    }
-    assert long_enough <= flagged
 
 
 def test_pii_patterns_compile_both_engines():

@@ -1,5 +1,6 @@
-"""Streaming jobs: batch equivalence of the sentence, dedup, LSH and
-sessionize streams, the crawl_log monitor, and the CSV sinks."""
+"""Streaming jobs: batch equivalence of the sentence and exact-dedup
+streams, the windowed rule counts, the crawl_log monitor, and the CSV
+sinks."""
 
 import pandas as pd
 import pytest
@@ -67,36 +68,6 @@ def test_streaming_windowed_rule_counts(spark, docs_dir):
     # it) -> one window per passing doc's minute
     assert len({r.win_start for r in rows}) == 3
     assert sum(r.cnt for r in rows) > 0
-
-
-def test_stateful_sessionize_matches_batch(spark):
-    events = [
-        (1, 100, "2026-01-01 10:00:00"),
-        (1, 101, "2026-01-01 10:10:00"),
-        (1, 102, "2026-01-01 11:30:00"),   # gap > 30min -> new session
-        (2, 200, "2026-01-01 09:00:00"),
-        (2, 201, "2026-01-01 09:20:00"),
-    ]
-    pdf = pd.DataFrame(events, columns=["user_id", "event_id", "ts"])
-    pdf["ts"] = pd.to_datetime(pdf["ts"])
-    src = spark.createDataFrame(pdf)
-
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="pcpt-ev-")
-    src.coalesce(1).write.mode("overwrite").parquet(d)
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, ts timestamp").parquet(d)
-    )
-    out = jobs.sessionize_stateful(stream)
-    jobs.run_to_memory(out, "sessions")
-    got = {
-        (r.user_id, r.event_id, r.session_id)
-        for r in spark.table("sessions").collect()
-    }
-    assert got == {
-        (1, 100, 1), (1, 101, 1), (1, 102, 2), (2, 200, 1), (2, 201, 1),
-    }
 
 
 def test_crawl_log_streaming_monitor(spark, tmp_path):
@@ -204,183 +175,3 @@ def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
     assert sorted(
         r.text_hash for r in spark.table("dedup_stream2").collect()
     ) == want_hashes
-
-
-def test_streaming_lsh_candidates_match_batch(spark, tmp_path):
-    """Online LSH near-dup candidates: the union of pairs emitted over
-    the stream == the batch band-bucket pair set (each pair surfaces
-    when its later member arrives)."""
-    import pandas as pd
-
-    from privacy_crawler_parser_tokenizer_spark.functions.text import (
-        N_BANDS,
-        minhash_col,
-        shingles_col,
-    )
-
-    base = "we collect and share your personal data with trusted partners"
-    rows = [
-        ("1", base),
-        ("2", base + " today"),                       # near-dup of 1
-        ("3", "completely different text about cookies and beacons here"),
-        ("4", base + " today"),                       # dup of 2 (and 1)
-        ("5", "another unrelated sentence with distinct shingle content"),
-    ]
-    d = tmp_path / "lsh-docs"
-    # ONE FILE PER DOC + maxFilesPerTrigger=1 => one microbatch per doc:
-    # the bucket state must round-trip across batches for any pair to
-    # surface (the "pair emitted when its LATER member arrives" path)
-    for i, (doc_id, html) in enumerate(rows):
-        spark.createDataFrame(
-            [(doc_id, html,
-              (pd.Timestamp("2026-01-01") + pd.Timedelta(minutes=i)).to_pydatetime())],
-            jobs.DOCS_STREAM_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(str(d))
-
-    stream = jobs.lsh_candidates_stream(
-        jobs.read_documents_stream(spark, str(d), max_files=1)
-    )
-    assert stream.isStreaming
-    jobs.run_to_memory(stream, "lsh_stream")
-    got = {(r.a, r.b) for r in spark.table("lsh_stream").collect()}
-
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(str(d))
-    sh = shingles_col(F.col("html")).alias("sh")
-    bands = (
-        docs.select(F.col("doc_id").cast("long").alias("doc_id"), sh)
-        .filter(F.size("sh") > 0)
-        .select(
-            "doc_id",
-            F.explode(F.array(*[
-                F.struct(F.lit(b).alias("band"),
-                         minhash_col(F.col("sh"), b).alias("mh"))
-                for b in range(N_BANDS)
-            ])).alias("x"),
-        )
-        .select("doc_id", "x.band", "x.mh")
-    )
-    x, y = bands.alias("x"), bands.alias("y")
-    want = {
-        (r.a, r.b)
-        for r in x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.mh") == F.col("y.mh"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .distinct()
-        .collect()
-    }
-    assert got == want
-    assert (1, 2) in got and (2, 4) in got       # real near-dups surfaced
-
-
-def _write_doc_files(spark, d, groups):
-    """One parquet file per group => with max_files=1, one microbatch
-    per group."""
-    import pandas as pd
-
-    i = 0
-    for rows in groups:
-        batch = [
-            (doc_id, html,
-             (pd.Timestamp("2026-01-01") + pd.Timedelta(minutes=i + j)).to_pydatetime())
-            for j, (doc_id, html) in enumerate(rows)
-        ]
-        i += len(rows)
-        spark.createDataFrame(batch, jobs.DOCS_STREAM_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(str(d))
-
-
-def _poll_then_stop(q, pred, timeout_s=150):
-    """Spark 4.1 quirk: availableNow + ProcessingTimeTimeout never
-    terminates — the engine keeps scheduling empty micro-batches as
-    long as the timeout conf is registered (verified: batchIds climb
-    with numInputRows=0 after the source is exhausted, even with zero
-    state rows left).  Finite test runs therefore poll for the expected
-    condition and stop the query explicitly; production streams run
-    continuous triggers and never terminate anyway."""
-    import time
-
-    t0 = time.monotonic()
-    ok = False
-    while time.monotonic() - t0 < timeout_s:
-        try:
-            if pred(q):
-                ok = True
-                break
-        except Exception:
-            pass
-        time.sleep(1)
-    q.stop()
-    assert ok, "stream never reached the expected condition"
-
-
-def test_streaming_lsh_ttl_within_window_matches_batch(spark, tmp_path):
-    """With a TTL far longer than the run, the TTL variant is
-    behaviourally identical to the exact mode: every cross-batch pair
-    of the batch candidate set is emitted."""
-    base = "we collect and share your personal data with trusted partners"
-    d = tmp_path / "lsh-ttl-long"
-    _write_doc_files(spark, d, [
-        [("1", base)],
-        [("2", base + " today")],
-        [("3", base + " today")],
-    ])
-    stream = jobs.lsh_candidates_stream(
-        jobs.read_documents_stream(spark, str(d), max_files=1), ttl="1 hour"
-    )
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory").queryName("lsh_ttl_long")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    want = {(1, 2), (1, 3), (2, 3)}
-
-    def done(q):
-        got = {(r.a, r.b) for r in spark.table("lsh_ttl_long").collect()}
-        return want <= got
-
-    _poll_then_stop(q, done)
-    got = {(r.a, r.b) for r in spark.table("lsh_ttl_long").collect()}
-    assert want <= got                   # cross-batch pairs intact
-
-
-def test_streaming_lsh_ttl_evicts_stale_buckets(spark, tmp_path):
-    """TTL=1ms: every bucket is evicted between micro-batches (batch
-    gaps >> 1ms), so (a) a pair split across an idle gap is missed —
-    the stated bounded-state trade, (b) within-batch pairs still
-    surface, and (c) the state store drains to ZERO rows once all
-    buckets idle out (bounded state, observed via stateOperators)."""
-    base = "we collect and share your personal data with trusted partners"
-    other = "completely different text about cookies and beacons here"
-    d = tmp_path / "lsh-ttl-short"
-    _write_doc_files(spark, d, [
-        [("1", base), ("2", base + " today")],   # within-batch pair (1,2)
-        [("3", other)],                          # unrelated batch; bucket
-                                                 # of 1/2 idles past TTL
-        [("4", base + " today")],                # near-dup of 1/2, too late
-    ])
-    stream = jobs.lsh_candidates_stream(
-        jobs.read_documents_stream(spark, str(d), max_files=1),
-        ttl="1 millisecond",
-    )
-    q = (
-        stream.writeStream.format("memory").queryName("lsh_ttl_short")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-
-    def drained(q):
-        lp = q.lastProgress
-        if not lp or not lp["stateOperators"]:
-            return False
-        # all 3 files consumed and every bucket evicted
-        return lp["batchId"] >= 3 and lp["stateOperators"][0]["numRowsTotal"] == 0
-
-    _poll_then_stop(q, drained)
-    got = {(r.a, r.b) for r in spark.table("lsh_ttl_short").collect()}
-    assert (1, 2) in got                      # same-batch pair: unaffected
-    assert (1, 4) not in got and (2, 4) not in got  # evicted before 4 arrived
