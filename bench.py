@@ -31,15 +31,10 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # joins+agg, window — one per family (full list in queries.py)
 HEADLINE = [
     "rule_hits",
-    "fingerprints",
-    "token_counts",
     "verify_scores",
     "english_gate",
     "exact_dedup",
-    "pii_scrub",
     "sentence_pipeline",
-    "exact_substring_dedup",
-    "lang_rollup",
     "events_neighbor_context",
     "frontier_crawl",
 ]

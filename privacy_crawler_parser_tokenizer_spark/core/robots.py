@@ -56,7 +56,9 @@ def parse_robots(content: str, user_agent: str = "*") -> RobotsPolicy:
     groups: dict[str, list[tuple[bool, str]]] = {}
     current_agents: list[str] = []
     last_was_agent = False
-    for raw in (content or "").splitlines():
+    # a leading UTF-8 BOM would turn the first key into "\ufeffuser-agent"
+    # and drop its group, reading the file as allow-all
+    for raw in (content or "").removeprefix("\ufeff").splitlines():
         line = raw.split("#", 1)[0].strip()
         if not line or ":" not in line:
             continue

@@ -165,30 +165,3 @@ def canonicalize_url_col(url: Column) -> Column:
     return F.when(scheme == "", no_frag).otherwise(
         F.when(sorted_query != "", F.concat(base, F.lit("?"), sorted_query)).otherwise(base)
     )
-
-
-# ---------------------------------------------------------------------------
-# document fingerprints and word k-grams
-# ---------------------------------------------------------------------------
-
-
-def fingerprint_col(text: Column) -> Column:
-    """Deterministic document fingerprint: md5 of the
-    lowercase/whitespace-collapsed text (content-defined identity for
-    exact dedup across engines)."""
-    normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.md5(normalized)
-
-
-def shingle_slots_of_words(w: Column, k: int) -> tuple[Column, Column]:
-    """The k-gram construction over a tokenized word array: (word
-    count, zipped struct array of k shifted word slices).  Callers
-    materialize the words as a projected attribute BELOW a Generate
-    (the english_gate lesson: an inline text expression in the
-    generator re-evaluates the split per slice reference; an attribute
-    is computed once per doc).  Built by zipping k shifted slices — a
-    sequence+element_at lambda is ~16x slower at sf0.1: per-element
-    computed-index lookups defeat codegen."""
-    n = F.size(w)
-    m = n - F.lit(k - 1)
-    return n, F.arrays_zip(*[F.slice(w, i + 1, m) for i in range(k)])

@@ -9,13 +9,12 @@ HUGEINT otherwise).
 
 Coverage maps to SURVEY.md §2: sentence rules (§2.3), dedupe/window/
 agg/sample (§2.2, §2.4), URL completion+canonicalization (§2.2), the
-full extraction pipeline with a closed-form oracle (§2.3), plus
-exact-substring dedup, token counts and document fingerprints.
+full extraction pipeline with a closed-form oracle (§2.3) and the
+frontier crawl.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -24,17 +23,13 @@ from pyspark.sql import functions as F
 from .functions.text import (
     canonicalize_url_col,
     complete_link_col,
-    fingerprint_col,
     rule_hits_col,
     word_count_col,
 )
+from .sources.tables import documents_as_html, load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def query(name: str, sql: str | None = None):
@@ -83,7 +78,7 @@ _WORDS_SQL = """
 def q_rule_hits(spark, sf_dir):
     """Quality rules over each document text (reference:
     src/statistics/sentences.py:81-111), fully native expressions."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", F.explode(rule_hits_col(F.col("text"))).alias("rule"))
 
 
@@ -96,7 +91,7 @@ def q_rule_hits(spark, sf_dir):
 )
 def q_word_counts(spark, sf_dir):
     """reference: src/parser-tokenizer.py:225 word counting."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", word_count_col(F.col("text")).cast("long").alias("n_words")
     )
@@ -125,7 +120,7 @@ def q_exact_dedup(spark, sf_dir):
     SENTINEL would collide with a document whose text literally equals
     the sentinel, diverging from the oracle's PARTITION BY text (which
     keeps NULLs as their own partition, distinct from every string)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         F.col("text").isNull().alias("_null"),
@@ -155,7 +150,7 @@ def q_length_quantiles(spark, sf_dir):
     """Boxplot statistics family (reference: src/statistics/lists.py:53-76,
     verify.py:282-287): exact linear-interpolated quantiles of word
     counts per language (Spark percentile == DuckDB quantile_cont)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n = word_count_col(F.col("text"))
     base = docs.select("lang", n.alias("n"))
     return base.groupBy("lang").agg(
@@ -173,29 +168,8 @@ def q_length_quantiles(spark, sf_dir):
 )
 def q_lang_freq(spark, sf_dir):
     """Frequency count (reference: src/statistics/domains.py:13-20)."""
-    return _t(spark, sf_dir, "documents").groupBy("lang").agg(
+    return load_table(spark, sf_dir, "documents").groupBy("lang").agg(
         F.count("*").alias("cnt")
-    )
-
-
-@query(
-    "lang_rollup",
-    """
-    SELECT coalesce(lang, 'ALL') AS lang_group,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents GROUP BY ROLLUP(lang)
-    """,
-)
-def q_lang_rollup(spark, sf_dir):
-    """Hierarchical aggregation (ROLLUP): per-language + grand-total
-    rows in one pass (grouping-sets family coverage)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.rollup("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-    ).select(
-        F.coalesce("lang", F.lit("ALL")).alias("lang_group"), "n_docs", "total_chars"
     )
 
 
@@ -212,53 +186,12 @@ _CHAR_BINS = "[0, 100, 200, 400, 800, 1600, 3200, 6400]"
 )
 def q_char_histogram(spark, sf_dir):
     """Fixed-edge histogram (reference: src/statistics/sentences.py:207)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = F.expr(
         f"size(filter(array{tuple(int(x) for x in _CHAR_BINS[1:-1].split(', '))}, e -> e <= n_chars))"
     )
     return docs.select(bucket.cast("long").alias("bucket")).groupBy("bucket").agg(
         F.count("*").alias("n_docs")
-    )
-
-
-@query(
-    "fingerprints",
-    """
-    SELECT doc_id,
-           md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-    FROM documents
-    """,
-)
-def q_fingerprints(spark, sf_dir):
-    """Deterministic document fingerprint (md5 of normalized text)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", fingerprint_col(F.col("text")).alias("fp"))
-
-
-# ---------------------------------------------------------------------------
-# token counting (documents)
-# ---------------------------------------------------------------------------
-
-_TOKEN_RE = r"\p{L}+|\p{N}|[^\s\p{L}\p{N}]"
-
-
-@query(
-    "token_counts",
-    f"""
-    SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '{_TOKEN_RE}')) AS BIGINT) AS n_tokens
-    FROM documents
-    """,
-)
-def q_token_counts(spark, sf_dir):
-    """BPE-ish token counting: letters runs, single digits, punctuation
-    singles (the GPT-2 pre-tokenizer shape), fully native regex."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all("text", F.lit(_TOKEN_RE), 0))
-        .cast("long")
-        .alias("n_tokens"),
     )
 
 
@@ -329,7 +262,7 @@ def q_verify_scores(spark, sf_dir):
     kernel, functions.udfs.make_process_batch_fn) drives the frontier;
     this is the set-oriented re-scoring path
     (src/verification/verify.py:216-290)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = _doc_tokens(docs)
     gt = (
         tok.filter((F.col("doc_id") < 3) & F.col("t").isNotNull())
@@ -418,7 +351,7 @@ def q_english_gate(spark, sf_dir):
     relational ops: dictionary = distinct words of docs 0-49 (broadcast
     semi-join membership), >=50% word hits and >=85% letter/whitespace
     chars."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     clean = F.regexp_replace(F.upper("text"), "[^A-Z \t\n]+", "")
     ws = F.filter(F.split(clean, r"\s+"), lambda x: x != "")
     cand = docs.select("doc_id", "text", ws.alias("ws"))
@@ -522,7 +455,7 @@ def q_english_gate(spark, sf_dir):
 def q_url_canonicalize(spark, sf_dir):
     """North-rule URL canonicalization (scheme/host lowercase, fragment
     strip, query sort, default-port drop) as pure native expressions."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("HTTP://Site"), (F.col("doc_id") % 7).cast("string"),
         F.lit(".COM:80//p"), (F.col("doc_id") % 3).cast("string"),
@@ -563,7 +496,7 @@ def q_url_canonicalize(spark, sf_dir):
 )
 def q_complete_links(spark, sf_dir):
     """Reference link completion quirks (crawler.py:123-136), native."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
         F.concat(
@@ -587,155 +520,6 @@ def q_complete_links(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# exact-substring dedup (documents)
-# ---------------------------------------------------------------------------
-
-_ESUB_K = 15  # duplicated-run window, in words (Lee et al. use 50 BPE
-# tokens on web-scale corpora; 15 words ~ the same share of this
-# testdata's ~54-word documents)
-
-
-def _esub_sql() -> str:
-    k = _ESUB_K
-    return f"""
-    WITH t AS (
-      SELECT doc_id,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS words
-      FROM documents),
-    g AS (
-      SELECT doc_id, words, unnest(range(1, len(words) - {k - 2})) AS i
-      FROM t WHERE len(words) >= {k}),
-    g2 AS (
-      SELECT doc_id, i - 1 AS pos,
-             array_to_string(words[i:i+{k - 1}], ' ') AS gram
-      FROM g),
-    r AS (
-      SELECT doc_id, pos,
-             row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-      FROM g2),
-    d AS (SELECT doc_id, pos FROM r WHERE rn > 1),
-    m AS (
-      SELECT doc_id, pos,
-             max(pos + {k - 1}) OVER (PARTITION BY doc_id ORDER BY pos
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-      FROM d),
-    isl AS (
-      SELECT doc_id, pos,
-             sum(CASE WHEN pmax IS NULL OR pos > pmax + 1 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY doc_id ORDER BY pos) AS island
-      FROM m),
-    sp AS (
-      SELECT doc_id, island, min(pos) AS s, max(pos + {k - 1}) AS e
-      FROM isl GROUP BY 1, 2),
-    pd AS (
-      SELECT doc_id, SUM(e - s + 1) AS dup_tokens, COUNT(*) AS n_spans
-      FROM sp GROUP BY 1),
-    tok AS (
-      SELECT doc_id, unnest(words) AS w, generate_subscripts(words, 1) - 1 AS i
-      FROM t),
-    kept AS (
-      SELECT tk.doc_id, tk.w, tk.i
-      FROM tok tk LEFT JOIN sp ON tk.doc_id = sp.doc_id
-                              AND tk.i BETWEEN sp.s AND sp.e
-      WHERE sp.doc_id IS NULL),
-    cut AS (
-      SELECT doc_id, string_agg(w, ' ' ORDER BY i) AS clean_text
-      FROM kept GROUP BY doc_id)
-    SELECT t.doc_id,
-           CAST(len(t.words) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(pd.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-           CAST(COALESCE(pd.n_spans, 0) AS BIGINT) AS n_spans,
-           CASE WHEN t.words IS NULL THEN NULL
-                ELSE COALESCE(cut.clean_text, '') END AS clean_text
-    FROM t LEFT JOIN pd USING (doc_id) LEFT JOIN cut USING (doc_id)
-    """
-
-
-@query("exact_substring_dedup", _esub_sql())
-def q_exact_substring_dedup(spark, sf_dir):
-    """Exact-substring dedup report (Lee et al. 2022, "Deduplicating
-    Training Data Makes Language Models Better"): any word run of
-    length >= K that also occurs earlier in the corpus — earlier
-    (doc_id, pos), first occurrence wins — is a duplicated span; per
-    doc, overlapping/adjacent duplicated windows merge into maximal
-    spans (the tokens an ExactSubstr pass would cut).  Output per doc:
-    total tokens, duplicated tokens, merged span count — all exact
-    int64, hash-checked against the window/gaps-and-islands oracle.
-
-    Spark-first shape for 100 TB: k-gram identities are int64
-    xxhash64 over the ``shingle_slots_of_words`` zipped word slots (never
-    materializes gram strings; ~10x less shuffle than ~100-byte grams;
-    2^-64/pair collision odds noted), the global first-occurrence winner is ONE
-    partial-aggregable groupBy (min(struct(doc_id, pos)) — map-side
-    combine collapses viral boilerplate runs before the exchange, and
-    the probe join reuses the aggregation's hash partitioning), and
-    the span merge is a per-doc window (bounded by document length,
-    never corpus-wide).  No suffix array: sorted-suffix adjacency
-    needs a global order; the k-gram winner join finds the same
-    >=K-word duplicated runs with shuffle-local machinery.
-
-    The pipeline lives in operators/scrub.py — this entry runs the
-    full CUT transform (exact_substring_cut), so both the report
-    scalars and the cleaned text are oracle-gated (the cut rejoins
-    survivors with single spaces on lowercased tokens, NULL text stays
-    NULL; the oracle rebuilds it with an exploded anti-join +
-    position-ordered string_agg)."""
-    from .operators.scrub import exact_substring_cut
-
-    docs = _t(spark, sf_dir, "documents")
-    return exact_substring_cut(docs, k=_ESUB_K).select(
-        "doc_id", "n_tokens", "dup_tokens", "n_spans", "clean_text"
-    )
-
-
-def _pii_sql() -> str:
-    """PII redaction + per-family counts as one DuckDB projection.
-
-    Counts are taken on the progressively redacted text (same order as
-    the Spark side) so families never double-count each other's spans;
-    the patterns are RE2-compatible by construction (operators/scrub.py)
-    so both engines run the identical regex source."""
-    from .operators.scrub import PII_PATTERNS
-
-    expr = "text"
-    counts = []
-    for label, pattern, repl in PII_PATTERNS:
-        # escape for the single-quoted SQL literal: a future pattern
-        # containing a quote must not break (or silently diverge) the
-        # oracle — test_scrub.py asserts engine parity per pattern
-        q_pat = pattern.replace("'", "''")
-        q_repl = repl.replace("'", "''")
-        counts.append(
-            f"CAST(len(regexp_extract_all({expr}, '{q_pat}')) AS BIGINT) AS n_{label}"
-        )
-        expr = f"regexp_replace({expr}, '{q_pat}', '{q_repl}', 'g')"
-    return (
-        f"SELECT doc_id, {expr} AS redacted, {', '.join(counts)} FROM documents"
-    )
-
-
-@query("pii_scrub", _pii_sql())
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction over the corpus (operators/scrub.py): chained
-    native regexp_replace — map-only, shuffle-free, whole-stage codegen
-    (plan-tested in test_scrub.py).  The standard scrubbing stage a
-    100-TB training pipeline runs before publishing text."""
-    from .operators.scrub import PII_PATTERNS, pii_scrub
-
-    docs = _t(spark, sf_dir, "documents")
-    out = pii_scrub(docs)
-    return out.select(
-        "doc_id",
-        "redacted",
-        *[
-            F.col("pii")[label].cast("long").alias(f"n_{label}")
-            for label, _, _ in PII_PATTERNS
-        ],
-    )
-
-
-# ---------------------------------------------------------------------------
 # events, orders and samples (reference statistics and crawler analogs)
 # ---------------------------------------------------------------------------
 
@@ -752,7 +536,7 @@ def q_pii_scrub(spark, sf_dir):
 def q_events_neighbor_context(spark, sf_dir):
     """lag/lead neighbor context — the Spark-native re-expression of the
     reference's prec_by/proc_by (src/parser-tokenizer.py:210-217)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return e.select(
         "event_id",
@@ -793,7 +577,7 @@ def q_events_running_avg(spark, sf_dir):
     decimal(20,6) cast (exact-sum-then-round, engine-agnostic), the running
     sum/count stay exact integers, and half-away-from-zero rounding is
     integer division — bit-identical on any engine."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -825,7 +609,7 @@ def q_events_running_avg(spark, sf_dir):
 )
 def q_value_borderline(spark, sf_dir):
     """Borderline band filter (src/verification/verify.py:259-266)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.filter(F.abs(F.col("value") - 100.0) < 5.0).select("event_id", "value")
 
 
@@ -843,7 +627,7 @@ def q_politeness_window(spark, sf_dir):
     oracle-checked operator (north-rule [NEW]; live use in
     plans/frontier.py step 2): grant the first B requests per host in
     deterministic order, defer the rest."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy(F.col("user_id") % 5).orderBy("ts", "event_id")
     return e.select(
         "event_id", (F.row_number().over(w) <= 3).alias("granted")
@@ -865,7 +649,7 @@ def q_order_outcomes(spark, sf_dir):
     unpartitioned window sum over the few grouped rows), not via a
     driver-side ``count()`` action in the query-build path — the
     oracle's scalar subquery equals the sum of the group counts."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     g = o.groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.count("*").alias("cnt")
     )
@@ -892,7 +676,7 @@ def q_list_stats(spark, sf_dir):
     """Per-policy list statistics (reference: src/statistics/lists.py:24-51
     — list count + mean items per list), newline-delimited lines as the
     list rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     items = F.when(F.trim("line") == "", F.lit(0)).otherwise(
         F.size(F.split(F.trim("line"), r"\s+"))
     )
@@ -924,7 +708,7 @@ def q_paragraph_sample(spark, sf_dir):
     src/statistics/paragraph_sampler.py:50-62) — hash-ordered pick
     replaces random.choice so the sample is deterministic and
     engine-portable."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     lines = docs.select(
         "doc_id", F.explode(F.split("text", "\n")).alias("line")
     ).filter(F.trim("line") != "")
@@ -961,7 +745,7 @@ def q_verify_borderline(spark, sf_dir):
 def q_deterministic_sample(spark, sf_dir):
     """Deterministic 1-in-10 sample (random.sample analog with a
     reproducible rule; src/statistics/sentences.py:265-272)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.filter(F.col("doc_id") % 10 == 0).select("doc_id", "n_chars")
 
 
@@ -982,7 +766,7 @@ def q_frontier_crawl(spark, sf_dir):
     from .plans.frontier import FrontierConfig, FrontierCrawler, PythonFetcher
     from .sources.synth import gen_web, make_dictionary, make_ground_truth
 
-    n_docs = _t(spark, sf_dir, "documents").count()
+    n_docs = load_table(spark, sf_dir, "documents").count()
     n_domains = max(20, min(n_docs // 5, 2000))
     pages, seeds, robots = gen_web(n_domains=n_domains, seed=42)
     # broadcast-fetch shape: the synthetic web ships to executors ONCE
@@ -1037,12 +821,11 @@ def q_sentence_pipeline(spark, sf_dir):
     first stage), folded in round 3 so the registry fits the driver's
     50-entry board (VERDICT r02 "What's wrong" #1)."""
     from .pipeline import extract_documents, sentences_table, spans_table
-    from .sources.tables import documents_as_html
 
     # the uncheckpointed dataflow, so the plan shows the documents scan
     # and the one extraction (parse_tokenize's sentences are a
     # checkpointed RDD scan)
-    docs = documents_as_html(_t(spark, sf_dir, "documents"))
+    docs = documents_as_html(load_table(spark, sf_dir, "documents"))
     s = sentences_table(spans_table(extract_documents(docs)))
     return s.select(
         F.col("doc_id").cast("long").alias("doc_id"),

@@ -13,17 +13,14 @@ import numpy as np
 import pytest
 
 from privacy_crawler_parser_tokenizer_spark.core import (
-    apng, avi, bitmaps, gif, jpeg, png, wav, webp,
+    apng, avi, gif, jpeg, png, webp,
 )
 
 DECODERS = [
     (png.decode_png, png.PngError),
-    (bitmaps.decode_bmp, bitmaps.BitmapError),
-    (bitmaps.decode_pnm, bitmaps.BitmapError),
     (gif.decode_gif, gif.GifError),
     (jpeg.decode_jpeg, jpeg.JpegError),
     (jpeg.jpeg_meta, jpeg.JpegError),
-    (wav.decode_wav, wav.WavError),
     (avi.decode_avi, avi.AviError),
     (webp.decode_webp, webp.WebpError),
     (webp.webp_frames, webp.WebpError),

@@ -14,6 +14,7 @@ from privacy_crawler_parser_tokenizer_spark.core import (
     extract_spans,
     get_english_count,
     is_english,
+    parse_robots,
     remove_nonletters,
     render_spans_html,
     robots_allows,
@@ -228,6 +229,15 @@ class TestRobots:
         assert not robots_allows(txt, "/a/x")
         assert robots_allows(txt, "/a/b/c")
         assert robots_allows(txt, "/other")
+
+    def test_utf8_bom_is_ignored(self):
+        # a file saved with a leading BOM must keep its first group
+        txt = "User-agent: *\nDisallow: /private\n"
+        for content in (txt, "\ufeff" + txt):
+            policy = parse_robots(content)
+            assert policy.rules == [(False, "/private")]
+            assert not policy.allows("/private/x")
+            assert policy.allows("/public")
 
 
 class TestSentencizeBlockBreaks:

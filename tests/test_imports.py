@@ -98,14 +98,14 @@ def test_bench_headline_names_are_queries():
 
 
 def _table_literals():
-    """Table names passed as string literals to ``_t(spark, sf_dir, ...)``
-    in queries.py, read with ``ast``."""
+    """Table names passed as string literals to
+    ``load_table(spark, sf_dir, ...)`` in queries.py, read with ``ast``."""
     tree = ast.parse((ROOT / PKG / "queries.py").read_text())
     return {
         node.args[2].value
         for node in ast.walk(tree)
         if isinstance(node, ast.Call)
-        and getattr(node.func, "id", None) == "_t"
+        and getattr(node.func, "id", None) == "load_table"
         and len(node.args) == 3
         and isinstance(node.args[2], ast.Constant)
     }

@@ -66,7 +66,7 @@ def test_shuffle_budgets(spark):
     # scans + narrow ops must not shuffle at all
     assert n_exchanges(plan(spark, "rule_hits")) == 0
     assert n_exchanges(plan(spark, "word_counts")) == 0
-    assert n_exchanges(plan(spark, "token_counts")) == 0
+    assert n_exchanges(plan(spark, "url_canonicalize")) == 0
     # one groupBy = one shuffle (plus AQE read)
     assert n_exchanges(plan(spark, "lang_freq")) <= 2
     # the whole extract->context->tokenize->rules pipeline is map-only:
