@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 
 from privacy_crawler_parser_tokenizer_spark.core import (
-    apng, avi, gif, jpeg, png, webp,
+    apng, avi, gif, jpeg, png, wav, webp,
 )
 
 DECODERS = [
@@ -21,6 +21,7 @@ DECODERS = [
     (gif.decode_gif, gif.GifError),
     (jpeg.decode_jpeg, jpeg.JpegError),
     (jpeg.jpeg_meta, jpeg.JpegError),
+    (wav.decode_wav, wav.WavError),
     (avi.decode_avi, avi.AviError),
     (webp.decode_webp, webp.WebpError),
     (webp.webp_frames, webp.WebpError),
